@@ -6,9 +6,11 @@ order-insensitive value-hash gate.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import decimal
 import math
+import threading
 
 import pandas as pd
 import pytest
@@ -237,15 +239,22 @@ def _parity_check(key, spark, oracle):
 # failure messages and counts byte-compatible with the serial run.
 #
 # Thread-safety notes: contract builders only touch the shared session
-# via idempotent per-session caches (table/view registration), and the
-# conf mutate/restore windows in the streaming harness are serialized
-# by sources.session_conf_lock. Results are partition-layout-
+# via idempotent per-session caches (table/view registration), and a
+# streaming key's per-query conf is set only around its query's start()
+# under sources.session_conf_lock. The pool still runs the keys of
+# contract.streaming_batch one at a time (_STREAMING_KEYS_LOCK), the
+# schedule they had while their runs held that lock: each streaming run
+# holds state stores and Python workers for its whole run, and on a
+# 4-CPU, 15 GB host at the default 16g heap this fixture already takes
+# the JVM past 12 GB RSS; with streaming runs overlapping, the JVM was
+# OOM-killed mid-fixture. Results are partition-layout-
 # independent by contract (the driver runs its own session at default
 # partitions — test_driver_env pins that), so concurrent planning
 # can't change any value. SPARK_GRAFT_PARITY_THREADS=1 restores the
 # serial inline path.
 # ---------------------------------------------------------------------
 _PARITY_RESULTS: dict = {}
+_STREAMING_KEYS_LOCK = threading.Lock()
 
 
 @pytest.fixture(scope="session")
@@ -265,9 +274,11 @@ def parity_results(request, spark, oracle):
         keys = [k for k in ORACLE_KEYS if k in selected]
 
         def one(key):
+            streaming = contract.QUERIES[key].__module__.endswith(".streaming_batch")
             cur = oracle.cursor()
             try:
-                _parity_check(key, spark, cur)
+                with _STREAMING_KEYS_LOCK if streaming else contextlib.nullcontext():
+                    _parity_check(key, spark, cur)
                 return key, None
             except (Exception, pytest.fail.Exception):
                 return key, traceback.format_exc(limit=8)

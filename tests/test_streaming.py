@@ -5,15 +5,27 @@ oracle-checkable, so verified here against batch equivalents."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from tests.conftest import SF_DIR_SMALL
 from trembita_spark.io import load_table
 from trembita_spark.operators.fsm import sessionize
-from trembita_spark.streaming.sources import events_stream, run_to_completion
+from trembita_spark.streaming.sources import (
+    TWS_CONF,
+    events_stream,
+    run_to_completion,
+    start_query,
+)
 from trembita_spark.streaming.stateful import sessionize_stream
 from trembita_spark.streaming.windows import tumbling_window_agg
+
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = TWS_CONF[_PROVIDER_KEY]
 
 
 def test_stream_tumbling_equals_batch(spark):
@@ -78,23 +90,12 @@ def test_stream_stateful_sessionize_rocksdb_provider(spark):
     state-store provider — the credible 100 TB state backend (session
     state spills to local disk instead of executor heap). Same
     subset-vs-batch contract as the default-provider test above."""
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_completion(
-            sessionize_stream(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
-            "t_stream_sessions_rocksdb",
-            output_mode="append",
-        ).collect()
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
+    out = run_to_completion(
+        sessionize_stream(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
+        "t_stream_sessions_rocksdb",
+        output_mode="append",
+        conf={_PROVIDER_KEY: _ROCKSDB},
+    ).collect()
     batch = (
         sessionize(load_table(spark, SF_DIR_SMALL, "events"), gap_minutes=30)
         .groupBy("user_id", "session_id")
@@ -139,26 +140,12 @@ def test_stream_tws_sessionize_matches_batch(spark):
     pytest.importorskip("google.protobuf.descriptor")
     from trembita_spark.streaming.stateful import sessionize_tws
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(prov_key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_completion(
-            sessionize_tws(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
-            "t_stream_tws_sessions",
-            output_mode="append",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
+    out = run_to_completion(
+        sessionize_tws(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
+        "t_stream_tws_sessions",
+        output_mode="append",
+        conf=TWS_CONF,
+    ).collect()
     batch = (
         sessionize(load_table(spark, SF_DIR_SMALL, "events"), gap_minutes=30)
         .groupBy("user_id", "session_id")
@@ -496,7 +483,6 @@ def test_stateful_restart_recovers_state(spark, tmp_path, provider):
     credible 100 TB state backend (state spills to local disk instead
     of executor heap), so the same contract is pinned on both
     providers, not just the default HDFS-backed one."""
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
@@ -510,7 +496,7 @@ def test_stateful_restart_recovers_state(spark, tmp_path, provider):
     schema = spark.read.parquet(src).schema
 
     def run_once():
-        q = (
+        writer = (
             spark.readStream.schema(schema)
             .parquet(src)
             .dropDuplicates(["event_id"])
@@ -519,36 +505,28 @@ def test_stateful_restart_recovers_state(spark, tmp_path, provider):
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
+        q = start_query(spark, writer, conf={_PROVIDER_KEY: provider})
         try:
             q.awaitTermination(120)
         finally:
             if q.isActive:
                 q.stop()
 
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, provider)
-    try:
-        run_once()
-        n_first = spark.read.parquet(sink).count()
-        assert n_first == part1.count()
+    run_once()
+    n_first = spark.read.parquet(sink).count()
+    assert n_first == part1.count()
 
-        part2.write.mode("append").parquet(src)
-        run_once()
+    part2.write.mode("append").parquet(src)
+    run_once()
 
-        got = spark.read.parquet(sink)
-        assert got.count() == ev.where(F.col("event_id") < 750).count(), (
-            "restart must emit exactly the ids not already in recovered state"
-        )
-        assert got.select("event_id").distinct().count() == got.count(), (
-            "an id re-sent after the restart leaked through: state was lost"
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
+    got = spark.read.parquet(sink)
+    assert got.count() == ev.where(F.col("event_id") < 750).count(), (
+        "restart must emit exactly the ids not already in recovered state"
+    )
+    assert got.select("event_id").distinct().count() == got.count(), (
+        "an id re-sent after the restart leaked through: state was lost"
+    )
 
 
 def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
@@ -730,32 +708,18 @@ def test_tws_processing_time_timer_flushes_idle_keys(spark):
     batch2 = [(3, t0 + dt.timedelta(seconds=2))]
     stream = _staged_stream(spark, [batch1, batch2], schema)
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(prov_key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        # idle_stop=2: with 2 staged files the availableNow flush batch
-        # is batchId 2 — the query itself never terminates (batch-2
-        # users' pending processing-time timers keep it active), so the
-        # plain await burned its full 300 s timeout for a test whose
-        # content is fixed once the flush batch commits.
-        out = run_to_completion(
-            idle_flush_tws(stream, idle_ms=1),
-            "t_tws_proc_timer",
-            output_mode="append",
-            idle_stop=2,
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
+    # idle_stop=2: with 2 staged files the availableNow flush batch is
+    # batchId 2 — the query itself never terminates (batch-2 users'
+    # pending processing-time timers keep it active), so the plain await
+    # burned its full 300 s timeout for a test whose content is fixed
+    # once the flush batch commits.
+    out = run_to_completion(
+        idle_flush_tws(stream, idle_ms=1),
+        "t_tws_proc_timer",
+        output_mode="append",
+        conf=TWS_CONF,
+        idle_stop=2,
+    ).collect()
     flushed = {(r.user_id, r.n_events) for r in out}
     # Batch-1 users MUST be flushed (batch 2's processing time is past
     # their timers). User 3's flush depends on whether availableNow
@@ -842,3 +806,119 @@ def test_stream_crash_midrun_recovers_exactly_once(spark, tmp_path):
     assert got.select("event_id").distinct().count() == got.count(), (
         "the re-delivered batch must not duplicate through the merge"
     )
+
+
+class _StatePartitions(StreamingQueryListener):
+    """The state partition counts each named query reports in its
+    progress events. Progress arrives asynchronously on the listener
+    bus; ``of`` waits for the query's termination event, which follows
+    its last progress event."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._names: dict[str, str] = {}  # run id -> query name
+        self._parts: dict[str, set[int]] = {}  # query name -> counts
+        self._ended: set[str] = set()
+
+    def onQueryStarted(self, event):
+        with self._lock:
+            self._names[str(event.runId)] = event.name
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        with self._lock:
+            self._parts.setdefault(p.name, set()).update(
+                o.numShufflePartitions for o in p.stateOperators
+            )
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self._lock:
+            self._ended.add(self._names.get(str(event.runId)))
+
+    def of(self, name: str, timeout_s: float = 30.0) -> set[int]:
+        deadline = time.monotonic() + timeout_s
+        while time.monotonic() < deadline:
+            with self._lock:
+                if name in self._ended:
+                    return set(self._parts.get(name, ()))
+            time.sleep(0.05)
+        raise AssertionError(f"{name}: no termination event")
+
+
+@pytest.fixture
+def partitions_seen(spark):
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    yield listener
+    spark.streams.removeListener(listener)
+
+
+def _shuffle_partitions(spark) -> str:
+    return spark.conf.get("spark.sql.shuffle.partitions")
+
+
+def test_state_partitions_are_session_parallelism(spark, partitions_seen):
+    # A session whose shuffle setting is not its core count, like a bare
+    # builder's 200: state partitions still follow the parallelism, and
+    # the session setting is left as it was.
+    before = _shuffle_partitions(spark)
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try:
+        run_to_completion(
+            tumbling_window_agg(events_stream(spark, SF_DIR_SMALL)),
+            "t_parts_session",
+            output_mode="complete",
+        ).collect()
+        assert _shuffle_partitions(spark) == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert partitions_seen.of("t_parts_session") == {
+        spark.sparkContext.defaultParallelism
+    }
+
+
+def test_concurrent_query_confs_stay_separate(spark, partitions_seen):
+    # More threads than cores, each starting its query with its own
+    # partition count; a set/restore window that interleaved with
+    # another would hand a query the wrong count or leave one in the
+    # session.
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    before = _shuffle_partitions(spark)
+    want = {f"t_parts_thread_{p}": p for p in (2, 3, 5, 6, 7, 9)}
+
+    def run(name):
+        return run_to_completion(
+            tumbling_window_agg(events_stream(spark, SF_DIR_SMALL)),
+            name,
+            output_mode="complete",
+            conf={"spark.sql.shuffle.partitions": str(want[name])},
+        ).count()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(want)) as pool:
+            counts = list(pool.map(run, want, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(set(counts)) == 1 and counts[0] > 0
+    for name, parts in want.items():
+        assert partitions_seen.of(name) == {parts}, name
+    assert _shuffle_partitions(spark) == before
+
+
+def test_sink_view_dropped_and_result_readable(spark):
+    name = "t_sink_view_dropped"
+    out = run_to_completion(
+        tumbling_window_agg(events_stream(spark, SF_DIR_SMALL)),
+        name,
+        output_mode="complete",
+    )
+    assert name not in {t.name for t in spark.catalog.listTables()}
+    batch_out = tumbling_window_agg(load_table(spark, SF_DIR_SMALL, "events"))
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch_out.collect()))

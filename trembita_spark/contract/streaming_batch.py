@@ -24,10 +24,10 @@ from trembita_spark.io import local_rows
 from trembita_spark.operators.fsm import sessionize, sessionize_fsm
 from trembita_spark.operators import timeseries as TS
 from trembita_spark.streaming.sources import (
+    TWS_CONF,
     events_stream,
-    rocksdb_state_provider,
     run_to_completion,
-    tws_state_partitions,
+    start_query,
 )
 from trembita_spark.streaming.windows import (
     session_window_agg,
@@ -240,17 +240,10 @@ def q_stream_fsm_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stream_fsm_tws_{next(_STREAM_SEQ)}"
     if tws_available(spark):
         try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                out = sessionize_tws(
-                    events_stream(spark, sf_dir), gap_minutes=30
-                )
-                return run_to_completion(
-                    out,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
+            out = sessionize_tws(events_stream(spark, sf_dir), gap_minutes=30)
+            return run_to_completion(
+                out, name, output_mode="append", conf=TWS_CONF
+            )
         except Exception:
             pass  # env-shaped failure (protobuf-less worker): fall back
     out = sessionize_stream(events_stream(spark, sf_dir), gap_minutes=30)
@@ -554,13 +547,13 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type") == "view")
         .select("event_id", "user_id", "ts", "value")
     )
-    q = (
+    q = start_query(
+        spark,
         ev.writeStream.format("parquet")
         .option("path", f"{d}/out")
         .option("checkpointLocation", f"{d}/ckpt")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     try:
         q.awaitTermination(300)
@@ -1194,10 +1187,9 @@ def q_stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
+    q = start_query(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True),
     )
     try:
         q.awaitTermination(300)
@@ -3109,15 +3101,10 @@ def q_stream_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stream_tws_dedup_{next(_STREAM_SEQ)}"
     if tws_available(spark):
         try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                out = first_occurrence_tws(events_stream(spark, sf_dir))
-                return run_to_completion(
-                    out,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
+            out = first_occurrence_tws(events_stream(spark, sf_dir))
+            return run_to_completion(
+                out, name, output_mode="append", conf=TWS_CONF
+            )
         except Exception:
             pass  # env-shaped failure: fall through to the batch path
     ev = table(spark, sf_dir, "events")
@@ -3165,17 +3152,10 @@ def q_stream_tws_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"stream_tws_topk_{next(_STREAM_SEQ)}"
     if tws_available(spark):
         try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                out = running_topk_entries_tws(
-                    events_stream(spark, sf_dir), k=3
-                )
-                return run_to_completion(
-                    out,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
+            out = running_topk_entries_tws(events_stream(spark, sf_dir), k=3)
+            return run_to_completion(
+                out, name, output_mode="append", conf=TWS_CONF
+            )
         except Exception:
             pass  # env-shaped failure: fall through to the batch path
     ev = table(spark, sf_dir, "events")
@@ -4553,25 +4533,20 @@ def q_stream_tws_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = run_tmp("stream_tws_chained")
         schema = staged_dir(spark, [ev, sentinels], base)
         try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                firsts = first_occurrence_tws(
-                    staged_stream(spark, base, schema), event_time_col="first_ts"
-                )
-                agg = (
-                    firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
-                    .select(F.col("w.start").alias("wstart"), "n_first")
-                )
-                out = run_to_completion(
-                    agg,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
-                return out.where(
-                    F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS")
-                )
+            firsts = first_occurrence_tws(
+                staged_stream(spark, base, schema), event_time_col="first_ts"
+            )
+            agg = (
+                firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
+                .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
+                .select(F.col("w.start").alias("wstart"), "n_first")
+            )
+            out = run_to_completion(
+                agg, name, output_mode="append", conf=TWS_CONF
+            )
+            return out.where(
+                F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS")
+            )
         except Exception:
             pass  # env-shaped failure: fall through to the batch path
     from pyspark.sql.window import Window
@@ -4774,13 +4749,13 @@ def q_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "event_type", "value"
     )
     for _ in range(2):  # second start must be a no-op via the checkpoint
-        q = (
+        q = start_query(
+            spark,
             src.writeStream.outputMode("append")
             .format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         try:
             q.awaitTermination(300)
@@ -4835,11 +4810,11 @@ def q_stream_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.write.mode("append").parquet(target)
 
     src = events_stream(spark, sf_dir).select(*cols)
-    q = (
+    q = start_query(
+        spark,
         src.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     try:
         q.awaitTermination(300)

@@ -13,15 +13,16 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-# Guards mutate/run/restore windows over session-global SQL confs
-# (shuffle partitions in run_to_completion, the RocksDB state provider
-# at the TWS call sites). Sessions are JVM singletons shared by every
-# thread in the process; without the lock, concurrent set/restore pairs
-# interleave and a transient override can become the session's
-# permanent value. Reentrant so a caller can wrap run_to_completion
-# together with its own conf window.
-session_conf_lock = threading.RLock()
+# Serializes the set/start()/restore window in start_query.
+# Sessions are JVM singletons shared by every thread in the process, and
+# a streaming query clones the session's SQL conf inside start(): a
+# query started while another thread's per-query conf is set would
+# inherit it, and interleaved set/restore pairs could leave a transient
+# value as the session's permanent one. The window ends when start()
+# returns, so the lock is held for milliseconds, not for the run.
+session_conf_lock = threading.Lock()
 
 # (appId, sf_dir) → physical schema Spark infers for events.parquet.
 # Streams require an explicit schema; probing the batch reader once per
@@ -83,52 +84,51 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", _normalize_ts(schema["ts"].dataType))
 
 
-def rocksdb_state_provider(spark: SparkSession):
-    """Context manager: set the RocksDB state-store provider (required
-    by transformWithStateInPandas) for the duration of the block, then
-    restore the previous value — the whole window under
-    :data:`session_conf_lock` so concurrent threads can't interleave
-    set/restore pairs and leak the override into the session."""
-    import contextlib
+# Per-query SQL conf for a transformWithState query, passed as
+# ``run_to_completion(conf=TWS_CONF)``: TWS requires the RocksDB state
+# store. Its state partitions follow the session's parallelism, like
+# every other stateful operator's: at local[4], 8 partitions ran slower
+# than 4.
+TWS_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
 
-    @contextlib.contextmanager
-    def _cm():
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        with session_conf_lock:
-            try:
-                prev = spark.conf.get(prov_key)
-            except Exception:
-                prev = None
-            spark.conf.set(
-                prov_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            try:
-                yield
-            finally:
-                if prev is None:
-                    spark.conf.unset(prov_key)
+
+def start_query(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    conf: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """``writer.start()`` with ``conf`` applied to this query only.
+
+    Spark clones the session's SQL conf inside ``start()`` and pins the
+    state partition count and state-store provider in the query's
+    checkpoint, so ``conf`` is set on the session under
+    :data:`session_conf_lock` only around ``start()`` and restored as
+    soon as it returns. Every streaming start in the package goes through
+    here and takes the lock, so no query inherits another's ``conf``."""
+    conf = conf or {}
+    with session_conf_lock:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            return writer.start()
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
                 else:
-                    spark.conf.set(prov_key, prev)
-
-    return _cm()
-
-
-def tws_state_partitions(spark: SparkSession) -> int:
-    """Preferred state partition count for transformWithState queries:
-    per-key work is Python state-server round trips, which scale with
-    the number of concurrently running workers — so size to cores/2
-    rather than the classic stateful operators' fixed-cost-minimizing
-    default (see run_to_completion)."""
-    return max(8, spark.sparkContext.defaultParallelism // 2)
+                    spark.conf.set(k, v)
 
 
 def run_to_completion(
     df: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
+    conf: dict[str, str] | None = None,
     idle_stop: int | None = None,
 ):
     """Drive a streaming DataFrame over the (finite) local fixture to
@@ -136,33 +136,23 @@ def run_to_completion(
     DataFrame. This is the 'streaming proof' harness: same logical plan,
     real micro-batch execution.
 
-    State partitions: every stateful operator pays a FIXED per-partition
-    cost per micro-batch (state store load + commit + task scheduling)
-    regardless of rows — measured ~2.4 s per batch at 32 partitions even
-    for the 0-row availableNow flush batch. Stateful partition count is
-    a capacity knob sized to STATE volume, not to CPU count (it is
-    pinned at checkpoint creation in production, chosen per deployment);
-    the harness derives a default from the session's parallelism and
-    lets deployments override it. Partition count only changes hash
-    placement of keys, never results — the oracle parity suite covers
-    every streaming key.
+    State partitions: the query's ``spark.sql.shuffle.partitions`` is the
+    session's ``defaultParallelism`` (its core count locally), whatever
+    the session's own shuffle setting is: a bare builder's default is
+    200. Every stateful operator loads and commits one state store per
+    partition per micro-batch, even for the empty availableNow flush
+    batch, so partitions beyond the cores that run them only add fixed
+    cost. Partition count only changes hash placement of keys, never
+    results; the oracle parity suite covers every streaming key.
 
-    ``state_partitions`` lets a caller override the derived default:
-    transformWithState queries are bound by per-key Python state-server
-    round trips, which parallelize across the partitions' workers, so
-    the TWS keys ask for MORE partitions (cores/2 measured best:
-    fsm_tws 8.7s@8 → 6.7s@16) while the classic stateful operators
-    keep the low count their fixed per-partition store cost wants
-    (full_outer join 5.7s@8 → 7.7s@16). The env var still wins.
+    ``conf``: SQL conf for this query only, e.g. :data:`TWS_CONF`; it
+    overrides the partition count above if it sets one. See
+    :func:`start_query`.
 
-    The shuffle-partitions mutate/run/restore window is guarded by
-    :data:`session_conf_lock` — sessions are JVM singletons, so two
-    threads driving streaming keys concurrently (the parallel parity
-    fixture, a sharded gauntlet that ever shared a process) would
-    otherwise interleave set/restore and leak a transient value into
-    the session permanently. Callers that mutate OTHER session confs
-    around a run (e.g. the RocksDB provider for TWS keys) must hold
-    the same lock — it is reentrant.
+    The memory sink registers its rows as a temp view named
+    ``query_name``; the view is dropped before returning, so a
+    long-lived session does not keep every run's rows. The returned
+    frame holds the sink and stays readable.
 
     ``idle_stop``: a query with REGISTERED processing-time timers never
     self-terminates under availableNow (pending timers keep it active),
@@ -174,47 +164,39 @@ def run_to_completion(
     would have stopped in. Content-deterministic: nothing after the
     flush batch can emit (no new data arrives and the timers that could
     still fire are, by the caller's construction, content-irrelevant)."""
-    import os as _os
     import time as _time
 
     spark = df.sparkSession
-    parts = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if parts is None:
-        if state_partitions is not None:
-            parts = str(state_partitions)
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+    )
+    parts = str(spark.sparkContext.defaultParallelism)
+    q = start_query(
+        spark, writer, {"spark.sql.shuffle.partitions": parts, **(conf or {})}
+    )
+    try:
+        if idle_stop is not None:
+            deadline = _time.time() + 300
+            while q.isActive and _time.time() < deadline:
+                lp = q.lastProgress
+                if (
+                    lp is not None
+                    and lp["numInputRows"] == 0
+                    and lp["batchId"] >= idle_stop
+                ):
+                    break
+                _time.sleep(0.25)
         else:
-            parts = str(max(8, spark.sparkContext.defaultParallelism // 4))
-    with session_conf_lock:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            q = (
-                df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(query_name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if idle_stop is not None:
-                    deadline = _time.time() + 300
-                    while q.isActive and _time.time() < deadline:
-                        lp = q.lastProgress
-                        if (
-                            lp is not None
-                            and lp["numInputRows"] == 0
-                            and lp["batchId"] >= idle_stop
-                        ):
-                            break
-                        _time.sleep(0.25)
-                else:
-                    q.awaitTermination(300)
-            finally:
-                if q.isActive:
-                    q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return df.sparkSession.table(query_name)
+            q.awaitTermination(300)
+    finally:
+        if q.isActive:
+            q.stop()
+    out = spark.table(query_name)
+    spark.catalog.dropTempView(query_name)
+    return out
 
 
 def staged_dir(spark: SparkSession, stages: list, base_dir: str) -> T.StructType:
