@@ -43,16 +43,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    # Driver heap: a third of physical RAM unless SPARK_GRAFT_DRIVER_MEM
-    # is set. At get_session's 16g default on a 15 GB host the JVM grows
-    # past 14 GB RSS in the parity fixture and the kernel OOM-kills it,
-    # failing every test after it.
-    extra = {}
-    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ:
-        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
-        extra["spark.driver.memory"] = f"{min(16384, ram_mb // 3)}m"
-    s = get_session(app_name="trembita_spark_tests", extra_conf=extra)
-    yield s
+    yield get_session(app_name="trembita_spark_tests")
 
 
 @pytest.fixture(scope="session")

@@ -4,7 +4,7 @@ factory's confs — table() / events_stream() pin
 spark.sql.session.timeZone=UTC per call, and no query relies on our AQE
 or shuffle-partition tuning for correctness.
 
-Two subprocess scenarios (sessions are JVM-singletons per process, so an
+Three subprocess scenarios (sessions are JVM-singletons per process, so an
 in-process test would silently inherit the conftest session's confs and
 prove nothing):
 
@@ -17,6 +17,8 @@ prove nothing):
    exactly right. (The driver's host is UTC, so scenario 1 is the
    operative gate; this one pins that only presentation, never values,
    varies with host TZ.)
+3. Our factory, with malformed values for the retired tuning knobs:
+   cores and heap follow the host, every other setting is a constant.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ import subprocess
 import sys
 
 import pytest
+
+from tests.conftest import SF_DIR_SMALL
 
 _SCRIPT = r"""
 import datetime as dt
@@ -89,12 +93,11 @@ print("DRIVER_ENV_OK")
 """
 
 
-def _run(mode: str, tz: str) -> None:
-    env = dict(os.environ, TZ=tz)
+def _run(env: dict, script: str, *args: str) -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, mode],
+        [sys.executable, "-c", script, *args],
         cwd=repo,
         env=env,
         capture_output=True,
@@ -108,12 +111,59 @@ def _run(mode: str, tz: str) -> None:
 
 @pytest.mark.slow
 def test_bare_session_utc_host_strict():
-    _run("strict", "UTC")
+    _run(dict(os.environ, TZ="UTC"), _SCRIPT, "strict")
 
 
 @pytest.mark.slow
 def test_bare_session_foreign_tz_semantics_hold():
-    _run("epoch", "America/New_York")
+    _run(dict(os.environ, TZ="America/New_York"), _SCRIPT, "epoch")
+
+
+_DEFAULTS_SCRIPT = r"""
+import os
+import sys
+
+import duckdb
+
+from trembita_spark import contract
+from trembita_spark.io import TABLES
+from trembita_spark.session import get_session
+
+spark = get_session()
+sf = sys.argv[1]
+con = duckdb.connect()
+for t in TABLES:
+    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+contract.load_all()
+# q_graph_bfs reaches graph._known_small, which once parsed an env knob
+bfs = sorted(map(tuple, contract.QUERIES["q_graph_bfs"](spark, sf).collect()))
+ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+got = (
+    spark.sparkContext.defaultParallelism,
+    spark.sparkContext.getConf().get("spark.driver.memory"),
+    spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"),
+    spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold"),
+    bfs == sorted(con.execute(contract.ORACLES["q_graph_bfs"]).fetchall()),
+)
+want = (
+    len(os.sched_getaffinity(0)), f"{min(16384, ram_mb // 3)}m",
+    "64k", "8388608", "8388608", True,
+)
+assert got == want, f"got {got}, want {want}"
+print("DRIVER_ENV_OK")
+"""
+
+
+@pytest.mark.slow
+def test_session_defaults_come_from_the_host():
+    # The retired tuning knobs are dead: malformed values change nothing.
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.update(dict.fromkeys((
+        "SPARK_GRAFT_AQE_MIN_PARTITION", "SPARK_GRAFT_BROADCAST_THRESHOLD",
+        "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_GRAPH_BROADCAST_ROWS",
+    ), "abc"))
+    _run(env, _DEFAULTS_SCRIPT, SF_DIR_SMALL)
 
 
 def test_readme_query_count_matches_registry():

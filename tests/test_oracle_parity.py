@@ -244,10 +244,10 @@ def _parity_check(key, spark, oracle):
 # under sources.session_conf_lock. The pool still runs the keys of
 # contract.streaming_batch one at a time (_STREAMING_KEYS_LOCK), the
 # schedule they had while their runs held that lock: each streaming run
-# holds state stores and Python workers for its whole run, and on a
-# 4-CPU, 15 GB host at the default 16g heap this fixture already takes
-# the JVM past 12 GB RSS; with streaming runs overlapping, the JVM was
-# OOM-killed mid-fixture. Results are partition-layout-
+# holds state stores and Python workers for its whole run. At a 16g heap
+# on a 4-CPU, 15 GB host, overlapping streaming runs got the JVM
+# OOM-killed mid-fixture; overlap under the default heap (a third of
+# RAM) is not yet measured. Results are partition-layout-
 # independent by contract (the driver runs its own session at default
 # partitions — test_driver_env pins that), so concurrent planning
 # can't change any value. SPARK_GRAFT_PARITY_THREADS=1 restores the

@@ -54,7 +54,6 @@ def main() -> int:
             GAUNTLET_SHARD=f"{i}/{SHARDS}",
             SPARK_GRAFT_CPUS=str(per_shard_cpus),
             SPARK_GRAFT_WAREHOUSE=f"/tmp/trembita_wh_r{ROUND}_s{i}",
-            SPARK_GRAFT_DRIVER_MEM="12g",
         )
         xml = f"{out_dir}/shard{i}.xml"
         log = open(f"{out_dir}/shard{i}.log", "w")

@@ -929,6 +929,9 @@ def jaccard_link_prediction(
     )
 
 
+_BROADCAST_MAX_ROWS = 1_000_000
+
+
 def _known_small(df: DataFrame, rows: int | None) -> DataFrame:
     """Broadcast-hint ``df`` when the caller has MEASURED it small.
 
@@ -945,10 +948,7 @@ def _known_small(df: DataFrame, rows: int | None) -> DataFrame:
     where AQE is blind. Scale-adaptive by construction: a 100 TB
     frontier of hundreds of millions of rows exceeds the threshold and
     keeps today's shuffle plan."""
-    import os
-
-    limit = int(os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_ROWS", "1000000"))
-    if rows is not None and rows <= limit:
+    if rows is not None and rows <= _BROADCAST_MAX_ROWS:
         return F.broadcast(df)
     return df
 

@@ -21,10 +21,7 @@ State is THREAD-LOCAL (round 13): the plan-pin test builds 50 keys'
 plans through a small thread pool (the graph keys execute their
 eager-checkpoint traversals during build, so serial plan building was
 the verify lane's single slowest test), and a shared list would
-interleave captures across keys. The module-level ``ENABLED`` /
-``CAPTURED`` names are kept as thread-local views via __getattr__ for
-any external readers; writers should use :func:`enable` /
-:func:`disable`.
+interleave captures across keys.
 """
 
 from __future__ import annotations
@@ -53,11 +50,3 @@ def capture(df):
     if getattr(_TLS, "enabled", False):
         _TLS.captured.append(df)
     return df
-
-
-def __getattr__(name: str):
-    if name == "ENABLED":
-        return getattr(_TLS, "enabled", False)
-    if name == "CAPTURED":
-        return captured()
-    raise AttributeError(name)

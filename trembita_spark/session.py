@@ -21,7 +21,15 @@ from trembita_spark.streaming.pbcompat import ensure_protobuf_env
 # this container. No-op where protobuf is properly installed.
 ensure_protobuf_env()
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+# A 16g heap on a 15 GB host let the JVM grow to 14 GB RSS and be
+# OOM-killed; a third of RAM leaves room for Python workers and the OS.
+DEFAULT_DRIVER_MEM_MB = min(
+    16384, (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20) // 3
+)
+
+_BROADCAST_THRESHOLD = str(8 * 1024 * 1024)
 
 
 def get_session(
@@ -31,6 +39,15 @@ def get_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
+
+    Host-dependent defaults:
+
+    - cores (``local[cpus]``): ``$SPARK_GRAFT_CPUS`` if set, otherwise
+      the usable CPUs, ``len(os.sched_getaffinity(0))``.
+    - driver heap: ``min(16384, physical RAM in MB // 3)`` MB.
+
+    Every other setting is a constant; ``extra_conf`` is applied last,
+    so it overrides any of them, the heap included.
 
     Settings rationale (100 TB posture):
 
@@ -56,18 +73,15 @@ def get_session(
         # ~10 partitions, idling 2/3 of the cores mid-query. 64 KB keeps
         # local parallelism at the session's width; at production shuffle
         # sizes (>= advisory 256 MB partitions) the floor is never the
-        # binding constraint, so this is local-only in effect and
-        # env-overridable for cluster tuning. Measured (noop, same box):
-        # fsm 0.61->0.52, dedup_near 1.50->1.24, tfidf 0.78->0.65,
+        # binding constraint, so this is local-only in effect; cluster
+        # tuning overrides it through extra_conf. Measured (noop, same
+        # box): fsm 0.61->0.52, dedup_near 1.50->1.24, tfidf 0.78->0.65,
         # asof 0.48->0.35.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", f"{DEFAULT_DRIVER_MEM_MB}m")
         .config("spark.ui.enabled", "false")
         # 8 MB broadcast threshold, applied to BOTH the static planner and
         # AQE's runtime re-plan (which otherwise converts shuffle joins
@@ -78,16 +92,10 @@ def get_session(
         # the side that fits, i.e. true dimensions; every dim here is
         # <3 MB at sf0.1 and stays broadcast). Measured on the SQL join
         # family: q5 0.89->0.77, q18 1.17->0.97, q21 1.12->0.84,
-        # q9 0.78->0.64 (noop sink, quiet box). Env-overridable for
-        # cluster tuning.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", str(8 * 1024 * 1024)),
-        )
-        .config(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", str(8 * 1024 * 1024)),
-        )
+        # q9 0.78->0.64 (noop sink, quiet box). Cluster tuning overrides
+        # both through extra_conf.
+        .config("spark.sql.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
         # managed-table warehouse (bucketed tables) — keep out of the repo;
         # env-overridable so concurrent gauntlet shards (tools/
         # run_gauntlet.py) don't race each other's fixed-name tables.
