@@ -19,6 +19,10 @@ prove nothing):
    varies with host TZ.)
 3. Our factory, with malformed values for the retired tuning knobs:
    cores and heap follow the host, every other setting is a constant.
+4. Bare builder launched BEFORE the package is imported, from a
+   directory outside the repo with no PYTHONPATH: the Python-worker
+   keys still reach the package and protobuf, because the session
+   ships them (streaming.pbcompat.ship_worker_env).
 """
 
 from __future__ import annotations
@@ -93,12 +97,17 @@ print("DRIVER_ENV_OK")
 """
 
 
-def _run(env: dict, script: str, *args: str) -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run(
+    env: dict, script: str, *args: str, cwd: str = _REPO, repo_on_path: bool = True
+) -> None:
+    if repo_on_path:
+        env["PYTHONPATH"] = _REPO + os.pathsep + env.get("PYTHONPATH", "")
     proc = subprocess.run(
         [sys.executable, "-c", script, *args],
-        cwd=repo,
+        cwd=cwd,
         env=env,
         capture_output=True,
         text=True,
@@ -164,6 +173,58 @@ def test_session_defaults_come_from_the_host():
         "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_GRAPH_BROADCAST_ROWS",
     ), "abc"))
     _run(env, _DEFAULTS_SCRIPT, SF_DIR_SMALL)
+
+
+_FOREIGN_SCRIPT = r"""
+import datetime as dt
+import sys
+
+import duckdb
+from pyspark.sql import SparkSession
+
+# the JVM starts before the package is imported, in a directory that
+# does not contain it, with no PYTHONPATH
+spark = SparkSession.builder.master("local[2]").appName("foreign").getOrCreate()
+repo, sf = sys.argv[1], sys.argv[2]
+sys.path.insert(0, repo)
+from trembita_spark import contract
+from trembita_spark.io import TABLES
+
+contract.load_all()
+con = duckdb.connect()
+for t in TABLES:
+    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+
+
+def canon(v, spark_side):
+    if isinstance(v, dt.datetime):
+        return (v.replace(tzinfo=None) if spark_side else v).isoformat()
+    return v
+
+
+for key in ("q_stream_fsm_sessionize", "q_stream_fsm_tws",
+            "q_stream_tws_dedup", "q_fsm_applyinpandas"):
+    srows = sorted(
+        tuple(canon(v, True) for v in row)
+        for row in contract.QUERIES[key](spark, sf).collect()
+    )
+    orows = sorted(
+        tuple(canon(v, False) for v in row)
+        for row in con.execute(contract.ORACLES[key]).fetchall()
+    )
+    assert srows == orows, f"{key}: foreign session diverged from oracle"
+print("DRIVER_ENV_OK")
+"""
+
+
+@pytest.mark.slow
+def test_python_worker_keys_run_in_a_foreign_session_outside_the_repo(tmp_path):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TZ"] = "UTC"
+    _run(
+        env, _FOREIGN_SCRIPT, _REPO, SF_DIR_SMALL,
+        cwd=str(tmp_path), repo_on_path=False,
+    )
 
 
 def test_readme_query_count_matches_registry():

@@ -132,12 +132,12 @@ def test_stream_static_join(spark):
 def test_stream_tws_sessionize_matches_batch(spark):
     # Spark 4.x transformWithStateInPandas port of the FSM — same
     # subset-vs-batch contract as the applyInPandasWithState version.
-    # The TWS python worker needs google.protobuf: streaming.pbcompat
-    # exposes the cloud-sdk-bundled runtime on PYTHONPATH before JVM
-    # launch (see that module), so this test RUNS in this container as
-    # of round 9 (it skipped through round 8). TWS also requires the
-    # RocksDB state store (multi-column-family state layout).
-    pytest.importorskip("google.protobuf.descriptor")
+    # The TWS python worker needs google.protobuf: the session ships it
+    # to the workers (streaming.pbcompat.ship_worker_env), and four
+    # contract keys need TWS, so a missing runtime fails here instead of
+    # skipping. TWS also requires the RocksDB state store
+    # (multi-column-family state layout).
+    import google.protobuf.descriptor  # noqa: F401
     from trembita_spark.streaming.stateful import sessionize_tws
 
     out = run_to_completion(
@@ -690,8 +690,9 @@ def test_tws_processing_time_timer_flushes_idle_keys(spark):
     # users still sit in state when availableNow drains, so they are
     # NOT emitted. Content is deterministic even though firing time is
     # wall-clock.
-    pytest.importorskip("google.protobuf.descriptor")
     import datetime as dt
+
+    import google.protobuf.descriptor  # noqa: F401
 
     from pyspark.sql import types as T
 

@@ -57,13 +57,16 @@ def register(key: str, oracle: Optional[str] = None):
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver-generated parquet table (see TESTDATA.md).
 
-    Pins the session timezone to UTC first: contract queries may run
-    under the DRIVER'S SparkSession (not our factory), and timestamp
-    collection must match the UTC-naive DuckDB oracle regardless of how
-    that session was built."""
+    Pins the session timezone to UTC and ships the Python workers'
+    environment first: contract queries may run under the DRIVER'S
+    SparkSession (not our factory), and timestamp collection must match
+    the UTC-naive DuckDB oracle, and worker-side keys must run,
+    regardless of how and where that session was built."""
     from trembita_spark.io import load_table
+    from trembita_spark.streaming.pbcompat import ship_worker_env
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ship_worker_env(spark)
     return load_table(spark, sf_dir, name)
 
 

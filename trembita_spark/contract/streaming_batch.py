@@ -222,32 +222,13 @@ def q_stream_fsm_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     # event-time timer (end + gap) fell behind the final watermark —
     # the two stateful APIs must agree row-for-row.
     #
-    # Environment note: the TWS python worker needs google.protobuf;
-    # this container lacks it on the default path, so
-    # streaming.pbcompat exposes the cloud-sdk-bundled runtime via
-    # PYTHONPATH before JVM launch. A session whose JVM predates that
-    # env (a foreign harness) crashes the worker at import — then this
-    # key falls back to the applyInPandasWithState FSM, whose emission
-    # is row-identical (that path is q_stream_fsm_sessionize's, already
-    # driver-verified). On a normal cluster install protobuf is present
-    # and the TWS path always runs.
-    from trembita_spark.streaming.pbcompat import tws_available
-    from trembita_spark.streaming.stateful import (
-        sessionize_stream,
-        sessionize_tws,
-    )
+    # The TWS python worker needs google.protobuf; events_stream ships
+    # it to the workers (streaming.pbcompat.ship_worker_env).
+    from trembita_spark.streaming.stateful import sessionize_tws
 
     name = f"stream_fsm_tws_{next(_STREAM_SEQ)}"
-    if tws_available(spark):
-        try:
-            out = sessionize_tws(events_stream(spark, sf_dir), gap_minutes=30)
-            return run_to_completion(
-                out, name, output_mode="append", conf=TWS_CONF
-            )
-        except Exception:
-            pass  # env-shaped failure (protobuf-less worker): fall back
-    out = sessionize_stream(events_stream(spark, sf_dir), gap_minutes=30)
-    return run_to_completion(out, f"{name}_fb", output_mode="append")
+    out = sessionize_tws(events_stream(spark, sf_dir), gap_minutes=30)
+    return run_to_completion(out, name, output_mode="append", conf=TWS_CONF)
 
 
 @register("q_stream_tumbling", oracle=_TUMBLING_ORACLE)
@@ -3088,35 +3069,13 @@ def q_stream_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which the oracle states as a rank-1 window. Deterministic on the
     # finite fixture: the file source delivers one micro-batch, so each
     # user's rows reach handleInputRows together and the in-batch sort
-    # fixes the order. Same RocksDB-provider + protobuf-shim
-    # environment notes as q_stream_fsm_tws, same
-    # applyInPandasWithState-free fallback rationale does NOT apply
-    # here (map state has no GroupState equivalent) — if TWS is
-    # unavailable the batch-exact expression path computes the same
-    # result (min_by struct per group), keeping the key driver-safe
-    # everywhere while the TWS path runs wherever the worker can.
-    from trembita_spark.streaming.pbcompat import tws_available
+    # fixes the order. Same RocksDB-provider + protobuf environment
+    # notes as q_stream_fsm_tws.
     from trembita_spark.streaming.stateful import first_occurrence_tws
 
     name = f"stream_tws_dedup_{next(_STREAM_SEQ)}"
-    if tws_available(spark):
-        try:
-            out = first_occurrence_tws(events_stream(spark, sf_dir))
-            return run_to_completion(
-                out, name, output_mode="append", conf=TWS_CONF
-            )
-        except Exception:
-            pass  # env-shaped failure: fall through to the batch path
-    ev = table(spark, sf_dir, "events")
-    first = ev.groupBy("user_id", "event_type").agg(
-        F.min(F.struct("ts", "event_id")).alias("f")
-    )
-    return first.select(
-        "user_id",
-        "event_type",
-        F.col("f.ts").alias("first_ts"),
-        F.col("f.event_id").alias("first_event_id"),
-    )
+    out = first_occurrence_tws(events_stream(spark, sf_dir))
+    return run_to_completion(out, name, output_mode="append", conf=TWS_CONF)
 
 
 @register(
@@ -3142,46 +3101,12 @@ def q_stream_tws_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly 3 doubles per user regardless of history. The oracle
     # states the identical rule as a prefix self-join (count of
     # greater-or-equal predecessors < 3); value comparisons are raw
-    # parquet doubles, identical in both engines. The batch fallback
-    # (protobuf-less foreign JVM) runs the same prefix rule as a
-    # user-keyed range join — per-user fan-out is (events/user)²,
-    # bounded by the per-entity rate like the sequence-pattern key.
-    from trembita_spark.streaming.pbcompat import tws_available
+    # parquet doubles, identical in both engines.
     from trembita_spark.streaming.stateful import running_topk_entries_tws
 
     name = f"stream_tws_topk_{next(_STREAM_SEQ)}"
-    if tws_available(spark):
-        try:
-            out = running_topk_entries_tws(events_stream(spark, sf_dir), k=3)
-            return run_to_completion(
-                out, name, output_mode="append", conf=TWS_CONF
-            )
-        except Exception:
-            pass  # env-shaped failure: fall through to the batch path
-    ev = table(spark, sf_dir, "events")
-    a = ev.select("user_id", "event_id", "ts", "value")
-    b = ev.select(
-        F.col("user_id").alias("b_user"),
-        F.col("event_id").alias("b_id"),
-        F.col("ts").alias("b_ts"),
-        F.col("value").alias("b_value"),
-    )
-    j = a.join(
-        b,
-        (F.col("user_id") == F.col("b_user"))
-        & (
-            (F.col("b_ts") < F.col("ts"))
-            | ((F.col("b_ts") == F.col("ts")) & (F.col("b_id") < F.col("event_id")))
-        )
-        & (F.col("b_value") >= F.col("value")),
-        "left",
-    )
-    return (
-        j.groupBy("user_id", "event_id", "ts", "value")
-        .agg(F.count("b_id").alias("ge_prior"))
-        .where(F.col("ge_prior") < 3)
-        .select("user_id", "event_id", "ts", "value")
-    )
+    out = running_topk_entries_tws(events_stream(spark, sf_dir), k=3)
+    return run_to_completion(out, name, output_mode="append", conf=TWS_CONF)
 
 
 def _mkv_step(prev: str, this: str) -> str:
@@ -4507,15 +4432,12 @@ def q_stream_tws_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentinel replay as q_stream_distinct_users (events, then a
     # sentinel 10h past max ts) so the final watermark closes every
     # real window; the sentinel's own window is dropped. Oracle = batch
-    # rank-1 firsts bucketed per hour. Falls back to the batch-exact
-    # expression path where the TWS worker can't run (protobuf-less
-    # foreign harness), like the other TWS keys. At 100 TB: dedup
-    # state is O(users x types), window state one row per open hour —
-    # both watermark-evicted.
+    # rank-1 firsts bucketed per hour. At 100 TB: dedup state is
+    # O(users x types), window state one row per open hour — both
+    # watermark-evicted.
     from datetime import timedelta
 
     from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.pbcompat import tws_available
     from trembita_spark.streaming.sources import staged_dir, staged_stream
     from trembita_spark.streaming.stateful import first_occurrence_tws
 
@@ -4523,45 +4445,21 @@ def q_stream_tws_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    if tws_available(spark):
-        max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        sent_ts = max_ts + timedelta(hours=10)
-        sentinels = local_rows(
-        spark,
-            [(-1, sent_ts, -1, "view", 0.0)], schema=ev.schema
-        )
-        base = run_tmp("stream_tws_chained")
-        schema = staged_dir(spark, [ev, sentinels], base)
-        try:
-            firsts = first_occurrence_tws(
-                staged_stream(spark, base, schema), event_time_col="first_ts"
-            )
-            agg = (
-                firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
-                .select(F.col("w.start").alias("wstart"), "n_first")
-            )
-            out = run_to_completion(
-                agg, name, output_mode="append", conf=TWS_CONF
-            )
-            return out.where(
-                F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS")
-            )
-        except Exception:
-            pass  # env-shaped failure: fall through to the batch path
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    firsts_b = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_type", "ts")
+    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    sent_ts = max_ts + timedelta(hours=10)
+    sentinels = local_rows(spark, [(-1, sent_ts, -1, "view", 0.0)], schema=ev.schema)
+    base = run_tmp("stream_tws_chained")
+    schema = staged_dir(spark, [ev, sentinels], base)
+    firsts = first_occurrence_tws(
+        staged_stream(spark, base, schema), event_time_col="first_ts"
     )
-    return (
-        firsts_b.groupBy(F.window("ts", "1 hour").alias("w"))
+    agg = (
+        firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
         .select(F.col("w.start").alias("wstart"), "n_first")
     )
+    out = run_to_completion(agg, name, output_mode="append", conf=TWS_CONF)
+    return out.where(F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS"))
 
 
 @register(

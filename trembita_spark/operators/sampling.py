@@ -153,39 +153,19 @@ def budget_select(
     ``weight_col`` stays within ``budget`` — token-budget corpus
     selection ("take the best documents until we have N tokens").
 
-    The running sum is a distributed two-phase prefix sum (the
-    zip_with_index pattern, pipeline.py): range-partition by the sort
-    key, partition-local cumulative window, then per-partition totals
-    broadcast as offsets — NO single-partition global window, so the op
-    scales to arbitrarily large inputs. Cost: one range shuffle + one
-    tiny aggregate + broadcast.
+    The running sum is ``ranking.prefix_sum``, the distributed two-phase
+    prefix sum: range-partition by the sort key, partition-local
+    cumulative window, then per-partition totals broadcast as offsets —
+    NO single-partition global window, so the op scales to arbitrarily
+    large inputs. Cost: one range shuffle + one tiny aggregate +
+    broadcast.
     """
-    part = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
-    part = part.withColumn("__pid", F.spark_partition_id())
-    local_w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    part = part.withColumn("__local_cum", F.sum(weight_col).over(local_w))
-    # BARRIER — `part` is consumed twice (totals agg + the join back);
-    # see pipeline.zip_with_index: without this, AQE can coalesce the
-    # two independent executions of the range exchange differently and
-    # the __pid spaces diverge (silent cum-weight corruption at scale).
-    # plan_debug.capture is a no-op unless the plan audits enable it
-    # (the barrier hides the range exchange from the consumer's explain).
-    from trembita_spark import plan_debug
+    from trembita_spark.operators.ranking import prefix_sum
 
-    part = plan_debug.capture(part).localCheckpoint(eager=False)
-    totals = part.groupBy("__pid").agg(F.sum(weight_col).alias("__n"))
-    off_w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn("__off", F.coalesce(F.sum("__n").over(off_w), F.lit(0)))
-    out = (
-        part.join(F.broadcast(offsets.select("__pid", "__off")), "__pid")
-        .withColumn(cum_col, (F.col("__off") + F.col("__local_cum")).cast("long"))
-        .drop("__pid", "__local_cum", "__off")
+    out = prefix_sum(df, weight_col, order_by, cum_col)
+    return out.withColumn(cum_col, F.col(cum_col).cast("long")).where(
+        F.col(cum_col) <= budget
     )
-    return out.where(F.col(cum_col) <= budget)
 
 
 def unimax_quotas(

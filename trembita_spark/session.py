@@ -13,13 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from trembita_spark.streaming.pbcompat import ensure_protobuf_env
-
-# Must run BEFORE the first getOrCreate(): Spark python workers inherit
-# the JVM's env, which is frozen at JVM launch — this is what makes
-# transformWithStateInPandas (protobuf-backed state server) runnable in
-# this container. No-op where protobuf is properly installed.
-ensure_protobuf_env()
+from trembita_spark.streaming.pbcompat import ship_worker_env
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
@@ -47,7 +41,9 @@ def get_session(
     - driver heap: ``min(16384, physical RAM in MB // 3)`` MB.
 
     Every other setting is a constant; ``extra_conf`` is applied last,
-    so it overrides any of them, the heap included.
+    so it overrides any of them, the heap included. The session's Python
+    workers get the package and protobuf from
+    ``streaming.pbcompat.ship_worker_env``.
 
     Settings rationale (100 TB posture):
 
@@ -110,4 +106,5 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_worker_env(spark)
     return spark

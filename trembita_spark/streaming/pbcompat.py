@@ -1,7 +1,10 @@
-"""google.protobuf availability shim for transformWithStateInPandas.
+"""What Spark's Python workers need from the driver: this package and
+google.protobuf.
 
-Spark 4's arbitrary-state API (``transformWithStateInPandas``) talks to
-the JVM state server over protobuf: every spawned Python worker imports
+Workers unpickle functions by import path, so they must import
+``trembita_spark`` from whatever directory the JVM was launched in.
+Spark 4's arbitrary-state API (``transformWithStateInPandas``) also
+talks to the JVM state server over protobuf: every TWS worker imports
 ``pyspark.sql.streaming.proto.StateMessage_pb2``, which needs the
 ``google.protobuf`` runtime. This container has no protobuf on
 sys.path, but ships one inside the Google Cloud SDK
@@ -20,19 +23,14 @@ Two deltas separate it from "just works":
    protobuf's cross-version guarantee for the message surface the state
    server uses.
 
-Timing matters: Spark python workers inherit the JVM's environment,
-which is frozen at JVM launch — so :func:`ensure_protobuf_env` must run
-before the first ``getOrCreate()``. It is invoked at
-``trembita_spark.session`` import time, which precedes session creation
-in every entry point (tests, bench.py, __spark_entry__). For a session
-whose JVM was launched by a foreign harness WITHOUT these vars, the
-worker-side import fails and callers should fall back (see
-``tws_available()``); the fallback path is applyInPandasWithState with
-identical semantics.
+:func:`ensure_protobuf_env` fixes this process; :func:`ship_worker_env`
+hands the package directory, the shim and the escape hatch to the
+workers through the session, so it holds for any session, whenever and
+wherever its JVM was launched. There is no fallback: a TWS query whose
+workers cannot import protobuf fails with the worker's error.
 
-On a real cluster none of this exists: protobuf is a standard
-dependency of pyspark[connect]/[sql] installs and this module becomes a
-no-op at the first ``import google.protobuf`` probe.
+On a real cluster protobuf is a standard dependency of
+pyspark[connect]/[sql] installs and the shim is never built.
 """
 
 from __future__ import annotations
@@ -40,8 +38,15 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark.sql import SparkSession
+
 _APPENGINE_PB = "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf"
 _SHIM_ROOT = "/tmp/trembita_pbshim/pypath"
+_VERSION_CHECK = "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"
+# the directory that holds the trembita_spark package
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 
 def _have_protobuf() -> bool:
@@ -77,56 +82,38 @@ def _build_shim_dir() -> str | None:
     return _SHIM_ROOT
 
 
-def ensure_protobuf_env() -> bool:
-    """Make google.protobuf importable here AND in Spark-spawned python
-    workers (via PYTHONPATH, which the JVM snapshots at launch). Returns
-    True if protobuf is importable in THIS process afterwards."""
+def ensure_protobuf_env() -> str | None:
+    """Make google.protobuf importable in THIS process. Returns the shim
+    directory when this process needed it (workers then need it too),
+    None when protobuf is installed or no bundled runtime exists.
+    Idempotent."""
     # The version-check escape hatch is needed even when a too-old real
     # protobuf is installed; setting it is harmless when versions align.
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
+    os.environ.setdefault(_VERSION_CHECK, "true")
+    if _SHIM_ROOT in sys.path:
+        return _SHIM_ROOT
     if _have_protobuf():
-        return True
+        return None
     shim = _build_shim_dir()
-    if shim is None:
-        return False
-    if shim not in sys.path:
+    if shim is not None:
         sys.path.insert(0, shim)
-    pp = os.environ.get("PYTHONPATH", "")
-    if shim not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = shim + (os.pathsep + pp if pp else "")
-    return _have_protobuf()
+    return shim
 
 
-def tws_available(spark=None) -> bool:
-    """True when transformWithStateInPandas can actually execute: the
-    protobuf runtime resolves in this process (worker processes see the
-    same PYTHONPATH when the JVM was launched after ensure_protobuf_env —
-    the trembita_spark.session import order guarantees that for sessions
-    WE build). Callers with a foreign, pre-launched JVM can pass the
-    session so the JVM-side env is probed instead of the driver's."""
-    if not ensure_protobuf_env():
-        return False
-    if spark is not None:
-        try:
-            jvm_env = spark.sparkContext._jvm.java.lang.System.getenv()
-            jpp = jvm_env.get("PYTHONPATH") or ""
-            if _SHIM_ROOT not in jpp and not _jvm_side_protobuf(jpp):
-                return False
-        except Exception:
-            pass  # probe is best-effort; optimistically allow
-    return True
+def ship_worker_env(spark: SparkSession) -> None:
+    """Give every Python worker this session starts the package's parent
+    directory and (when this process needed it) the protobuf shim on
+    ``PYTHONPATH``, plus ``TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK``.
 
-
-def _jvm_side_protobuf(jvm_pythonpath: str) -> bool:
-    """Would a worker spawned with this PYTHONPATH resolve protobuf?"""
-    for p in jvm_pythonpath.split(os.pathsep):
-        if p and os.path.isdir(os.path.join(p, "google", "protobuf")):
-            return True
-    # site-packages protobuf (normal installs) — same probe as driver.
-    try:
-        import google.protobuf  # noqa: F401
-
-        gp = sys.modules["google.protobuf"].__file__ or ""
-        return _SHIM_ROOT not in gp
-    except Exception:
-        return False
+    The values go into ``spark.sparkContext.environment``, which PySpark
+    copies into each Python function it creates and Spark merges into
+    that function's worker environment. The launch environment would
+    not do: the JVM snapshots it when it starts, which may be before
+    this package was imported and in any working directory. Writes only
+    what is missing, so repeat calls change nothing."""
+    env = spark.sparkContext.environment
+    have = env.get("PYTHONPATH", "").split(os.pathsep)
+    add = [p for p in (_PACKAGE_PARENT, ensure_protobuf_env()) if p and p not in have]
+    if add:
+        env["PYTHONPATH"] = os.pathsep.join(add + [p for p in have if p])
+    env.setdefault(_VERSION_CHECK, "true")

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from trembita_spark.streaming.pbcompat import ship_worker_env
+
 # Serializes the set/start()/restore window in start_query.
 # Sessions are JVM singletons shared by every thread in the process, and
 # a streaming query clones the session's SQL conf inside start(): a
@@ -48,10 +50,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trembita_spark.io import _normalize_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Pin UTC like contract.table(): the driver may hand us a session
-    # built without our factory, and timestamp semantics must not depend
-    # on the host timezone.
+    # Pin UTC and ship the worker environment like contract.table(): the
+    # driver may hand us a session built without our factory, and neither
+    # timestamp semantics nor the Python workers may depend on the host
+    # timezone or the launch directory.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ship_worker_env(spark)
     schema = _events_raw_schema(spark, sf_dir)
     # The events fixture ships in two physical shapes: the driver's
     # SINGLE FILE sf_dir/events.parquet, and (for the scale replicas) a
