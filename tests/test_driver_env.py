@@ -28,6 +28,7 @@ prove nothing):
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 
@@ -114,8 +115,43 @@ def _run(
         timeout=300,
     )
     assert proc.returncode == 0 and "DRIVER_ENV_OK" in proc.stdout, (
-        proc.stdout[-2000:] + "\n" + proc.stderr[-2000:]
+        _causes(proc.stdout + "\n" + proc.stderr)
+        + proc.stdout[-2000:]
+        + "\n"
+        + proc.stderr[-2000:]
     )
+
+
+def _causes(output: str, limit: int = 20) -> str:
+    """Every distinct ``SomeError:`` / ``SomeException:`` line of the
+    output, up to ``limit``: a failed worker-side key ends in a Java
+    stack, and the Python error that caused it (a ``ModuleNotFoundError``
+    in the workers, say) sits far above the tail."""
+    lines = re.findall(r"^\w+(?:Error|Exception):.*$", output, re.MULTILINE)
+    return "".join(f"{line}\n" for line in list(dict.fromkeys(lines))[:limit])
+
+
+def test_failure_causes_found_above_the_java_tail():
+    # A worker-side failure as a driver prints it: the Python error
+    # (here twice), then a long Java stack that fills the tail.
+    script = r"""
+import sys
+import traceback
+
+for _ in range(2):
+    try:
+        import trembita_spark_absent  # noqa: F401
+    except ModuleNotFoundError:
+        traceback.print_exc()
+print("\tat org.apache.spark.SparkErrorUtils.frame\n" * 200, file=sys.stderr)
+sys.exit(1)
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=60
+    )
+    cause = "ModuleNotFoundError: No module named 'trembita_spark_absent'"
+    assert proc.returncode == 1 and cause not in proc.stderr[-2000:]
+    assert _causes(proc.stdout + "\n" + proc.stderr) == cause + "\n"
 
 
 @pytest.mark.slow

@@ -317,19 +317,23 @@ def test_budget_select_uses_range_partition_not_global_window(spark):
 
 
 def _assert_distributed_positions(plan: str, extra_single: int = 0) -> None:
-    # Position assignment must be the two-phase prefix sum: every
-    # data-bearing row_number window is partitioned by the range-
-    # partition id (never a global, single-partition window), the data
-    # rides a rangepartitioning exchange, and the ONLY SinglePartition
-    # exchanges in the plan feed the tiny per-partition offsets window
-    # (sum(__n) over ≤ num_partitions rows) — plus `extra_single`
+    # Position assignment must be the two-phase prefix sum
+    # (ranking.prefix_sum_multi): every data-bearing running-sum window
+    # (AS __lc_*) is partitioned by the range-partition id (never a
+    # global, single-partition window), the data rides a
+    # rangepartitioning exchange, and the ONLY SinglePartition exchanges
+    # in the plan feed the tiny per-partition offsets windows
+    # (sum(__t_*) over ≤ num_partitions rows) — plus `extra_single`
     # explicitly-accounted scalar aggregates.
-    for line in plan.splitlines():
-        if "Window [row_number()" in line:
-            assert "windowspecdefinition(__pid" in line, line
+    data_windows = [
+        line for line in plan.splitlines() if "Window [" in line and " AS __lc_" in line
+    ]
+    assert data_windows, plan
+    for line in data_windows:
+        assert re.search(r"windowspecdefinition\(__pid#\d+, ", line), line
     assert "rangepartitioning" in plan.lower(), plan
     n_single = plan.count("Exchange SinglePartition")
-    assert n_single == plan.count("Window [sum(__n") + extra_single, plan
+    assert n_single == plan.count("Window [sum(__t_") + extra_single, plan
 
 
 def test_sort_positions_not_global_window(spark):

@@ -9,6 +9,7 @@ import threading
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -18,8 +19,8 @@ from trembita_spark.operators.fsm import sessionize
 from trembita_spark.streaming.sources import (
     TWS_CONF,
     events_stream,
+    run_query,
     run_to_completion,
-    start_query,
 )
 from trembita_spark.streaming.stateful import sessionize_stream
 from trembita_spark.streaming.windows import tumbling_window_agg
@@ -304,15 +305,13 @@ def test_stream_upsert_merge_runs_multiple_batches(spark):
     def count_batch(batch, bid):
         seen.append((bid, batch.count()))
 
-    q = (
+    run_query(
+        spark,
         spark.readStream.schema("user_id long, value double")
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(count_batch)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(count_batch),
     )
-    q.awaitTermination(120)
     assert len(seen) >= 2, seen
     assert sum(n for _, n in seen) == 100
 
@@ -504,14 +503,8 @@ def test_stateful_restart_recovers_state(spark, tmp_path, provider):
             .format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
         )
-        q = start_query(spark, writer, conf={_PROVIDER_KEY: provider})
-        try:
-            q.awaitTermination(120)
-        finally:
-            if q.isActive:
-                q.stop()
+        run_query(spark, writer, conf={_PROVIDER_KEY: provider})
 
     run_once()
     n_first = spark.read.parquet(sink).count()
@@ -547,7 +540,8 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     schema = spark.read.parquet(src).schema
 
     def run_once():
-        q = (
+        run_query(
+            spark,
             spark.readStream.schema(schema)
             .parquet(src)
             .where(F.col("event_type") == "purchase")
@@ -555,15 +549,8 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        try:
-            q.awaitTermination(120)
-        finally:
-            if q.isActive:
-                q.stop()
 
     run_once()
     n_first = spark.read.parquet(sink).count()
@@ -646,17 +633,7 @@ def test_stream_outer_join_eviction_exactly_once(spark):
     def sink(bdf, bid):
         batches.append((bid, bdf.collect()))
 
-    q = (
-        joined.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    run_query(spark, joined.writeStream.foreachBatch(sink).outputMode("append"))
 
     null_rows = {
         bid: [r for r in rows if r.click_id is None and r.purchase_id >= 0]
@@ -730,6 +707,52 @@ def test_tws_processing_time_timer_flushes_idle_keys(spark):
     assert flushed <= {(1, 2), (2, 1), (3, 1)}, flushed
 
 
+def test_failed_query_raises_through_idle_poll(spark):
+    # A stream that fails in its first batch ends the idle_stop poll
+    # with the query dead: its error must surface, not the rows the
+    # sink happens to hold.
+    failing = events_stream(spark, SF_DIR_SMALL).select(
+        "event_id",
+        F.when(F.col("event_id") > 5, F.raise_error(F.lit("poisoned event"))).alias(
+            "boom"
+        ),
+    )
+    with pytest.raises(StreamingQueryException, match="poisoned event"):
+        run_to_completion(failing, "t_failed_idle_poll", "append", idle_stop=0)
+    assert "t_failed_idle_poll" not in {q.name for q in spark.streams.active}
+
+
+def test_run_past_timeout_raises_and_stops_query(spark, monkeypatch):
+    # Without idle_stop, idle_flush_tws never ends by itself (pending
+    # processing-time timers keep it active, see
+    # test_tws_processing_time_timer_flushes_idle_keys), so the wait
+    # runs out: that must raise, naming the query, and stop it.
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from trembita_spark.streaming import sources
+    from trembita_spark.streaming.stateful import idle_flush_tws
+
+    monkeypatch.setattr(sources, "_TIMEOUT_S", 5)
+    schema = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    t0 = dt.datetime(2024, 1, 1)
+    stream = _staged_stream(spark, [[(1, t0)], [(2, t0)]], schema)
+    with pytest.raises(TimeoutError, match="t_tws_timeout"):
+        run_to_completion(
+            idle_flush_tws(stream, idle_ms=1),
+            "t_tws_timeout",
+            output_mode="append",
+            conf=TWS_CONF,
+        )
+    assert "t_tws_timeout" not in {q.name for q in spark.streams.active}
+
+
 def test_stream_crash_midrun_recovers_exactly_once(spark, tmp_path):
     """Failure-injection sibling of test_checkpoint_restart_is_exactly_once
     (round-10 verdict item 7): the query CRASHES mid-run — after the sink
@@ -774,26 +797,19 @@ def test_stream_crash_midrun_recovers_exactly_once(spark, tmp_path):
         return merge
 
     def run(fail_after):
-        q = (
+        run_query(
+            spark,
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .option("recursiveFileLookup", "true")
             .option("pathGlobFilter", "*.parquet")
             .parquet(src)
             .writeStream.foreachBatch(make_merge(fail_after))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        try:
-            q.awaitTermination(120)
-        except Exception:
-            pass  # the injected crash surfaces here on run 1
-        finally:
-            if q.isActive:
-                q.stop()
 
-    run(fail_after=1)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run(fail_after=1)
     assert crashed["seen"], "the fault must actually fire mid-run"
     n_after_crash = spark.read.parquet(target).count()
 

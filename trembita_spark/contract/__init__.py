@@ -34,6 +34,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from trembita_spark.io import run_tmp  # noqa: F401  (re-exported for the keys)
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -68,34 +70,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ship_worker_env(spark)
     return load_table(spark, sf_dir, name)
-
-
-_RUN_TMP_DIRS: list = []
-
-
-def _cleanup_run_tmp() -> None:
-    import shutil
-
-    for d in _RUN_TMP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _RUN_TMP_DIRS.clear()
-
-
-def run_tmp(prefix: str) -> str:
-    """Fresh per-invocation temp dir for round-trip (write-then-read)
-    contract queries. A fixed shared /tmp path is a collision hazard when
-    two harnesses invoke the same query concurrently; mkdtemp gives each
-    run its own isolated sink. Every dir is registered for atexit
-    removal so bench loops that invoke the same query many times don't
-    accumulate unbounded copies under /tmp."""
-    import atexit
-    import tempfile
-
-    if not _RUN_TMP_DIRS:
-        atexit.register(_cleanup_run_tmp)
-    d = tempfile.mkdtemp(prefix=f"trembita_spark_{prefix}_")
-    _RUN_TMP_DIRS.append(d)
-    return d
 
 
 def dsum(expr, scale: int = 2):

@@ -258,7 +258,7 @@ def q_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The sort itself is order-invisible to the hash; materialize the rank
     # so the total order IS part of the checked values. Positions come from
     # the engine's distributed prefix-sum (`Pipeline.zip_with_index`):
-    # range-partition on the sort key, partition-local row_number, then a
+    # range-partition on the sort key, partition-local running count, then a
     # tiny broadcast of per-partition offsets — the data never funnels
     # through a single-partition global window, so this scales to any
     # input size (only the ~num_partitions-row offsets frame is serial).
@@ -2139,7 +2139,7 @@ def q_interval_stabbing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sequence_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Gaps-and-islands over an id sequence (missing-key audit): the
     # classic id-minus-rank grouping, with the rank supplied by the
-    # DISTRIBUTED zip_with_index (range partition + local row_number +
+    # DISTRIBUTED zip_with_index (range partition + local running count +
     # broadcast offsets) instead of the oracle's single global window —
     # consecutive present ids share (id - rank) and collapse to one
     # island row. The fixture's keys are dense, so a deterministic
@@ -2977,7 +2977,7 @@ def q_sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Systematic (every k-th) sampling under a total order — the
     # sampling mode the stratified/reservoir/weighted trio was missing:
     # deterministic, evenly spaced, no RNG. Position comes from the
-    # distributed zip_with_index (range-partition + local row_number +
+    # distributed zip_with_index (range-partition + local running count +
     # broadcast offsets — never the oracle's single-partition global
     # window, which is fine for DuckDB but the classic 100 TB killer in
     # Spark); k = 97 (prime, so any periodic layout in the sort key

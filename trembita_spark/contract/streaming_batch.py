@@ -26,8 +26,8 @@ from trembita_spark.operators import timeseries as TS
 from trembita_spark.streaming.sources import (
     TWS_CONF,
     events_stream,
+    run_query,
     run_to_completion,
-    start_query,
 )
 from trembita_spark.streaming.windows import (
     session_window_agg,
@@ -528,19 +528,13 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type") == "view")
         .select("event_id", "user_id", "ts", "value")
     )
-    q = start_query(
+    run_query(
         spark,
         ev.writeStream.format("parquet")
         .option("path", f"{d}/out")
         .option("checkpointLocation", f"{d}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True),
+        .outputMode("append"),
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
     return spark.read.parquet(f"{d}/out")
 
 
@@ -1168,15 +1162,7 @@ def q_stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    q = start_query(
-        spark,
-        stream.writeStream.foreachBatch(apply_batch).trigger(availableNow=True),
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    run_query(spark, stream.writeStream.foreachBatch(apply_batch))
     final = state["df"]
     # persist the materialized view the way a real pipeline would, and
     # read it back so the returned plan is the sink's contents.
@@ -4647,19 +4633,13 @@ def q_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "event_type", "value"
     )
     for _ in range(2):  # second start must be a no-op via the checkpoint
-        q = start_query(
+        run_query(
             spark,
             src.writeStream.outputMode("append")
             .format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
+            .option("checkpointLocation", ckpt),
         )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
     return spark.read.parquet(sink)
 
 
@@ -4708,17 +4688,10 @@ def q_stream_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.write.mode("append").parquet(target)
 
     src = events_stream(spark, sf_dir).select(*cols)
-    q = start_query(
+    run_query(
         spark,
-        src.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
+        src.writeStream.foreachBatch(merge_batch).option("checkpointLocation", ckpt),
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
     # Loss gate BEFORE the re-delivery: the anti-join merge would
     # silently BACK-FILL any rows the stream failed to deliver (the
     # exact 0-row source-bug class the round-11 tranche caught in

@@ -267,3 +267,32 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+_RUN_TMP_DIRS: list = []
+
+
+def _cleanup_run_tmp() -> None:
+    import shutil
+
+    for d in _RUN_TMP_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+    _RUN_TMP_DIRS.clear()
+
+
+def run_tmp(prefix: str) -> str:
+    """Fresh per-invocation temp dir, ``trembita_spark_<prefix>_*``, for
+    round-trip (write-then-read) queries and lineage cuts. A fixed
+    shared /tmp path is a collision hazard when two harnesses invoke the
+    same query concurrently; mkdtemp gives each run its own isolated
+    dir. Every dir is registered for atexit removal so bench loops that
+    invoke the same query many times don't accumulate unbounded copies
+    under /tmp."""
+    import atexit
+    import tempfile
+
+    if not _RUN_TMP_DIRS:
+        atexit.register(_cleanup_run_tmp)
+    d = tempfile.mkdtemp(prefix=f"trembita_spark_{prefix}_")
+    _RUN_TMP_DIRS.append(d)
+    return d

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trembita_spark.io import run_tmp
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact duplicate groups by content hash: (content_hash, keep_id,
@@ -167,17 +169,6 @@ def minhash_lsh_candidates(
     )
 
 
-_CC_TMP_DIRS: list = []
-
-
-def _cc_cleanup() -> None:
-    import shutil
-
-    for d in _CC_TMP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _CC_TMP_DIRS.clear()
-
-
 def connected_components(
     pairs: DataFrame,
     max_iters: int = 30,
@@ -215,18 +206,12 @@ def connected_components(
     iterative job wants anyway (labels/edges shuffle on node id each
     round — the standard large-star/small-star regime).
     """
-    import atexit
-    import tempfile
-
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     edges = edges.persist()
     spark = pairs.sparkSession
-    if not _CC_TMP_DIRS:
-        atexit.register(_cc_cleanup)
-    tmp = tempfile.mkdtemp(prefix="trembita_spark_cc_")
-    _CC_TMP_DIRS.append(tmp)
+    tmp = run_tmp("cc")
     labels = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("nmin"))

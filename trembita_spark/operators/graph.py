@@ -140,32 +140,7 @@ def bfs(edges: DataFrame, sources: DataFrame, max_hops: int = 4) -> DataFrame:
         .select("node", F.lit(0).alias("dist"))
         .localCheckpoint(eager=True)
     )
-    levels = [(l0.select("node"), l0.count())]
-    dist_parts = [l0]
-    frontier, n_frontier = levels[0]
-    for hop in range(1, max_hops + 1):
-        fb = _known_small(frontier, n_frontier)
-        visited = levels[0][0]
-        for lvl, _n in levels[1:]:
-            visited = visited.unionByName(lvl)
-        n_visited = sum(n for _lvl, n in levels)
-        nxt = (
-            fb.join(edges, fb.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(_known_small(visited, n_visited), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        if n_nxt == 0:
-            break
-        levels.append((nxt, n_nxt))
-        dist_parts.append(nxt.select("node", F.lit(hop).alias("dist")))
-        frontier, n_frontier = nxt, n_nxt
-    dist = dist_parts[0]
-    for part in dist_parts[1:]:
-        dist = dist.unionByName(part)
-    return dist
+    return _frontier_levels(edges, l0, ["node"], max_hops)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -976,7 +951,20 @@ def seeded_bfs(
         .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
         .localCheckpoint(eager=True)
     )
-    levels = [(l0.select("seed", "node"), l0.count())]
+    return _frontier_levels(edges, l0, ["seed", "node"], max_hops)
+
+
+def _frontier_levels(
+    edges: DataFrame, l0: DataFrame, keys: list[str], max_hops: int
+) -> DataFrame:
+    """The level loop of :func:`bfs` and :func:`seeded_bfs`: from the
+    checkpointed level-0 frame (``keys`` + ``dist``), expand the last
+    frontier through ``edges`` one hop at a time, anti-join out every
+    visited key, and checkpoint each level eagerly; stops at
+    ``max_hops`` or an empty level. The last key is the node; the ones
+    before it ride along unchanged. Returns the levels unioned lazily
+    as (``keys``, dist)."""
+    levels = [(l0.select(*keys), l0.count())]
     dist_parts = [l0]
     frontier, n_frontier = levels[0]
     for hop in range(1, max_hops + 1):
@@ -987,16 +975,16 @@ def seeded_bfs(
         n_visited = sum(n for _lvl, n in levels)
         nxt = (
             fb.join(edges, fb.node == edges.src)
-            .select("seed", F.col("dst").alias("node"))
+            .select(*keys[:-1], F.col("dst").alias("node"))
             .distinct()
-            .join(_known_small(visited, n_visited), ["seed", "node"], "left_anti")
+            .join(_known_small(visited, n_visited), keys, "left_anti")
             .localCheckpoint(eager=True)
         )
         n_nxt = nxt.count()
         if n_nxt == 0:
             break
         levels.append((nxt, n_nxt))
-        dist_parts.append(nxt.select("seed", "node", F.lit(hop).alias("dist")))
+        dist_parts.append(nxt.select(*keys, F.lit(hop).alias("dist")))
         frontier, n_frontier = nxt, n_nxt
     dist = dist_parts[0]
     for part in dist_parts[1:]:

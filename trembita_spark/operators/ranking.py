@@ -3,12 +3,14 @@
 Global ORDER BY windows (`row_number()/ntile() OVER (ORDER BY ...)` with
 no PARTITION BY) funnel every row through ONE task — the classic
 100×-scale killer. These operators compute the same results through the
-distributed prefix-sum in :meth:`trembita_spark.pipeline.Pipeline.
-zip_with_index` (range-partition on the sort key → partition-local
-row_number → broadcast per-partition offsets), so the data path never
-collapses to a single partition; only the ≤ num_partitions-row offsets
-frame is serial (reference: the CanSort/ranking operator family,
-SURVEY.md §3.1 — unverified).
+distributed prefix sum :func:`prefix_sum_multi` (range-partition on the
+sort key → partition-local running sum → broadcast per-partition
+offsets), so the data path never collapses to a single partition; only
+the ≤ num_partitions-row offsets frame is serial. It is the one
+two-phase prefix implementation in the package:
+``Pipeline.zip_with_index`` is its prefix sum of the constant 1
+(reference: the CanSort/ranking operator family, SURVEY.md §3.1 —
+unverified).
 """
 
 from __future__ import annotations
@@ -74,8 +76,8 @@ def prefix_sum(
     range_key: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Distributed EXACT prefix sum of ``value_col`` under a unique total
-    order — the general-value sibling of ``Pipeline.zip_with_index``
-    (which is prefix_sum of the constant 1).
+    order. ``Pipeline.zip_with_index`` is this prefix sum of the
+    constant 1, minus 1.
 
     Shape: range-partition by the order key, partition-local running-sum
     window, per-partition totals cumulated on the (tiny, one row per
@@ -148,7 +150,8 @@ def prefix_sum_multi(
     # exchange independently, and under AQE the two executions can
     # coalesce partitions DIFFERENTLY, misaligning the __pid spaces
     # (silent duplicate/skipped prefix positions — caught at the 8x
-    # replica, r12 extras2 sweep; see pipeline.zip_with_index). The
+    # replica, r12 extras2 sweep, where q_sample_systematic and
+    # q_ml_lift_deciles value-diverged nondeterministically). The
     # lazy localCheckpoint freezes one partitioning for both consumers.
     # (plan_debug.capture is a no-op unless the plan audits enable it —
     # the barrier hides phase 1 from the consumer's explain; see module.)

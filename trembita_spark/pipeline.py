@@ -33,7 +33,6 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from trembita_spark.errors import SchemaError
 
@@ -272,47 +271,17 @@ class Pipeline:
     def zip_with_index(self, order_by: Sequence[Column | str], name: str = "idx") -> "Pipeline":
         """``zipWithIndex``: 0-based index under an EXPLICIT total order.
 
-        Implementation avoids the classic single-partition window
-        bottleneck: rows are range-partitioned by the sort key via a
-        partition-local row_number plus per-partition offsets computed from
-        partition counts (two narrow passes + one tiny broadcast), so it
-        scales to arbitrarily large inputs.
+        The distributed prefix sum of the constant 1
+        (:func:`trembita_spark.operators.ranking.prefix_sum`), minus 1:
+        range-partition on the sort key, partition-local running count,
+        per-partition offsets broadcast back — no single-partition
+        window on the data path, so it scales to arbitrarily large
+        inputs.
         """
-        # Simple, scalable formulation: global index = rank over the total
-        # order. With unique sort keys row_number over a NON-partitioned
-        # window is correct but single-partition; instead sort-partition
-        # then compose partition offsets.
-        df = self._df.repartitionByRange(*[_as_column(c) for c in order_by])
-        df = df.sortWithinPartitions(*[_as_column(c) for c in order_by])
-        df = df.withColumn("__pid", F.spark_partition_id())
-        df = df.withColumn(
-            "__local",
-            F.row_number().over(
-                Window.partitionBy("__pid").orderBy(*[_as_column(c) for c in order_by])
-            ),
-        )
-        # BARRIER — the frame below is consumed TWICE (the offsets agg
-        # and the join back), and without a materialization each branch
-        # re-executes the range exchange independently: under AQE the
-        # two executions can coalesce partitions DIFFERENTLY, so the
-        # __pid spaces diverge and offsets misalign — positions silently
-        # duplicate/skip. Caught at the 8x replica (q_sample_systematic
-        # and q_ml_lift_deciles value-diverged nondeterministically,
-        # r12 extras2 sweep); the lazy localCheckpoint freezes one
-        # partitioning for both consumers. plan_debug.capture is a no-op
-        # unless the plan audits enable it (the barrier hides this phase
-        # from the consumer's explain).
-        from trembita_spark import plan_debug
+        from trembita_spark.operators.ranking import prefix_sum
 
-        df = plan_debug.capture(df).localCheckpoint(eager=False)
-        counts = df.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-        w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = counts.withColumn("__off", F.coalesce(F.sum("__n").over(w), F.lit(0)))
-        joined = df.join(F.broadcast(offsets.select("__pid", "__off")), "__pid")
-        out = joined.withColumn(name, (F.col("__off") + F.col("__local") - 1)).drop(
-            "__pid", "__local", "__off"
-        )
-        return self._wrap(out)
+        out = prefix_sum(self._df.withColumn("__one", F.lit(1)), "__one", order_by, name)
+        return self._wrap(out.withColumn(name, F.col(name) - 1).drop("__one"))
 
     def zip(self, other: "Pipeline | DataFrame", order_by_self: Sequence[Column | str], order_by_other: Sequence[Column | str]) -> "Pipeline":
         """``zip`` (CanZip): pairwise by position under explicit orders on

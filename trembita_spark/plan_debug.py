@@ -1,7 +1,8 @@
 """Test-only capture of pre-checkpoint lineage for plan audits.
 
 The two-phase prefix machinery (``operators/ranking.py`` prefix_sum_multi,
-``pipeline.py`` zip_with_index) ends its first phase in a LAZY
+which ``Pipeline.zip_with_index`` and every other positional operator
+call) ends its first phase in a LAZY
 ``localCheckpoint`` — required for correctness: the frame is consumed by
 two branches, and without the barrier AQE can coalesce the range exchange
 DIFFERENTLY per branch, misaligning the ``__pid`` spaces (caught at the 8x
@@ -12,7 +13,7 @@ pin the phase-1 shape (data rides a rangepartitioning exchange,
 no longer see it from the consumer's ``explain``.
 
 This hook lets the audits inspect exactly what production executes: when
-enabled, the prefix machinery appends the pre-checkpoint DataFrame
+enabled, prefix_sum_multi appends the pre-checkpoint DataFrame
 (whose plan IS the plan the barrier materializes) to the capture list
 just before checkpointing. Off by default — production keeps no
 references.

@@ -4,11 +4,17 @@ Locally the unbounded source is the parquet-backed ``events`` table read
 as a file stream (the driver fixture); on a cluster the same pipeline
 reads ``format("kafka")`` / ``format("rate")`` — only this module
 changes, the transformations are shared with batch.
+
+Every streaming query the package starts runs through :func:`run_query`:
+one availableNow start under the query's own conf, one wait, one stop,
+and an exception when the run fails or times out.
+:func:`run_to_completion` is its memory-sink form.
 """
 
 from __future__ import annotations
 
 import threading
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,7 +23,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from trembita_spark.streaming.pbcompat import ship_worker_env
 
-# Serializes the set/start()/restore window in start_query.
+# Serializes the set/start()/restore window in run_query.
 # Sessions are JVM singletons shared by every thread in the process, and
 # a streaming query clones the session's SQL conf inside start(): a
 # query started while another thread's per-query conf is set would
@@ -89,7 +95,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Per-query SQL conf for a transformWithState query, passed as
-# ``run_to_completion(conf=TWS_CONF)``: TWS requires the RocksDB state
+# ``run_query(conf=TWS_CONF)``: TWS requires the RocksDB state
 # store. Its state partitions follow the session's parallelism, like
 # every other stateful operator's: at local[4], 8 partitions ran slower
 # than 4.
@@ -99,33 +105,93 @@ TWS_CONF = {
     ),
 }
 
+# How long run_query waits for a query before raising TimeoutError.
+_TIMEOUT_S = 300
 
-def start_query(
+
+def run_query(
     spark: SparkSession,
     writer: DataStreamWriter,
     conf: dict[str, str] | None = None,
+    idle_stop: int | None = None,
 ) -> StreamingQuery:
-    """``writer.start()`` with ``conf`` applied to this query only.
+    """Start ``writer`` with ``trigger(availableNow=True)``, wait for it
+    to finish and stop it; returns the stopped query. Every streaming
+    query the package starts goes through here, and only availableNow
+    runs are supported: the query drains what the source holds when it
+    starts, then ends.
 
-    Spark clones the session's SQL conf inside ``start()`` and pins the
-    state partition count and state-store provider in the query's
-    checkpoint, so ``conf`` is set on the session under
-    :data:`session_conf_lock` only around ``start()`` and restored as
-    soon as it returns. Every streaming start in the package goes through
-    here and takes the lock, so no query inherits another's ``conf``."""
-    conf = conf or {}
+    Conf: the query runs with ``spark.sql.shuffle.partitions`` set to
+    the session's ``defaultParallelism`` (its core count locally),
+    whatever the session's own shuffle setting is: a bare builder's
+    default is 200. Every stateful operator loads and commits one state
+    store per partition per micro-batch, even for the empty availableNow
+    flush batch, so partitions beyond the cores that run them only add
+    fixed cost. Partition count only changes hash placement of keys,
+    never results. ``conf`` (e.g. :data:`TWS_CONF`) goes on top. Spark
+    clones the session's SQL conf inside ``start()`` and pins the state
+    partition count and provider in the checkpoint, so the conf is set
+    on the session under :data:`session_conf_lock` only around
+    ``start()`` and restored as soon as it returns.
+
+    Waiting: ``awaitTermination``, or with ``idle_stop`` a poll of
+    ``lastProgress`` that returns as soon as a ZERO-input batch with
+    batchId >= ``idle_stop`` has committed. A query with registered
+    processing-time timers never ends by itself under availableNow
+    (pending timers keep it active); once the flush batch after every
+    staged data batch has run, nothing more can emit (no new data
+    arrives, and the caller guarantees the timers that could still fire
+    do not change the content).
+
+    Errors: a query that fails re-raises its
+    ``StreamingQueryException``, from either wait. A query still running
+    after the timeout raises ``TimeoutError`` naming it. The query is
+    stopped on every path, so none outlives the call."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+        **(conf or {}),
+    }
     with session_conf_lock:
         prev = {k: spark.conf.get(k, None) for k in conf}
         for k, v in conf.items():
             spark.conf.set(k, v)
         try:
-            return writer.start()
+            q = writer.trigger(availableNow=True).start()
         finally:
             for k, v in prev.items():
                 if v is None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
+    try:
+        if idle_stop is None:
+            done = q.awaitTermination(_TIMEOUT_S)
+        else:
+            done = _idle_or_ended(q, idle_stop)
+        if not done:
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} still running after {_TIMEOUT_S} s"
+            )
+        err = q.exception()
+        if err is not None:
+            raise err
+    finally:
+        q.stop()
+    return q
+
+
+def _idle_or_ended(q: StreamingQuery, idle_stop: int) -> bool:
+    """Poll ``q`` until it ends or commits a zero-input batch with
+    batchId >= ``idle_stop``; False if the timeout passes first."""
+    deadline = time.monotonic() + _TIMEOUT_S
+    while q.isActive:
+        lp = q.lastProgress
+        if lp is not None and lp["numInputRows"] == 0 and lp["batchId"] >= idle_stop:
+            return True
+        if time.monotonic() >= deadline:
+            return False
+        time.sleep(0.25)
+    return True
 
 
 def run_to_completion(
@@ -138,66 +204,16 @@ def run_to_completion(
     """Drive a streaming DataFrame over the (finite) local fixture to
     completion into a memory sink; returns the result as a batch
     DataFrame. This is the 'streaming proof' harness: same logical plan,
-    real micro-batch execution.
-
-    State partitions: the query's ``spark.sql.shuffle.partitions`` is the
-    session's ``defaultParallelism`` (its core count locally), whatever
-    the session's own shuffle setting is: a bare builder's default is
-    200. Every stateful operator loads and commits one state store per
-    partition per micro-batch, even for the empty availableNow flush
-    batch, so partitions beyond the cores that run them only add fixed
-    cost. Partition count only changes hash placement of keys, never
-    results; the oracle parity suite covers every streaming key.
-
-    ``conf``: SQL conf for this query only, e.g. :data:`TWS_CONF`; it
-    overrides the partition count above if it sets one. See
-    :func:`start_query`.
+    real micro-batch execution. ``conf`` and ``idle_stop`` are
+    :func:`run_query`'s.
 
     The memory sink registers its rows as a temp view named
     ``query_name``; the view is dropped before returning, so a
     long-lived session does not keep every run's rows. The returned
-    frame holds the sink and stays readable.
-
-    ``idle_stop``: a query with REGISTERED processing-time timers never
-    self-terminates under availableNow (pending timers keep it active),
-    so ``awaitTermination(300)`` burns the full timeout doing nothing.
-    When set, the driver instead polls ``lastProgress`` and stops the
-    query as soon as a ZERO-input batch with batchId >= ``idle_stop``
-    has committed — i.e. the availableNow flush batch ran after every
-    staged data batch, which is exactly the state the 300-second wait
-    would have stopped in. Content-deterministic: nothing after the
-    flush batch can emit (no new data arrives and the timers that could
-    still fire are, by the caller's construction, content-irrelevant)."""
-    import time as _time
-
+    frame holds the sink and stays readable."""
     spark = df.sparkSession
-    writer = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    parts = str(spark.sparkContext.defaultParallelism)
-    q = start_query(
-        spark, writer, {"spark.sql.shuffle.partitions": parts, **(conf or {})}
-    )
-    try:
-        if idle_stop is not None:
-            deadline = _time.time() + 300
-            while q.isActive and _time.time() < deadline:
-                lp = q.lastProgress
-                if (
-                    lp is not None
-                    and lp["numInputRows"] == 0
-                    and lp["batchId"] >= idle_stop
-                ):
-                    break
-                _time.sleep(0.25)
-        else:
-            q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    writer = df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
+    run_query(spark, writer, conf, idle_stop)
     out = spark.table(query_name)
     spark.catalog.dropTempView(query_name)
     return out
