@@ -8,8 +8,11 @@ from __future__ import annotations
 
 import os
 import re
+import threading
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 
 from tests.conftest import SF_DIR
 from trembita_spark import contract
@@ -18,27 +21,56 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 contract.load_all()
 
+_PHASE1 = threading.local()
+_PHASE1_LOCK = threading.Lock()
+_PHASE1_USERS = 0
+_LOCAL_CHECKPOINT = _ClassicDataFrame.localCheckpoint
+
+
+def _recording_local_checkpoint(self, *args, **kwargs):
+    frames = getattr(_PHASE1, "frames", None)
+    if frames is not None and "__pid" in self.columns:
+        frames.append(self)
+    return _LOCAL_CHECKPOINT(self, *args, **kwargs)
+
+
+@contextmanager
+def phase1_frames():
+    """Record, on this thread, every frame that carries the ``__pid``
+    phase-1 marker of ``ranking.prefix_sum_multi`` as it is
+    localCheckpoint-ed. That lazy checkpoint (the AQE partition-space
+    barrier) truncates the consumer's explain to a Scan ExistingRDD, so
+    the recorded frames are how the audits see the phase-1 plan that
+    production executes. ``localCheckpoint`` is wrapped while any thread
+    is inside the block; threads record independently."""
+    global _PHASE1_USERS
+    with _PHASE1_LOCK:
+        if _PHASE1_USERS == 0:
+            _ClassicDataFrame.localCheckpoint = _recording_local_checkpoint
+        _PHASE1_USERS += 1
+    _PHASE1.frames = frames = []
+    try:
+        yield frames
+    finally:
+        _PHASE1.frames = None
+        with _PHASE1_LOCK:
+            _PHASE1_USERS -= 1
+            if _PHASE1_USERS == 0:
+                _ClassicDataFrame.localCheckpoint = _LOCAL_CHECKPOINT
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
 
 def plan_of(key: str, spark) -> str:
-    """Executed-plan text for a contract key, INCLUDING pre-checkpoint
-    lineage: the two-phase prefix machinery ends phase 1 in a lazy
-    localCheckpoint (AQE partition-space barrier, r12), which truncates
-    the consumer's explain to a Scan ExistingRDD — plan_debug.capture
-    hands the audits the phase-1 frame so rangepartitioning/__pid-window
-    pins keep auditing what production actually executes."""
-    from trembita_spark import plan_debug
-
-    plan_debug.enable()
-    try:
+    """Executed-plan text for a contract key, INCLUDING the phase-1
+    frames of the two-phase prefix machinery (:func:`phase1_frames`),
+    so rangepartitioning/__pid-window pins keep auditing what
+    production actually executes."""
+    with phase1_frames() as captured:
         df = contract.QUERIES[key](spark, SF_DIR)
-        plans = [df._jdf.queryExecution().executedPlan().toString()]
-        plans += [
-            d._jdf.queryExecution().executedPlan().toString()
-            for d in plan_debug.captured()
-        ]
-    finally:
-        plan_debug.disable()
-    return "\n".join(plans)
+        return "\n".join([_executed(df)] + [_executed(d) for d in captured])
 
 
 def optimized_of(key: str, spark) -> str:
@@ -1063,7 +1095,7 @@ def test_low_card_window_audit_catches_planted_regression(spark):
 # sweeping audits below each built ALL ~490 non-stream keys' plans
 # serially (the eager-checkpoint graph keys execute their traversals
 # during build) — 290 s + 160 s in the unsharded lane. Plans are
-# independent Spark jobs and plan_debug's capture is thread-local, so
+# independent Spark jobs and phase1_frames records per thread, so
 # one session fixture builds every plan once through a small pool and
 # both audits read the cache. Same plan text, same assertions.
 # ---------------------------------------------------------------------
@@ -1085,24 +1117,14 @@ def registry_plans(spark):
             # scalar-bounds cross joins were never in its scope — the
             # barrier hid them); the low-card audit reads the full text
             # as before via plan_of.
-            from trembita_spark import plan_debug
-
-            plan_debug.enable()
             try:
-                df = contract.QUERIES[key](spark, SF_DIR)
-                final = df._jdf.queryExecution().executedPlan().toString()
-                full = "\n".join(
-                    [final]
-                    + [
-                        d._jdf.queryExecution().executedPlan().toString()
-                        for d in plan_debug.captured()
-                    ]
-                )
+                with phase1_frames() as captured:
+                    df = contract.QUERIES[key](spark, SF_DIR)
+                    final = _executed(df)
+                    full = "\n".join([final] + [_executed(d) for d in captured])
                 return key, (final, full, None)
             except Exception as e:
                 return key, (None, None, str(e))
-            finally:
-                plan_debug.disable()
 
         with ThreadPoolExecutor(max_workers=8) as ex:
             for key, v in ex.map(one, keys):
@@ -1279,8 +1301,8 @@ def test_driver_sample_plans_pinned(spark):
         sample = sorted(json.load(f))
     # Plan builds are independent Spark jobs (the graph keys execute
     # their eager-checkpoint traversals during build — this was the
-    # verify lane's single slowest test when serial); plan_debug's
-    # capture state is thread-local, so a small pool is safe.
+    # verify lane's single slowest test when serial); phase1_frames
+    # records per thread, so a small pool is safe.
     from concurrent.futures import ThreadPoolExecutor
 
     keys = [k for k in sample if k in contract.QUERIES]

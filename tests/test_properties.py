@@ -5,7 +5,7 @@ contract), filter composition, union cardinality."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -452,6 +452,73 @@ def test_label_propagation_matches_reference(spark, es):
     df = spark.createDataFrame(sorted(und), "src long, dst long")
     got = {r.node: r.label for r in label_propagation(df, rounds=3).collect()}
     assert got == labels
+
+
+@given(es=edges_small, cap=st.one_of(st.none(), st.integers(min_value=1, max_value=4)))
+# a self-loop and reversed duplicates on the wedge center, always run:
+# counting the loop would double deg(0) and change every score
+@example(es=[(0, 0), (0, 1), (0, 2), (1, 0), (2, 0)], cap=None)
+@example(es=[(0, 0), (0, 1), (0, 2), (1, 0), (2, 0)], cap=2)
+@settings(**SETTINGS)
+def test_link_prediction_matches_bruteforce(spark, es, cap):
+    """adamic_adar, resource_allocation and jaccard_link_prediction must
+    equal a brute-force reference on arbitrary graphs (self-loops,
+    duplicate and reversed edges included): every NON-adjacent pair
+    a < b with a common neighbour, centers of degree above the cap left
+    out. ``cap=None`` runs the first two uncapped and resource_allocation
+    at its default cap."""
+    import math
+    from itertools import combinations
+
+    from trembita_spark.operators.graph import (
+        adamic_adar,
+        jaccard_link_prediction,
+        resource_allocation,
+    )
+
+    if not es:
+        return
+    adj = {}
+    for u, v in es:
+        if u != v:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    deg = {n: len(ns) for n, ns in adj.items()}
+    ra_cap = 40 if cap is None else cap
+    lcm = math.lcm(*range(1, ra_cap + 1))
+
+    def centers(a, b, c):
+        return [z for z in adj[a] & adj[b] if c is None or deg[z] <= c]
+
+    aa, jac, ra = {}, {}, {}
+    for a, b in combinations(sorted(adj), 2):
+        if b in adj[a]:
+            continue
+        zs = centers(a, b, cap)
+        if zs:
+            aa[(a, b)] = (len(zs), sum(1.0 / math.log(deg[z]) for z in zs))
+            union = deg[a] + deg[b] - len(zs)
+            jac[(a, b)] = (len(zs), union, len(zs) / union)
+        zs = centers(a, b, ra_cap)
+        if zs:
+            # the operator's exact lane: one bigint sum, one double division
+            ra[(a, b)] = (len(zs), float(sum(lcm // deg[z] for z in zs)) / lcm)
+
+    df = spark.createDataFrame(es, "src long, dst long")
+    ra_df = resource_allocation(df) if cap is None else resource_allocation(df, cap)
+    got_aa = {(r.a, r.b): (r.common, r.score) for r in adamic_adar(df, cap).collect()}
+    got_jac = {
+        (r.a, r.b): (r.common, r.union_size, r.score)
+        for r in jaccard_link_prediction(df, cap).collect()
+    }
+    got_ra = {(r.a, r.b): (r.common, r.score) for r in ra_df.collect()}
+    assert got_jac == jac
+    assert got_ra == ra
+    # adamic_adar rounds its ln-sum to 1e-12; the sum order is the engine's
+    assert got_aa.keys() == aa.keys()
+    for pair, (common, score) in aa.items():
+        assert got_aa[pair][0] == common
+        assert abs(got_aa[pair][1] - score) <= 1e-11, pair
 
 
 @given(

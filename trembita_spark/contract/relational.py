@@ -818,6 +818,30 @@ _PR_EDGES_SQL = """
 """
 
 
+def _cust_supp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer→supplier order graph of ``_PR_EDGES_SQL``: distinct
+    (src = "c"||o_custkey, dst = "s"||l_suppkey) over lineitem⨝orders,
+    the edge fixture of the graph keys."""
+    li = table(spark, sf_dir, "lineitem")
+    od = table(spark, sf_dir, "orders")
+    return (
+        li.join(od, li.l_orderkey == od.o_orderkey)
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def _both_directions(edges: DataFrame) -> DataFrame:
+    """(src, dst) ``edges`` plus every edge reversed: the undirected
+    graph as a directed edge list."""
+    return edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
 def _pr_iter_sql(prev: str, this: str) -> str:
     # one power-method step: decimal-exact neighbor sum, double elsewhere.
     return f"""
@@ -860,16 +884,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # surface; same join-per-iteration shuffle shape.
     from trembita_spark.operators.graph import pagerank
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _cust_supp_edges(spark, sf_dir)
     pr = pagerank(edges, iters=3, damping=0.85)
     # round-12: the mass sums are order-dependent floats (rule 5); the
     # accumulated merge-order error (~1e-16) is far inside the grid.
@@ -926,16 +941,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (parity rule 5, error ~1e-16 vs a 5e-13 half-grid).
     from trembita_spark.operators.graph import hits
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _cust_supp_edges(spark, sf_dir)
     hs = hits(edges, iters=2)
     return hs.select(
         "node", F.round("hub", 12).alias("hub"), F.round("auth", 12).alias("auth")
@@ -993,16 +999,7 @@ def q_graph_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_graph_pagerank (order error ~1e-15 ≪ 5e-13 half-grid).
     from trembita_spark.operators.graph import pagerank
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _cust_supp_edges(spark, sf_dir)
     pr = pagerank(edges, iters=3, damping=0.85, redistribute_dangling=True)
     return pr.select("node", F.round("score", 12).alias("score"))
 
@@ -1139,18 +1136,8 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pagerank, traversal).
     from trembita_spark.operators.graph import bfs
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer")
-    fwd = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
     sources = cu.where(F.col("c_nationkey") == 0).select(
         F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node")
     )
@@ -1479,16 +1466,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash-partitioned on node, lineage cut per round.
     from trembita_spark.operators.graph import kcore_peel
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _cust_supp_edges(spark, sf_dir)
     return kcore_peel(edges, k=_KCORE_K, rounds=3)
 
 
@@ -1613,16 +1591,7 @@ def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string order, so the min-label tie-break is engine-stable.
     from trembita_spark.operators.graph import label_propagation
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _cust_supp_edges(spark, sf_dir)
     return label_propagation(edges, rounds=3)
 
 
@@ -2448,19 +2417,7 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is one degree agg + TakeOrdered(5).
     from trembita_spark.operators.graph import bfs, closeness  # noqa: F401
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    fwd = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
     edges = edges.localCheckpoint(eager=False)  # feeds degree + 4 BFS levels
     seeds = (
         edges.groupBy(F.col("src").alias("node"))
@@ -2566,19 +2523,7 @@ def q_graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # level; cost ∝ seeds·reached, the Brandes-Pich sampling bound.
     from trembita_spark.operators.graph import betweenness_sample
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    fwd = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
     edges = edges.localCheckpoint(eager=False)  # feeds degree + both sweeps
     seeds = (
         edges.groupBy(F.col("src").alias("node"))
@@ -2632,19 +2577,7 @@ def q_graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recurrence as a recursive CTE + min(d) per (seed, node).
     from trembita_spark.operators.graph import eccentricity
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    fwd = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
     edges = edges.localCheckpoint(eager=False)  # feeds degree + BFS levels
     seeds = (
         edges.groupBy(F.col("src").alias("node"))
@@ -2695,19 +2628,7 @@ def q_graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer into one double division, NO rounding. 100 TB: one
     # degree agg + two club-membership hash joins (the club frame is
     # high-degree nodes only — small by definition) per threshold.
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    fwd = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
     edges = edges.localCheckpoint(eager=False)  # feeds degree + pair count
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -2833,17 +2754,9 @@ def q_graph_motif_4cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded on this sparse adjacency graph; cap hubs exactly as
     # jaccard/adamic_adar do on denser inputs); everything after is one
     # hash aggregate.
-    e = (
-        _cobasket_pairs(spark, sf_dir)
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds both adjacency directions
-    )
-    adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
+    from trembita_spark.operators.graph import _both_ways, _undirected
+
+    adj = _both_ways(_undirected(_cobasket_pairs(spark, sf_dir)), "z", "n")
     left = adj.select("z", F.col("n").alias("a"))
     right = adj.select("z", F.col("n").alias("b"))
     codeg = (
@@ -3039,19 +2952,7 @@ def q_graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle replays the recurrence as a recursive CTE + min(d).
     from trembita_spark.operators.graph import harmonic_centrality
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    fwd = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
     edges = edges.localCheckpoint(eager=False)  # feeds degree + BFS levels
     seeds = (
         edges.groupBy(F.col("src").alias("node"))
@@ -3214,17 +3115,11 @@ def q_graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applied to BOTH the reported sum and the alpha). Every output row
     # carries the same scalar tail stats broadcast back — compact at
     # any scale (|distinct degrees| rows).
-    e = (
-        _cobasket_pairs(spark, sf_dir)
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
+    from trembita_spark.operators.graph import _degrees, _undirected
+
+    deg = _degrees(_undirected(_cobasket_pairs(spark, sf_dir))).select(
+        "node", F.col("deg").alias("d")
     )
-    adj = e.select(F.col("u").alias("node")).unionAll(
-        e.select(F.col("v").alias("node"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     deg = deg.localCheckpoint(eager=False)  # feeds histogram + tail
     hist = deg.groupBy("d").agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
     tail = deg.where(F.col("d") >= 4).agg(
@@ -3306,17 +3201,8 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and its teleport vector ride a broadcast.
     from trembita_spark.operators.graph import personalized_pagerank
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds seed + nodes + outdeg + 3 iters
-    )
+    # feeds seed + nodes + outdeg + 3 iters
+    edges = _cust_supp_edges(spark, sf_dir).localCheckpoint(eager=False)
     seed = edges.agg(
         F.concat(
             F.lit("c"),
@@ -3371,16 +3257,7 @@ def q_graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB: same co-partitioned join-per-iteration shape as pagerank.
     from trembita_spark.operators.graph import katz_centrality
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _cust_supp_edges(spark, sf_dir)
     kz = katz_centrality(edges, iters=3, beta=0.1)
     return kz.select("node", F.round("score", 12).alias("score"))
 
@@ -3444,17 +3321,8 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label-keyed aggregates and one broadcast m.
     from trembita_spark.operators.graph import label_propagation
 
-    li = table(spark, sf_dir, "lineitem")
-    od = table(spark, sf_dir, "orders")
-    edges = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds LPA + m + within + degrees
-    )
+    # feeds LPA + m + within + degrees
+    edges = _cust_supp_edges(spark, sf_dir).localCheckpoint(eager=False)
     labels = label_propagation(edges, rounds=3)
     labels = labels.localCheckpoint(eager=False)  # feeds within + d_c
     m = edges.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
@@ -3521,18 +3389,13 @@ def q_graph_centralization(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate over the canonical u<v distinct edge set of the SHARED
     # persisted co-basket frame); one double
     # division — NO rounding. 100 TB: one edge-frame aggregate.
-    pairs = _cobasket_pairs(spark, sf_dir)
-    canon = pairs.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).distinct()
-    b0 = canon.select(F.col("u").alias("node")).unionAll(
-        canon.select(F.col("v").alias("node"))
-    )
-    deg = b0.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    from trembita_spark.operators.graph import _degrees, _undirected
+
+    deg = _degrees(_undirected(_cobasket_pairs(spark, sf_dir)))
     m = deg.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.max("d").cast("bigint").alias("dmax"),
-        F.sum("d").cast("bigint").alias("dsum"),
+        F.max("deg").cast("bigint").alias("dmax"),
+        F.sum("deg").cast("bigint").alias("dsum"),
     )
     return m.select(
         "n",
@@ -3804,29 +3667,11 @@ def q_graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shrink. At 100 TB this is |V|+|E| keyed work per round, no
     # all-pairs anywhere; for deep DAGs switch to the pointer-jumping
     # longest-path form (O(log d) rounds like q_dedup_clusters).
-    from trembita_spark.contract import table as _t
+    from trembita_spark.operators.graph import _oriented, _undirected
 
-    e0 = _cobasket_pairs(spark, sf_dir).select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).where(F.col("u") != F.col("v")).distinct()
-    deg = (
-        e0.select(F.col("u").alias("node"))
-        .unionAll(e0.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
     ed = (
-        e0.join(F.broadcast(du), "u")
-        .join(F.broadcast(dv), "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("x"),
-        )
+        _oriented(_undirected(_cobasket_pairs(spark, sf_dir)), broadcast=True)
+        .select("a", "x")
         .localCheckpoint(eager=False)
     )
     nodes = (

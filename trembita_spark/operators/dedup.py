@@ -348,6 +348,25 @@ def ngram_jaccard_pairs(
     (``md5(shingle) < sample_prefix`` keeps ~prefix/16 of shingles — a
     content-keyed sample, reproducible with no RNG). Pairs come from the
     sampled-shingle inverted index (shared-shingle join), never all-pairs."""
+    return (
+        _shingle_overlap(df, text_col, id_col, k, sample_prefix)
+        .withColumn(
+            "jaccard",
+            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+        )
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select("doc_a", "doc_b", "inter", "jaccard")
+    )
+
+
+def _shingle_overlap(
+    df: DataFrame, text_col: str, id_col: str, k: int, sample_prefix: str
+) -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b) for every doc pair a < b that
+    shares a sampled k-shingle: the sample keeps shingles with
+    ``md5(shingle) < sample_prefix``, ``inter`` counts the shared ones
+    and ``sz_*`` each doc's sample size. Pairs come from the
+    shared-shingle join, never all-pairs."""
     sh = shingles_expr(text_col, k)
     doc_sh = (
         df.select(F.col(id_col).alias("doc_id"), F.explode(sh).alias("sh"))
@@ -362,17 +381,10 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
+    return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "inter", "jaccard")
     )
-    return out
 
 
 def incremental_dedup(
@@ -445,23 +457,8 @@ def containment_pairs(
     deterministic md5-prefix shingle sample and the inverted-index
     (shared-shingle) join — pair work ∝ Σ shingle-posting², never
     all-pairs."""
-    sh = shingles_expr(text_col, k)
-    doc_sh = (
-        df.select(F.col(id_col).alias("doc_id"), F.explode(sh).alias("sh"))
-        .filter(F.md5("sh") < sample_prefix)
-        .distinct()
-    )
-    sizes = doc_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = doc_sh.alias("a")
-    b = doc_sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
+        _shingle_overlap(df, text_col, id_col, k, sample_prefix)
         .withColumn("cont_ab", F.col("inter") / F.col("sz_a"))
         .withColumn("cont_ba", F.col("inter") / F.col("sz_b"))
         .filter(F.greatest("cont_ab", "cont_ba") >= min_containment)

@@ -28,12 +28,146 @@ consistent-across-engines convention. ``redistribute_dangling=True``
 switches to the sum-preserving convention (each step spreads the
 dangling mass uniformly); both variants are oracle-checked
 (`q_graph_pagerank`, `q_graph_pagerank_dangling`).
+
+Shared frames: every operator builds its input through one of the
+private builders below, so the way an edge list becomes the frames an
+algorithm iterates over is decided once. ``_directed`` gives the
+checkpointed (src, dst) edges and node set for the walk/score
+recurrences (pagerank, hits, personalized pagerank, katz).
+``_undirected`` gives the canonical edge set (u < v, distinct,
+self-loops dropped) for everything that treats the graph as undirected;
+``_both_ways``, ``_degrees`` and ``_oriented`` derive its doubled
+adjacency, node degrees and degree-ordered DAG, and ``_wedges`` /
+``_non_adjacent`` the common-neighbour pairs of the link predictors.
+The BFS family (bfs, seeded_bfs, betweenness_sample) and sssp need no
+node set and only checkpoint their edge projection.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _directed(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(edges, nodes): the directed (src, dst) frame and its distinct
+    ``node`` set, both lazily checkpointed — every iteration of the
+    recurrences reads them again (module docstring)."""
+    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return edges, nodes
+
+
+def _out_degree(edges: DataFrame) -> DataFrame:
+    """(o_node, outdeg) of directed edges, lazily checkpointed."""
+    return (
+        edges.groupBy(F.col("src").alias("o_node"))
+        .agg(F.count(F.lit(1)).alias("outdeg"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _in_mass(edges: DataFrame, scores: DataFrame, outdeg: DataFrame) -> DataFrame:
+    """(dst, in_mass) = Σ_{u→dst} score(u)/outdeg(u): one pagerank step's
+    neighbour mass."""
+    return (
+        edges.join(scores, edges.src == scores.node)
+        .join(F.broadcast(outdeg), edges.src == F.col("o_node"))
+        .select(
+            F.col("dst"),
+            (F.col("score") / F.col("outdeg")).alias("contrib"),
+        )
+        .groupBy("dst")
+        .agg(F.sum("contrib").alias("in_mass"))
+    )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Canonical undirected edge set (u, v) of (src, dst) edges: u < v,
+    one row per edge, self-loops dropped, lazily checkpointed (every
+    caller reads it more than once)."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _both_ways(e: DataFrame, x: str, y: str) -> DataFrame:
+    """Both directions of canonical edges as (``x``, ``y``) rows."""
+    return e.select(F.col("u").alias(x), F.col("v").alias(y)).unionAll(
+        e.select(F.col("v").alias(x), F.col("u").alias(y))
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, deg) over canonical edges."""
+    return (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _oriented(e: DataFrame, broadcast: bool = False) -> DataFrame:
+    """Degree-ordered orientation (a, x, dx) of canonical edges: each
+    edge points from its lower-(degree, id) endpoint a to the higher one
+    x, whose degree is dx. The result is a DAG, and every triangle has
+    exactly one apex whose two edges both point outward. ``broadcast``
+    hints the two |V|-row degree frames."""
+    B = F.broadcast if broadcast else (lambda df: df)
+    deg = _degrees(e)
+    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
+    lower_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    return (
+        e.join(B(du), "u")
+        .join(B(dv), "v")
+        .select(
+            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("x"),
+            F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("dx"),
+        )
+    )
+
+
+def _wedges(
+    e: DataFrame, max_center_degree: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """Common-neighbour wedges of canonical edges and the degree frame:
+    (a, b, deg) for every center z adjacent to both a < b, with deg =
+    deg(z) and centers above ``max_center_degree`` left out; plus the
+    uncapped (z, deg). Wedge fan-out at z is deg(z)², which is what the
+    cap bounds (adamic_adar)."""
+    adj = _both_ways(e, "z", "n")
+    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
+    capped = deg
+    if max_center_degree is not None:
+        capped = deg.where(F.col("deg") <= max_center_degree)
+    centers = adj.join(capped, "z")
+    left = centers.select("z", F.col("n").alias("a"), "deg")
+    right = centers.select("z", F.col("n").alias("b"))
+    return left.join(right, "z").where(F.col("a") < F.col("b")), deg
+
+
+def _non_adjacent(pairs: DataFrame, e: DataFrame) -> DataFrame:
+    """``pairs`` (a, b) minus the pairs that are canonical edges."""
+    return pairs.join(
+        e,
+        (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
+        "left_anti",
+    )
 
 
 def pagerank(
@@ -52,31 +186,14 @@ def pagerank(
     The dangling mass is a single-row aggregate (anti join scores ⟕̸
     outdeg → sum) broadcast back onto the update — one extra tiny-side
     shuffle per iteration, nothing proportional to |E|."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges, nodes = _directed(edges)
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
-    outdeg = edges.groupBy(F.col("src").alias("o_node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
+    outdeg = _out_degree(edges)
     scores = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", "n", (F.lit(1.0) / F.col("n")).alias("score")
     )
     for _ in range(iters):
-        contrib = (
-            edges.join(scores, edges.src == scores.node)
-            .join(F.broadcast(outdeg), edges.src == F.col("o_node"))
-            .select(
-                F.col("dst"),
-                (F.col("score") / F.col("outdeg")).alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
+        contrib = _in_mass(edges, scores, outdeg)
         updated = scores.join(contrib, scores.node == contrib.dst, "left")
         if redistribute_dangling:
             dangling = (
@@ -164,35 +281,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     because the supplier graph saturates). The closing check runs
     against the canonical u<v edge set via one semi join.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused 3x: degrees, wedges, close
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    # orient low-(deg, id) → high-(deg, id)
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("x"),
-            F.when(lower_first, F.col("dv")).otherwise(F.col("du")).alias("dx"),
-        )
-    )
+    e = _undirected(edges)  # reused 3x: degrees, wedges, close
+    oriented = _oriented(e)
     o1 = oriented.select("a", F.col("x").alias("b"), F.col("dx").alias("db"))
     o2 = oriented.select("a", F.col("x").alias("c"), F.col("dx").alias("dc"))
     # each unordered out-pair once: (deg, id) order between b and c
@@ -240,14 +330,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     checkpoints cost a scheduler round-trip each, measurably dominant
     at small |E|). Unlike bfs(), no per-round isEmpty() forces eager
     evaluation here."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges)
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -349,12 +432,9 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     min(struct(-count, label)) aggregate (no window — the second agg is
     co-partitioned with the first on node). Lineage cut per round with
     LAZY localCheckpoints (see kcore_peel's rationale)."""
-    und = edges.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).where(F.col("u") != F.col("v")).distinct()
-    both = und.select(F.col("u").alias("node"), F.col("v").alias("peer")).unionAll(
-        und.select(F.col("v").alias("node"), F.col("u").alias("peer"))
-    ).localCheckpoint(eager=True)  # reused 1+rounds x
+    both = _both_ways(_undirected(edges), "node", "peer").localCheckpoint(
+        eager=True
+    )  # reused 1+rounds x
     labels = both.select("node").distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -403,35 +483,15 @@ def adamic_adar(
     (u < v); the non-adjacency filter is one anti join against that
     canonical edge set.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency + anti join
-    )
-    adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    if max_center_degree is not None:
-        deg = deg.where(F.col("deg") <= max_center_degree)
-    centers = adj.join(deg, "z")
-    left = centers.select("z", F.col("n").alias("a"), "deg")
-    right = centers.select("z", F.col("n").alias("b"))
-    wedges = left.join(right, "z").where(F.col("a") < F.col("b"))
+    e = _undirected(edges)  # reused: adjacency + anti join
+    wedges, _deg = _wedges(e, max_center_degree)
     pairs = wedges.groupBy("a", "b").agg(
         F.count(F.lit(1)).alias("common"),
         F.round(F.sum(F.lit(1.0) / F.log(F.col("deg").cast("double"))), 12).alias(
             "score"
         ),
     )
-    return pairs.join(
-        e,
-        (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
-        "left_anti",
-    )
+    return _non_adjacent(pairs, e)
 
 
 def resource_allocation(
@@ -454,23 +514,8 @@ def resource_allocation(
     lcm = 1
     for i in range(1, max_center_degree + 1):
         lcm = lcm * i // math.gcd(lcm, i)
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency + anti join
-    )
-    adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    deg = deg.where(F.col("deg") <= max_center_degree)
-    centers = adj.join(deg, "z")
-    left = centers.select("z", F.col("n").alias("a"), "deg")
-    right = centers.select("z", F.col("n").alias("b"))
-    wedges = left.join(right, "z").where(F.col("a") < F.col("b"))
+    e = _undirected(edges)  # reused: adjacency + anti join
+    wedges, _deg = _wedges(e, max_center_degree)
     pairs = wedges.groupBy("a", "b").agg(
         F.count(F.lit(1)).alias("common"),
         (
@@ -478,11 +523,7 @@ def resource_allocation(
             / F.lit(float(lcm))
         ).alias("score"),
     )
-    return pairs.join(
-        e,
-        (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
-        "left_anti",
-    )
+    return _non_adjacent(pairs, e)
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -501,17 +542,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     products stay below 2⁵³ (integers convert exactly; past that the
     coefficient itself has no meaningful ulps left).
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency both directions
-    )
-    adj = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        e.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
+    adj = _both_ways(_undirected(edges), "a", "b")
     deg = adj.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     cover = (
         adj.join(deg.select(F.col("a"), F.col("deg").alias("da")), "a")
@@ -548,20 +579,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     coefficient is one integer-over-integer double division —
     correctly rounded in both engines, no rounding needed.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: degrees + triangle pass
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    )
+    e = _undirected(edges)  # reused: degrees + triangle pass
+    deg = _degrees(e)
     tri = triangle_count(e.select(F.col("u").alias("src"), F.col("v").alias("dst")))
     out = deg.where(F.col("deg") >= 2).join(tri, "node", "left")
     t = F.coalesce(F.col("triangles"), F.lit(0)).cast("bigint")
@@ -590,20 +609,15 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     (hash-co-partitioned across iterations) + two groupBy aggregates;
     the normalizing totals are single-row aggregates broadcast back
     (nothing proportional to |E| crosses the driver). k is small and
-    fixed → unrolled plan, no checkpoint needed (pagerank's rationale).
+    fixed → unrolled plan. The edges and node set are lazily
+    checkpointed (``_directed``): every iteration reads each of them
+    twice, and each normalizing total is a broadcast job that would
+    otherwise re-execute the whole derivation subtree (pagerank's
+    rationale, module docstring).
     """
     if iters < 1:
         raise ValueError(f"hits() requires iters >= 1, got {iters}")
-    # Lazy lineage cuts: every iteration reads e twice and nodes twice,
-    # and each normalizing total is a broadcast job that would otherwise
-    # re-execute the whole derivation subtree (module docstring).
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _directed(edges)
     h = nodes.select("node", F.lit(1.0).alias("hub"))
     a = None
     for _ in range(iters):
@@ -664,25 +678,7 @@ def _triangles(e: DataFrame, broadcast_adjacency: bool = False) -> DataFrame:
     pagerank; nothing here is ever all-pairs.
     """
     B = F.broadcast if broadcast_adjacency else (lambda df: df)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        e.join(B(du), "u")
-        .join(B(dv), "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("x"),
-        )
-    )
+    oriented = _oriented(e, broadcast_adjacency)
     adj = oriented.groupBy("a").agg(F.collect_list("x").alias("nb"))
     with_nbrs = (
         oriented.join(
@@ -752,14 +748,7 @@ def ktruss_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     shrink monotonically. The support frame is lazily
     localCheckpoint-ed per round (one row per surviving edge) so the
     288M-probe initial intersect never re-executes."""
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges)
     # One scalar count on the (about-to-be-materialized-anyway)
     # checkpointed frame decides the local-vs-cluster join strategy:
     # under 5M edges the adjacency/removed/delta frames are driver-safe
@@ -767,11 +756,9 @@ def ktruss_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     # scans report none); above it everything stays hash-partitioned.
     small = e.count() <= 5_000_000
     B = F.broadcast if small else (lambda df: df)
-    both = e.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
-        e.select(F.col("v").alias("n"), F.col("u").alias("m"))
-    )
     adj = (
-        both.groupBy("n")
+        _both_ways(e, "n", "m")
+        .groupBy("n")
         .agg(F.array_sort(F.collect_list("m")).alias("nb"))
         .localCheckpoint(eager=False)
     )
@@ -854,30 +841,10 @@ def jaccard_link_prediction(
     semantics); the per-endpoint degrees join back via two broadcastable
     aggregate frames keyed on the node id.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency + anti join
-    )
-    adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    centers = adj
-    if max_center_degree is not None:
-        centers = adj.join(
-            deg.where(F.col("deg") <= max_center_degree), "z"
-        ).select("z", "n")
-    left = centers.select("z", F.col("n").alias("a"))
-    right = centers.select("z", F.col("n").alias("b"))
-    pairs = (
-        left.join(right, "z")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("common"))
+    e = _undirected(edges)  # reused: adjacency + anti join
+    wedges, deg = _wedges(e, max_center_degree)
+    pairs = wedges.groupBy("a", "b").agg(
+        F.count(F.lit(1)).cast("bigint").alias("common")
     )
     da = deg.select(F.col("z").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("z").alias("b"), F.col("deg").alias("db"))
@@ -897,11 +864,7 @@ def jaccard_link_prediction(
             ).alias("score"),
         )
     )
-    return scored.join(
-        e,
-        (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
-        "left_anti",
-    )
+    return _non_adjacent(scored, e)
 
 
 _BROADCAST_MAX_ROWS = 1_000_000
@@ -1203,20 +1166,10 @@ def personalized_pagerank(
     """
     if iters < 1:
         raise ValueError("personalized_pagerank requires iters >= 1")
-    # Lazy lineage cuts on the per-iteration-reused frames (module
-    # docstring).
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges, nodes = _directed(edges)
     seeds = seeds.select("node").distinct()
     ns = seeds.agg(F.count(F.lit(1)).alias("ns"))
-    outdeg = edges.groupBy(F.col("src").alias("o_node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
+    outdeg = _out_degree(edges)
     flagged = (
         nodes.join(
             F.broadcast(seeds.withColumn("is_seed", F.lit(1))), "node", "left"
@@ -1235,16 +1188,7 @@ def personalized_pagerank(
         (F.col("is_seed").cast("double") / F.col("ns")).alias("score"),
     )
     for _ in range(iters):
-        contrib = (
-            edges.join(scores, edges.src == scores.node)
-            .join(F.broadcast(outdeg), edges.src == F.col("o_node"))
-            .select(
-                F.col("dst"),
-                (F.col("score") / F.col("outdeg")).alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
+        contrib = _in_mass(edges, scores, outdeg)
         scores = (
             scores.join(contrib, scores.node == contrib.dst, "left")
             .select(
@@ -1280,15 +1224,7 @@ def katz_centrality(
     """
     if iters < 1:
         raise ValueError("katz_centrality requires iters >= 1")
-    # Lazy lineage cuts on the per-iteration-reused frames (module
-    # docstring).
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges, nodes = _directed(edges)
     scores = nodes.select("node", F.lit(1.0).alias("score"))
     for _ in range(iters):
         in_mass = (

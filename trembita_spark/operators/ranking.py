@@ -153,11 +153,10 @@ def prefix_sum_multi(
     # replica, r12 extras2 sweep, where q_sample_systematic and
     # q_ml_lift_deciles value-diverged nondeterministically). The
     # lazy localCheckpoint freezes one partitioning for both consumers.
-    # (plan_debug.capture is a no-op unless the plan audits enable it —
-    # the barrier hides phase 1 from the consumer's explain; see module.)
-    from trembita_spark import plan_debug
-
-    out = plan_debug.capture(out).localCheckpoint(eager=False)
+    # The barrier hides phase 1 from the consumer's explain; the plan
+    # audits in tests/test_plans.py record this frame (the one that
+    # carries __pid) as it is checkpointed.
+    out = out.localCheckpoint(eager=False)
     totals = out.groupBy("__pid").agg(
         *[F.sum(vc).alias(f"__t_{nm}") for vc, nm in zip(value_cols, names)]
     )
