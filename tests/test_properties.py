@@ -350,14 +350,17 @@ edges_small = st.lists(
 
 
 @given(es=edges_small)
+# a triangle with a self-loop and reversed duplicates, always run
+@example(es=[(0, 0), (0, 1), (1, 2), (2, 0), (1, 0), (2, 1), (2, 3)])
 @settings(**SETTINGS)
 def test_triangle_count_matches_bruteforce(spark, es):
     """Degree-oriented wedge-close must equal brute-force triangle
     enumeration on arbitrary undirected graphs (self-loops, duplicate
-    and reversed edges included)."""
+    and reversed edges included), and clustering_coefficient's
+    (deg, triangles, coeff) must follow from the same brute force."""
     from itertools import combinations
 
-    from trembita_spark.operators.graph import triangle_count
+    from trembita_spark.operators.graph import clustering_coefficient, triangle_count
 
     und = {(min(u, v), max(u, v)) for u, v in es if u != v}
     nodes = sorted({n for e in und for n in e})
@@ -366,14 +369,28 @@ def test_triangle_count_matches_bruteforce(spark, es):
         if ((a, b) in und and (b, c) in und and (a, c) in und):
             for n in (a, b, c):
                 expect[n] = expect.get(n, 0) + 1
+    deg = {n: sum(n in e for e in und) for n in nodes}
+    expect_cc = {
+        n: (d, expect.get(n, 0), (2 * expect.get(n, 0)) / (d * (d - 1)))
+        for n, d in deg.items()
+        if d >= 2
+    }
     if not es:
         return
     df = spark.createDataFrame(es, "src long, dst long")
     got = {r.node: r.triangles for r in triangle_count(df).collect()}
     assert got == expect
+    got_cc = {
+        r.node: (r.deg, r.triangles, r.coeff)
+        for r in clustering_coefficient(df).collect()
+    }
+    assert got_cc == expect_cc
 
 
 @given(es=edges_small, k=st.integers(min_value=1, max_value=4))
+# a self-loop and a reversed duplicate on a triangle, always run:
+# counting either would lift deg(0) or deg(1) to 3
+@example(es=[(0, 0), (0, 1), (1, 0), (1, 2), (2, 0)], k=2)
 @settings(**SETTINGS)
 def test_kcore_peel_matches_reference(spark, es, k):
     """Fixed-round peeling must equal the same rounds applied by a
@@ -392,7 +409,7 @@ def test_kcore_peel_matches_reference(spark, es, k):
         keep = {n for n in alive if len(adj[n] & alive) >= k}
         alive = keep
     expect = {n: len(adj[n] & alive) for n in alive}
-    df = spark.createDataFrame(sorted(und), "src long, dst long")
+    df = spark.createDataFrame(es, "src long, dst long")
     got = {r.node: r.deg for r in kcore_peel(df, k=k, rounds=3).collect()}
     assert got == expect
 
@@ -427,6 +444,9 @@ def test_sssp_matches_reference(spark, es):
 
 
 @given(es=edges_small)
+# a self-loop and a reversed duplicate on a path, always run: counting
+# either would flip node 2's or node 1's first-round label
+@example(es=[(0, 1), (1, 2), (2, 2), (2, 1)])
 @settings(**SETTINGS)
 def test_label_propagation_matches_reference(spark, es):
     """Synchronous LPA with (count DESC, label ASC) tie-break must equal
@@ -449,7 +469,7 @@ def test_label_propagation_matches_reference(spark, es):
                 counts[labels[p]] = counts.get(labels[p], 0) + 1
             nxt[n] = min(counts, key=lambda l: (-counts[l], l))
         labels = nxt
-    df = spark.createDataFrame(sorted(und), "src long, dst long")
+    df = spark.createDataFrame(es, "src long, dst long")
     got = {r.node: r.label for r in label_propagation(df, rounds=3).collect()}
     assert got == labels
 

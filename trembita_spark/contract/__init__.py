@@ -93,6 +93,57 @@ def dsum_sql(sql_expr: str, scale: int = 2) -> str:
     return f"CAST(sum(CAST({sql_expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
+def hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sparse hourly event counts ``(hr, x)``: ``hr`` is the epoch hour
+    (DuckDB: ``epoch_us(ts) // 3600000000``), ``x`` the bigint number of
+    events in it; an hour with no event has no row. Checkpointed lazily,
+    so the one events scan is shared by every branch that reads it."""
+    from pyspark.sql import functions as F
+
+    return (
+        table(spark, sf_dir, "events")
+        .select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
+        .groupBy("hr")
+        .agg(F.count(F.lit(1)).alias("x"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dense hourly event-count series ``(hr, x)``: :func:`hourly_counts`
+    on the full spine from the first to the last event hour, empty hours
+    as true zeros (DuckDB: ``generate_series(lo, hi)`` LEFT JOIN with
+    ``COALESCE(x, 0)``). Calendar-sized at any event volume; checkpointed
+    lazily, because most time-series keys read it more than once."""
+    from pyspark.sql import functions as F
+
+    c = hourly_counts(spark, sf_dir)
+    spine = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
+        F.explode(F.sequence("lo", "hi")).alias("hr")
+    )
+    return (
+        spine.join(c, "hr", "left")
+        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthetic customer lattice ``(c_custkey, lat, lon)`` the geo
+    keys share (the fixtures carry no geo columns). The ``+0.5`` keeps
+    every point strictly inside a whole-degree cell, so no floor sits on
+    an engine-rounding boundary. DuckDB:
+    ``CAST((c_custkey * 37) % 160 - 80 AS DOUBLE) + 0.5 AS lat`` and
+    ``CAST((c_custkey * 73) % 360 - 180 AS DOUBLE) + 0.5 AS lon``."""
+    from pyspark.sql import functions as F
+
+    return table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
+        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
+    )
+
+
 # DuckDB fragment: 60-bit int from the first 15 hex chars of an md5
 # string (Spark side: ``conv(substring(md5(x),1,15),16,10)``; DuckDB has
 # no ``conv``, so fold hex chars). Shared by every hash-derived bucket.

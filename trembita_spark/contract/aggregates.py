@@ -13,7 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import dsum, dsum_sql, register, table
+from trembita_spark.contract import (
+    customer_points,
+    dsum,
+    hourly_counts,
+    hourly_series,
+    register,
+    table,
+)
 from trembita_spark.io import spread_scan
 from trembita_spark.query import Query, agg
 
@@ -1660,6 +1667,35 @@ _LR3_DET2 = (
 )
 
 
+def _hour_dow_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Regression base for the value ~ hour-of-day + day-of-week models:
+    integer features ``x1`` (hour) and ``x2`` (day of week, 0..6
+    Sunday-first: Spark's dayofweek is 1..7, DuckDB's 0..6, so the Spark
+    side subtracts 1) and the 2-decimal target ``y``, so every moment sum
+    is exact and merge-order-independent."""
+    return table(spark, sf_dir, "events").select(
+        F.hour("ts").cast("bigint").alias("x1"),
+        (F.dayofweek("ts") - 1).cast("bigint").alias("x2"),
+        F.col("value").cast("decimal(18,2)").alias("y"),
+    )
+
+
+def _lr3_sums() -> list:
+    """The nine moment sums the ``_LR3_*`` fragments read, over
+    :func:`_hour_dow_base`, as one partial-agg pass."""
+    return [
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum("x1").cast("double").alias("s1"),
+        F.sum("x2").cast("double").alias("s2"),
+        F.sum(F.col("x1") * F.col("x1")).cast("double").alias("s11"),
+        F.sum(F.col("x2") * F.col("x2")).cast("double").alias("s22"),
+        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
+        F.sum("y").cast("double").alias("sy"),
+        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
+    ]
+
+
 @register(
     "q_ml_linreg_multi",
     oracle=f"""
@@ -1695,25 +1731,8 @@ def q_ml_linreg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3x3 system in closed form. Spark evaluates the SAME formula TEXT
     # the DuckDB oracle runs (shared fragments above), so every double
     # is bit-identical. The 100 TB cost is the single scan; the solve
-    # is O(1) on a 1-row frame. Spark dayofweek is 1..7 Sunday-first;
-    # DuckDB 0..6 — the Spark side subtracts 1.
-    ev = table(spark, sf_dir, "events")
-    base = ev.select(
-        F.hour("ts").cast("bigint").alias("x1"),
-        (F.dayofweek("ts") - 1).cast("bigint").alias("x2"),
-        F.col("value").cast("decimal(18,2)").alias("y"),
-    )
-    s = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x1").cast("double").alias("s1"),
-        F.sum("x2").cast("double").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).cast("double").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("double").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
-    )
+    # is O(1) on a 1-row frame.
+    s = _hour_dow_base(spark, sf_dir).agg(*_lr3_sums())
     return s.selectExpr(
         f"{_LR3_DET0} / {_LR3_DET} AS b0",
         f"{_LR3_DET1} / {_LR3_DET} AS b1",
@@ -3093,24 +3112,11 @@ def q_ml_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (string-rewritten shared fragments), so every double is
     # bit-identical — no rounding. 100 TB cost: the one scan; the
     # solve is O(1) on a 1-row frame.
-    ev = table(spark, sf_dir, "events")
-    base = ev.select(
-        F.hour("ts").cast("bigint").alias("x1"),
-        (F.dayofweek("ts") - 1).cast("bigint").alias("x2"),
-        F.col("value").cast("decimal(18,2)").alias("y"),
-    )
-    s = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x1").cast("double").alias("s1"),
-        F.sum("x2").cast("double").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).cast("double").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("double").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
-    ).withColumn("s11l", F.col("s11") + F.lit(1000.0)).withColumn(
-        "s22l", F.col("s22") + F.lit(1000.0)
+    s = (
+        _hour_dow_base(spark, sf_dir)
+        .agg(*_lr3_sums())
+        .withColumn("s11l", F.col("s11") + F.lit(1000.0))
+        .withColumn("s22l", F.col("s22") + F.lit(1000.0))
     )
     return s.selectExpr(
         f"{_RIDGE_DET0} / {_RIDGE_DET} AS b0",
@@ -6028,6 +6034,61 @@ def q_stat_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _geo_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """10-degree cell counts ``(cell_lat, cell_lon, y)`` of the customer
+    lattice: one partial-aggregated scan to a frame bounded by the grid
+    (16 x 36 cells), not the data. Cell ids floor exact lattice
+    coordinates (see :func:`customer_points`). Checkpointed lazily:
+    every geo key reads it more than once."""
+    pts = customer_points(spark, sf_dir)
+    return (
+        pts.groupBy(
+            F.floor(F.col("lat") / 10).cast("bigint").alias("cell_lat"),
+            F.floor(F.col("lon") / 10).cast("bigint").alias("cell_lon"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _rook_lattice(spark: SparkSession, sf_dir: str):
+    """Rook-adjacency view of :func:`_geo_cells` for the spatial
+    autocorrelation keys: ``(pairs, moments)``, where ``pairs`` holds the
+    ordered neighbour counts ``(yi, yj)`` from an equi-join of the cell
+    frame against itself shifted by a 4-row offset broadcast, and
+    ``moments`` is the 1-row ``(n, sy, syy)`` with ``syy`` an exact
+    DECIMAL(38,0). Both are lattice-sized."""
+    cells = _geo_cells(spark, sf_dir)
+    offs = spark.sql(
+        "SELECT * FROM (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) AS o(dl, dn)"
+    )
+    a = cells.select(
+        F.col("cell_lat").alias("al"), F.col("cell_lon").alias("an"),
+        F.col("y").alias("yi"),
+    )
+    b = cells.select(
+        F.col("cell_lat").alias("bl"), F.col("cell_lon").alias("bn"),
+        F.col("y").alias("yj"),
+    )
+    pairs = (
+        a.crossJoin(F.broadcast(offs))
+        .join(
+            F.broadcast(b),
+            (F.col("bl") == F.col("al") + F.col("dl"))
+            & (F.col("bn") == F.col("an") + F.col("dn")),
+        )
+        .select("yi", "yj")
+    )
+    moments = cells.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y"))
+        .cast("decimal(38,0)")
+        .alias("syy"),
+    )
+    return pairs, moments
+
+
 @register(
     "q_geo_grid_density",
     oracle="""
@@ -6060,14 +6121,7 @@ def q_geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine-rounding boundary); counts are exact, share is one double
     # division. 100 TB: one partial-aggregated scan; the cell frame is
     # bounded by the grid (16 x 36 cells), not the data.
-    pts = table(spark, sf_dir, "customer").select(
-        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-    )
-    cells = pts.groupBy(
-        F.floor(F.col("lat") / 10).cast("bigint").alias("cell_lat"),
-        F.floor(F.col("lon") / 10).cast("bigint").alias("cell_lon"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_pts"))
+    cells = _geo_cells(spark, sf_dir).withColumnRenamed("y", "n_pts")
     t = cells.agg(F.sum("n_pts").cast("bigint").alias("total"))
     return cells.crossJoin(F.broadcast(t)).select(
         "cell_lat",
@@ -6243,25 +6297,9 @@ def q_ml_linreg_fit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact moment sums plus syy: SSE = syy - b.(X'y) expands to pure
     # formula text over the Cramer determinants, so every output is a
     # deterministic double with NO rounding (no libm anywhere; parity
-    # rule 2). Spark dayofweek is 1..7 Sunday-first; DuckDB 0..6 — the
-    # Spark side subtracts 1 (the q_ml_linreg_multi convention).
-    # 100 TB: one partial-aggregated scan, 1-row result.
-    ev = table(spark, sf_dir, "events")
-    base = ev.select(
-        F.hour("ts").cast("bigint").alias("x1"),
-        (F.dayofweek("ts") - 1).cast("bigint").alias("x2"),
-        F.col("value").cast("decimal(18,2)").alias("y"),
-    )
-    s = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x1").cast("double").alias("s1"),
-        F.sum("x2").cast("double").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).cast("double").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("double").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("double").alias("s12"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).cast("double").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("double").alias("s2y"),
+    # rule 2). 100 TB: one partial-aggregated scan, 1-row result.
+    s = _hour_dow_base(spark, sf_dir).agg(
+        *_lr3_sums(),
         F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
     )
     return s.selectExpr(
@@ -8637,13 +8675,7 @@ def q_ts_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is Σ_j>t sign pairs).
     from trembita_spark.operators.ranking import prefix_sum
 
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)  # feeds rank support + time spine
-    )
+    c = hourly_counts(spark, sf_dir)  # feeds rank support + time spine
     pv = c.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     rkv = prefix_sum(pv, "cnt", order_by=[F.col("x")], name="cum").select(
         "x", (2 * (F.col("cum") - F.col("cnt")) + F.col("cnt") + 1).alias("r2")
@@ -8946,19 +8978,7 @@ def q_ts_adf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Dickey-Fuller critical values (-2.86 at 5%), not the normal.
     # At 100 TB: one fact-table groupBy to the hour contingency +
     # spine joins; the fit is O(1) after the moment scan.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)  # spine bounds + three join sides
-    )
-    spine = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
-        F.explode(F.sequence("lo", "hi")).alias("hr")
-    )
-    d = spine.join(c, "hr", "left").select(
-        "hr", F.coalesce("x", F.lit(0)).alias("x")
-    ).localCheckpoint(eager=False)
+    d = hourly_series(spark, sf_dir)  # feeds three join sides
     d0 = d.select(F.col("hr"), F.col("x").alias("x0"))
     d1 = d.select((F.col("hr") + 1).alias("hr"), F.col("x").alias("xl1"))
     d2 = d.select((F.col("hr") + 2).alias("hr"), F.col("x").alias("xl2"))
@@ -9545,21 +9565,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trees over them — bit-exact, NO rounding. At 100 TB: one
     # fact-table groupBy to the hour contingency + two spine joins +
     # two scalar rollups.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
-        F.explode(F.sequence("lo", "hi")).alias("hr")
-    )
-    d = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
+    d = hourly_series(spark, sf_dir)
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
 
     def diff_moments(lag: int, pre: str):
@@ -9999,21 +10005,7 @@ def q_ts_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix sum + four lag joins on the calendar frame.
     from trembita_spark.operators.ranking import prefix_sum_multi
 
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
-        F.explode(F.sequence("lo", "hi")).alias("hr")
-    )
-    d = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
+    d = hourly_series(spark, sf_dir)
     t = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s"),
@@ -11124,35 +11116,7 @@ def q_geo_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table. 100 TB: one partial-aggregated scan to the grid-bounded
     # cell frame (16 x 36 cells max); everything after is
     # lattice-sized, the offs cross join is a 4-row broadcast.
-    pts = table(spark, sf_dir, "customer").select(
-        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-    )
-    cells = pts.groupBy(
-        F.floor(F.col("lat") / 10).cast("bigint").alias("cell_lat"),
-        F.floor(F.col("lon") / 10).cast("bigint").alias("cell_lon"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    cells = cells.localCheckpoint(eager=False)  # feeds both join sides + moments
-    offs = spark.sql(
-        "SELECT * FROM (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) AS o(dl, dn)"
-    )
-    a = cells.select(
-        F.col("cell_lat").alias("al"), F.col("cell_lon").alias("an"),
-        F.col("y").alias("yi"),
-    )
-    b = cells.select(
-        F.col("cell_lat").alias("bl"), F.col("cell_lon").alias("bn"),
-        F.col("y").alias("yj"),
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(offs))
-        .join(
-            F.broadcast(b),
-            (F.col("bl") == F.col("al") + F.col("dl"))
-            & (F.col("bn") == F.col("an") + F.col("dn")),
-        )
-        .select("yi", "yj")
-    )
+    pairs, ct = _rook_lattice(spark, sf_dir)
     ag = pairs.agg(
         F.count(F.lit(1)).cast("bigint").alias("s0"),
         F.sum(F.col("yi").cast("decimal(38,0)") * F.col("yj"))
@@ -11161,13 +11125,6 @@ def q_geo_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("yi").cast("decimal(38,0)") + F.col("yj"))
         .cast("decimal(38,0)")
         .alias("pb"),
-    )
-    ct = cells.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
     )
     return ct.crossJoin(F.broadcast(ag)).selectExpr(
         "n AS n_cells",
@@ -11231,35 +11188,7 @@ def q_geo_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double division: bit-exact cross-engine, no rounding. Same
     # lattice-bounded cost shape as Moran (one partial-aggregated scan,
     # 4-row offset broadcast equi-join).
-    pts = table(spark, sf_dir, "customer").select(
-        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-    )
-    cells = pts.groupBy(
-        F.floor(F.col("lat") / 10).cast("bigint").alias("cell_lat"),
-        F.floor(F.col("lon") / 10).cast("bigint").alias("cell_lon"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    cells = cells.localCheckpoint(eager=False)  # feeds both join sides + moments
-    offs = spark.sql(
-        "SELECT * FROM (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) AS o(dl, dn)"
-    )
-    a = cells.select(
-        F.col("cell_lat").alias("al"), F.col("cell_lon").alias("an"),
-        F.col("y").alias("yi"),
-    )
-    b = cells.select(
-        F.col("cell_lat").alias("bl"), F.col("cell_lon").alias("bn"),
-        F.col("y").alias("yj"),
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(offs))
-        .join(
-            F.broadcast(b),
-            (F.col("bl") == F.col("al") + F.col("dl"))
-            & (F.col("bn") == F.col("an") + F.col("dn")),
-        )
-        .select("yi", "yj")
-    )
+    pairs, ct = _rook_lattice(spark, sf_dir)
     ag = pairs.agg(
         F.count(F.lit(1)).cast("bigint").alias("s0"),
         F.sum(
@@ -11268,13 +11197,6 @@ def q_geo_geary_c(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("decimal(38,0)")
         .alias("dd"),
-    )
-    ct = cells.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
     )
     return ct.crossJoin(F.broadcast(ag)).selectExpr(
         "n AS n_cells",
@@ -11337,47 +11259,12 @@ def q_geo_getis_g(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sy^2 - Syy (ordered pairs i<>j) — every term DECIMAL(38,0), two
     # double divisions, bit-exact, no rounding. Same lattice-bounded
     # cost shape as q_geo_moran_i.
-    pts = table(spark, sf_dir, "customer").select(
-        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-    )
-    cells = pts.groupBy(
-        F.floor(F.col("lat") / 10).cast("bigint").alias("cell_lat"),
-        F.floor(F.col("lon") / 10).cast("bigint").alias("cell_lon"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    cells = cells.localCheckpoint(eager=False)  # feeds both join sides + moments
-    offs = spark.sql(
-        "SELECT * FROM (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) AS o(dl, dn)"
-    )
-    a = cells.select(
-        F.col("cell_lat").alias("al"), F.col("cell_lon").alias("an"),
-        F.col("y").alias("yi"),
-    )
-    b = cells.select(
-        F.col("cell_lat").alias("bl"), F.col("cell_lon").alias("bn"),
-        F.col("y").alias("yj"),
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(offs))
-        .join(
-            F.broadcast(b),
-            (F.col("bl") == F.col("al") + F.col("dl"))
-            & (F.col("bn") == F.col("an") + F.col("dn")),
-        )
-        .select("yi", "yj")
-    )
+    pairs, ct = _rook_lattice(spark, sf_dir)
     ag = pairs.agg(
         F.count(F.lit(1)).cast("bigint").alias("s0"),
         F.sum(F.col("yi").cast("decimal(38,0)") * F.col("yj"))
         .cast("decimal(38,0)")
         .alias("pa"),
-    )
-    ct = cells.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
     )
     return ct.crossJoin(F.broadcast(ag)).selectExpr(
         "n AS n_cells",

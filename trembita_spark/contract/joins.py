@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import dsum, register, table
+from trembita_spark.contract import customer_points, dsum, register, table
 from trembita_spark.io import local_rows
 from trembita_spark.pipeline import Pipeline
 
@@ -690,13 +690,9 @@ def q_join_geo_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trembita_spark.operators.joins import geo_radius_join
 
     pts = (
-        table(spark, sf_dir, "customer")
+        customer_points(spark, sf_dir)
         .where(F.col("c_custkey") < 3000)
-        .select(
-            F.col("c_custkey").alias("id"),
-            (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-            (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-        )
+        .withColumnRenamed("c_custkey", "id")
     )
     # 800 km: the smallest radius that is non-vacuous on the sparse
     # sf0.001 lattice (16 pairs) while staying bounded at sf0.1 (~19k)

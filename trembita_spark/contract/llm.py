@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import register, run_tmp, table
+from trembita_spark.contract import customer_points, register, run_tmp, table
 from trembita_spark.operators import dedup as D
 from trembita_spark.operators import multimodal as M
 from trembita_spark.operators import similarity as S
@@ -2948,13 +2948,9 @@ def q_cluster_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trembita_spark.operators.similarity import dbscan_geo
 
     pts = (
-        table(spark, sf_dir, "customer")
+        customer_points(spark, sf_dir)
         .where(F.col("c_custkey") < 1200)
-        .select(
-            F.col("c_custkey").alias("id"),
-            (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-            (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-        )
+        .withColumnRenamed("c_custkey", "id")
     )
     return dbscan_geo(pts, eps_km=1200.0, min_pts=3)
 

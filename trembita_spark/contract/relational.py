@@ -3657,7 +3657,7 @@ def q_graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Topological LAYERING of a DAG (Kahn rounds): the degree-ordered
     # orientation of the co-basket graph is acyclic by construction
     # (every edge points toward the higher-(degree, id) endpoint — the
-    # _triangles orientation), and each round peels the current
+    # triangle_count orientation), and each round peels the current
     # SOURCES (no surviving in-edge) into the next layer — the
     # dependency-scheduling primitive ("what can run in wave r").
     # Three unrolled rounds (the pagerank fixed-recurrence convention);

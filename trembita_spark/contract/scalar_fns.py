@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import register, table
+from trembita_spark.contract import customer_points, register, table
 from trembita_spark.io import local_rows
 
 
@@ -407,6 +407,19 @@ _HAV = (
 )
 
 
+def _station_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every customer lattice point against the broadcast station dim,
+    with the haversine distance ``dist`` in km. The station side is the
+    5-row dimension, so the customer side never shuffles for it."""
+    stations = F.broadcast(
+        local_rows(spark, _STATIONS, "station_id int, s_lat double, s_lon double")
+    )
+    return customer_points(spark, sf_dir).crossJoin(stations).withColumn(
+        "dist",
+        F.expr(_HAV.format(lat1="lat", lon1="lon", lat2="s_lat", lon2="s_lon")),
+    )
+
+
 @register(
     "q_fn_geo_nearest",
     oracle=f"""
@@ -444,18 +457,7 @@ def q_fn_geo_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-equidistant pair can't tiebreak differently per engine.
     from pyspark.sql.window import Window
 
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-    )
-    stations = F.broadcast(
-        local_rows(spark, _STATIONS, "station_id int, s_lat double, s_lon double")
-    )
-    d = cust.crossJoin(stations).withColumn(
-        "dist",
-        F.expr(_HAV.format(lat1="lat", lon1="lon", lat2="s_lat", lon2="s_lon")),
-    )
+    d = _station_distances(spark, sf_dir)
     w = Window.partitionBy("c_custkey").orderBy(F.round("dist", 9), "station_id")
     return (
         d.withColumn("rn", F.row_number().over(w))
@@ -622,18 +624,7 @@ def q_fn_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distance; only the per-key top-k moves data.
     from pyspark.sql.window import Window
 
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (((F.col("c_custkey") * 37) % 160 - 80).cast("double") + 0.5).alias("lat"),
-        (((F.col("c_custkey") * 73) % 360 - 180).cast("double") + 0.5).alias("lon"),
-    )
-    stations = F.broadcast(
-        local_rows(spark, _STATIONS, "station_id int, s_lat double, s_lon double")
-    )
-    d = cust.crossJoin(stations).withColumn(
-        "dist",
-        F.expr(_HAV.format(lat1="lat", lon1="lon", lat2="s_lat", lon2="s_lon")),
-    )
+    d = _station_distances(spark, sf_dir)
     w = Window.partitionBy("c_custkey").orderBy(F.round("dist", 9), "station_id")
     return (
         d.withColumn("rk", F.row_number().over(w))

@@ -19,7 +19,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import register, table
+from trembita_spark.contract import hourly_series, register, table
 from trembita_spark.io import local_rows
 from trembita_spark.operators.fsm import sessionize, sessionize_fsm
 from trembita_spark.operators import timeseries as TS
@@ -293,6 +293,77 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(out, name, output_mode="append")
 
 
+def _sentinel_replay(spark: SparkSession, sf_dir: str, tag: str):
+    """Stage the events fixture as TWO micro-batches for a
+    watermark-gated streaming key: the real events, then a purchase and
+    a click sentinel 10h past max(ts) with negative ids (-1, -2) that
+    join and group with nothing real. Watermarks only advance between
+    batches, so batch 1's sentinels push every watermark past every real
+    event, and the availableNow no-data flush then emits the remaining
+    watermark-gated state (null-padded rows, closed windows, merged
+    sessions) before termination. The driver-side max(ts) lookup is one
+    single-row aggregate. Returns ``(sent_ts, stream)``: ``stream()``
+    opens a new source over the staged batches (each side of a join
+    needs its own). Each key drops the sentinels' own output rows."""
+    from datetime import timedelta
+
+    from trembita_spark.contract import run_tmp
+    from trembita_spark.streaming.sources import staged_dir, staged_stream
+
+    ev = table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    sent_ts = max_ts + timedelta(hours=10)
+    sentinels = local_rows(
+        spark,
+        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
+        schema=ev.schema,
+    )
+    base = run_tmp(tag)
+    schema = staged_dir(spark, [ev, sentinels], base)
+    return sent_ts, lambda: staged_stream(spark, base, schema)
+
+
+def _purchase_click_join(stream, how: str) -> DataFrame:
+    """Stream-stream join of purchases ``(purchase_id, p_user_id,
+    purchase_ts)`` to same-user clicks ``(click_id, c_user_id, click_ts)``
+    in the 30 minutes before the purchase. ``stream`` is a zero-argument
+    source factory, called once per side: each side of a stream-stream
+    join needs its own source. Both sides are watermarked 1h, and with
+    the time-range condition that bounds the buffered state: Spark
+    evicts it at watermark+range (the attribution-join shape at scale).
+    The oracles compare integer epoch-µs, so the bound is exactly
+    Spark's µs-truncated interval arithmetic."""
+    p = (
+        stream()
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    c = (
+        stream()
+        .where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    return p.join(
+        c,
+        (F.col("p_user_id") == F.col("c_user_id"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
+        & (F.col("click_ts") <= F.col("purchase_ts")),
+        how,
+    )
+
+
 @register(
     "q_stream_join",
     oracle="""
@@ -306,39 +377,18 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REAL stream-stream inner join: purchases matched to same-user
-    # clicks in the preceding 30 minutes. Both sides watermarked + the
-    # time-range join condition bounds the buffered state (Spark evicts
-    # click state older than watermark+range — the attribution-join shape
-    # at scale). Oracle compares integer epoch-µs so the bound is exactly
-    # Spark's µs-truncated interval arithmetic.
+    # clicks in the preceding 30 minutes; the watermarks and the
+    # time-range condition bound the buffered state.
     name = f"stream_join_{next(_STREAM_SEQ)}"
-    p = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
+    joined = _purchase_click_join(
+        lambda: events_stream(spark, sf_dir), "inner"
+    ).select(
+        "purchase_id",
+        "click_id",
+        F.col("p_user_id").alias("user_id"),
+        "purchase_ts",
+        "click_ts",
     )
-    c = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "inner",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     return run_to_completion(joined, name, output_mode="append")
 
 
@@ -360,65 +410,23 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # click exists. Unlike the inner join, the null-padded rows are
     # WATERMARK-GATED state: Spark may only emit "no match" once the
     # click-side watermark has passed purchase_ts (no future click can
-    # match), so the fixture is replayed via staged_stream as TWO
-    # micro-batches — the real events, then a sentinel pair 10h past
-    # max(ts) on each side — because watermarks only advance between
-    # batches: batch 1's sentinels push the watermark past every real
-    # purchase, and the availableNow no-data flush batch then emits the
-    # remaining null-padded rows before termination. Sentinels carry
-    # negative ids joining nothing and are dropped from the result. The
-    # driver-side max(ts) lookup is one single-row aggregate (scalar,
-    # sf-independent — the budget_select pattern). Oracle = the batch
-    # left range-join over the same integer epoch-µs bounds. At 100 TB
+    # match), so the fixture is replayed as TWO micro-batches by
+    # _sentinel_replay, and the sentinel rows are dropped from the
+    # result. Oracle = the batch left range-join over the same integer
+    # epoch-µs bounds. At 100 TB
     # this is the always-on attribution-with-completeness shape; state
     # for both sides is evicted at watermark+range exactly as in
     # q_stream_join, plus the unmatched-left buffer the outer variant
     # needs (bounded by the same horizon).
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_outer_join_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    _, stream = _sentinel_replay(spark, sf_dir, "stream_outer")
+    joined = _purchase_click_join(stream, "left_outer").select(
+        "purchase_id",
+        "click_id",
+        F.col("p_user_id").alias("user_id"),
+        "purchase_ts",
+        "click_ts",
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
-        schema=ev.schema,
-    )
-    base = run_tmp("stream_outer")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    p = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_outer",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     out = run_to_completion(joined, name, output_mode="append")
     return out.where(F.col("purchase_id") >= 0)
 
@@ -452,54 +460,12 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buffered state is evicted at watermark+range — identical bound to
     # the inner/left variants; FULL adds only the second unmatched
     # buffer, not a larger horizon.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_full_outer_join_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
-        schema=ev.schema,
-    )
-    base = run_tmp("stream_full_outer")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    p = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "full_outer",
-    ).select(
+    _, stream = _sentinel_replay(spark, sf_dir, "stream_full_outer")
+    joined = _purchase_click_join(stream, "full_outer").select(
         "purchase_id",
         "click_id",
-        F.coalesce("user_id", "c_user_id").alias("user_id"),
+        F.coalesce("p_user_id", "c_user_id").alias("user_id"),
         "purchase_ts",
         "click_ts",
     )
@@ -611,32 +577,16 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after the last event) — the always-on production shape, where
     # complete mode (q_stream_session) would re-emit the whole result
     # every batch. Same staged two-batch replay as q_stream_outer_join:
-    # the sentinel event 10h past max(ts) pushes the watermark beyond
-    # every real session's end+gap, and the availableNow no-data flush
-    # emits the remaining merged session state before termination.
-    # Sentinel (user -1) joins no real session and is dropped. Oracle =
+    # the sentinels 10h past max(ts) push the watermark beyond every
+    # real session's end+gap, and the availableNow no-data flush emits
+    # the remaining merged session state before termination. Sentinel
+    # users (-1, -2) join no real session and are dropped. Oracle =
     # the batch gap-islands SQL (identical to q_window_session's). At
     # 100 TB: per-user merging session state, evicted on emission —
     # state is bounded by OPEN sessions, not history.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_session_append_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sentinels = local_rows(
-        spark,
-        [(-1, max_ts + timedelta(hours=10), -1, "view", 0.0)], schema=ev.schema
-    )
-    base = run_tmp("stream_session_append")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    agg = session_window_agg(
-        staged_stream(spark, base, schema).withWatermark("ts", "1 hour")
-    )
+    _, stream = _sentinel_replay(spark, sf_dir, "stream_session_append")
+    agg = session_window_agg(stream().withWatermark("ts", "1 hour"))
     out = run_to_completion(agg, name, output_mode="append")
     return out.where(F.col("user_id") >= 0)
 
@@ -1581,25 +1531,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-table pass; everything after runs on the hours spine
     # (time-bounded, thousands of rows regardless of event volume — at
     # 100 TB the spine is still just the calendar).
-    ev = table(spark, sf_dir, "events")
-    # hourly counts feed 2 branches (spine bounds + the dense join) and
-    # dense feeds 3 (global moments + both pair sides): checkpoint both
-    # lazily so the events scan runs ONCE, not once per branch.
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
+    dense = hourly_series(spark, sf_dir)  # feeds moments + both pair sides
     g = dense.agg(
         F.sum("x").alias("s"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
@@ -1765,20 +1697,7 @@ def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global-window ban).
     from pyspark.sql.window import Window
 
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = spine.join(c, "hr", "left").select(
-        "hr", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    dense = hourly_series(spark, sf_dir)
     fr = Window.orderBy("hr").rowsBetween(-12, 12)
     w = dense.select(
         "hr",
@@ -2159,31 +2078,16 @@ def q_stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct value), so this runs the production two-stage pattern:
     # watermarked dropDuplicates on (window-start, user) feeding a
     # windowed count — TWO chained stateful operators in one query
-    # (Spark 4 multi-stateful append mode). Replayed via staged_stream
-    # (events, then a sentinel 10h past max ts) so the watermark flush
-    # emits every closed window before availableNow terminates; the
-    # sentinel's window is dropped from the result. Oracle = the batch
-    # COUNT(DISTINCT) per hour bucket. At 100 TB: dedup state is
-    # (window × active users) and evicted at the watermark; the count
-    # state is one row per open window.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
+    # (Spark 4 multi-stateful append mode). Replayed by
+    # _sentinel_replay (events, then sentinels 10h past max ts) so the
+    # watermark flush emits every closed window before availableNow
+    # terminates; the sentinels' window is dropped from the result.
+    # Oracle = the batch COUNT(DISTINCT) per hour bucket. At 100 TB:
+    # dedup state is (window × active users) and evicted at the
+    # watermark; the count state is one row per open window.
     name = f"stream_distinct_users_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "view", 0.0)], schema=ev.schema
-    )
-    base = run_tmp("stream_distinct_users")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    s = staged_stream(spark, base, schema).withWatermark("ts", "1 hour")
+    sent_ts, stream = _sentinel_replay(spark, sf_dir, "stream_distinct_users")
+    s = stream().withWatermark("ts", "1 hour")
     dedup = s.select(
         "ts", "user_id", F.window("ts", "1 hour").alias("w")
     ).dropDuplicates(["w", "user_id"])
@@ -2194,6 +2098,31 @@ def q_stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_to_completion(agg, name, output_mode="append")
     return out.where(F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS"))
+
+
+def _time_to_purchase(spark: SparkSession, sf_dir: str, *per_user) -> DataFrame:
+    """Per-user time-to-first-purchase survival frame ``(user_id, t, obs,
+    ...)``: each user enters at their first event; ``t`` is the
+    whole-day duration to the first purchase (``obs = 1``), or to the
+    last event for a user who never purchases (right-censored,
+    ``obs = 0``). ``per_user`` aggregates ride the same user-key agg and
+    come out as extra columns. 100 TB: one user-key agg."""
+    per = table(spark, sf_dir, "events").groupBy("user_id").agg(
+        F.min("ts").alias("entry_ts"),
+        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
+            "purch_ts"
+        ),
+        F.max("ts").alias("last_ts"),
+        *per_user,
+    )
+    end_ts = F.coalesce("purch_ts", "last_ts")
+    return per.select(
+        "*",
+        F.datediff(end_ts.cast("date"), F.col("entry_ts").cast("date"))
+        .cast("bigint")
+        .alias("t"),
+        F.when(F.col("purch_ts").isNotNull(), 1).otherwise(0).alias("obs"),
+    ).drop("entry_ts", "purch_ts", "last_ts")
 
 
 @register(
@@ -2260,25 +2189,7 @@ def q_events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # everything is support-sized (distinct whole-day durations).
     from trembita_spark.operators.stats import kaplan_meier
 
-    ev = table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("entry_ts"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "purch_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    pu = per.select(
-        F.when(
-            F.col("purch_ts").isNotNull(),
-            F.datediff(F.to_date("purch_ts"), F.to_date("entry_ts")),
-        )
-        .otherwise(F.datediff(F.to_date("last_ts"), F.to_date("entry_ts")))
-        .cast("bigint")
-        .alias("t"),
-        F.when(F.col("purch_ts").isNotNull(), 1).otherwise(0).alias("obs"),
-    )
-    return kaplan_meier(pu, "t", "obs")
+    return kaplan_meier(_time_to_purchase(spark, sf_dir), "t", "obs")
 
 
 @register(
@@ -2346,22 +2257,7 @@ def q_ts_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a fixed expression tree over exact sums, bit-identical both
     # engines, NO rounding (parity rule 2). 100 TB: the one fact-table
     # groupBy; the spine work is calendar-bounded.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
+    dense = hourly_series(spark, sf_dir)
     g = dense.agg(
         F.sum("x").alias("s"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
@@ -2467,20 +2363,7 @@ def q_ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-table groupBy, calendar-sized everything after.
     from pyspark.sql.window import Window
 
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = spine.join(c, "hr", "left").select(
-        "hr", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    dense = hourly_series(spark, sf_dir)
     fr = Window.orderBy("hr").rowsBetween(-12, 12)
     w = dense.select(
         "hr",
@@ -2738,25 +2621,7 @@ def q_events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the duration support (one range shuffle via prefix_sum_multi).
     from trembita_spark.operators.stats import nelson_aalen
 
-    ev = table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("entry_ts"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "purch_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    pu = per.select(
-        F.when(
-            F.col("purch_ts").isNotNull(),
-            F.datediff(F.to_date("purch_ts"), F.to_date("entry_ts")),
-        )
-        .otherwise(F.datediff(F.to_date("last_ts"), F.to_date("entry_ts")))
-        .cast("bigint")
-        .alias("t"),
-        F.when(F.col("purch_ts").isNotNull(), 1).otherwise(0).alias("obs"),
-    )
-    return nelson_aalen(pu, "t", "obs")
+    return nelson_aalen(_time_to_purchase(spark, sf_dir), "t", "obs")
 
 
 @register(
@@ -2838,24 +2703,8 @@ def q_events_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user agg + one range shuffle on the duration support.
     from trembita_spark.operators.ranking import prefix_sum_multi
 
-    ev = table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("entry_ts"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "purch_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    pu = per.select(
-        F.when(
-            F.col("purch_ts").isNotNull(),
-            F.datediff(F.to_date("purch_ts"), F.to_date("entry_ts")),
-        )
-        .otherwise(F.datediff(F.to_date("last_ts"), F.to_date("entry_ts")))
-        .cast("bigint")
-        .alias("t"),
-        F.when(F.col("purch_ts").isNotNull(), 1).otherwise(0).alias("obs"),
-        (F.col("user_id") % 2).cast("bigint").alias("g"),
+    pu = _time_to_purchase(spark, sf_dir).select(
+        "t", "obs", (F.col("user_id") % 2).cast("bigint").alias("g")
     )
     lv = pu.groupBy("t").agg(
         F.sum("obs").cast("bigint").alias("d"),
@@ -2932,32 +2781,9 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # click-side state still evicts at watermark+range; the semi saves
     # the pair fan-out the inner join pays.
     name = f"stream_semi_join_{next(_STREAM_SEQ)}"
-    p = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_semi",
-    ).select("purchase_id", "user_id", "purchase_ts")
+    joined = _purchase_click_join(
+        lambda: events_stream(spark, sf_dir), "left_semi"
+    ).select("purchase_id", F.col("p_user_id").alias("user_id"), "purchase_ts")
     return run_to_completion(joined, name, output_mode="append")
 
 
@@ -2983,51 +2809,15 @@ def q_stream_right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a WHERE would delete the null-padded rows). Completes the
     # stream-stream join-mode matrix: inner / left / right / full /
     # semi, every one batch-exact.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_right_outer_join_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    _, stream = _sentinel_replay(spark, sf_dir, "stream_right_outer")
+    joined = _purchase_click_join(stream, "right_outer").select(
+        "purchase_id",
+        "click_id",
+        F.col("c_user_id").alias("user_id"),
+        "purchase_ts",
+        "click_ts",
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
-        schema=ev.schema,
-    )
-    base = run_tmp("stream_right_outer")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    p = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("p_user_id") == F.col("user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "right_outer",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     out = run_to_completion(joined, name, output_mode="append")
     return out.where(
         (F.col("click_id") >= 0)
@@ -3295,22 +3085,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate every forecasting pipeline runs on its residuals. 100 TB:
     # one fact-table groupBy to the hour contingency; everything after
     # lives on the calendar spine.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)  # feeds spine bounds + dense join
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=False)  # feeds moments + both pair sides
-    )
+    dense = hourly_series(spark, sf_dir)
     g = dense.agg(
         F.sum("x").alias("s"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
@@ -3758,21 +3533,10 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~calendar-many-term folds outgrow the round-12 grid; the
     # q_eval_forecast lesson). 100 TB: ONE fact-table groupBy to hourly
     # counts; every window after runs on the calendar spine x 3 sizes.
-    ev = table(spark, sf_dir, "events")
     from pyspark.sql.window import Window
 
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)  # feeds bounds + dense join
-    )
-    b = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    spine = b.select("lo", F.explode(F.sequence("lo", "hi")).alias("hr"))
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("lo", "hr", F.coalesce("x", F.lit(0)).alias("x"))
-    )
+    dense = hourly_series(spark, sf_dir)
+    lo = dense.agg(F.min("hr").alias("lo"))
     sizes = spark.range(1).select(
         F.explode(
             F.array(
@@ -3782,7 +3546,7 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s")
     )
-    rows_ = dense.crossJoin(F.broadcast(sizes)).select(
+    rows_ = dense.crossJoin(F.broadcast(lo)).crossJoin(F.broadcast(sizes)).select(
         "s",
         F.expr("(hr - lo) div s").alias("blk"),
         "hr",
@@ -4162,22 +3926,7 @@ def q_ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text over deterministic doubles — no libm, NO rounding (parity
     # rule 2). 100 TB: one fact-table groupBy; the recursion is O(1)
     # on a 1-row frame.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=False)
-    )
+    dense = hourly_series(spark, sf_dir)
     g = dense.agg(
         F.sum("x").alias("s"),
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
@@ -4415,30 +4164,17 @@ def q_stream_tws_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through the arbitrary-state boundary into the second stateful
     # operator (Spark 4 multi-stateful append mode); without it the
     # windowed agg downstream of TWS is unplannable. Same staged
-    # sentinel replay as q_stream_distinct_users (events, then a
-    # sentinel 10h past max ts) so the final watermark closes every
-    # real window; the sentinel's own window is dropped. Oracle = batch
+    # sentinel replay as q_stream_distinct_users (events, then
+    # sentinels 10h past max ts) so the final watermark closes every
+    # real window; the sentinels' own window is dropped. Oracle = batch
     # rank-1 firsts bucketed per hour. At 100 TB: dedup state is
     # O(users x types), window state one row per open hour — both
     # watermark-evicted.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
     from trembita_spark.streaming.stateful import first_occurrence_tws
 
     name = f"stream_tws_chained_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(spark, [(-1, sent_ts, -1, "view", 0.0)], schema=ev.schema)
-    base = run_tmp("stream_tws_chained")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    firsts = first_occurrence_tws(
-        staged_stream(spark, base, schema), event_time_col="first_ts"
-    )
+    sent_ts, stream = _sentinel_replay(spark, sf_dir, "stream_tws_chained")
+    firsts = first_occurrence_tws(stream(), event_time_col="first_ts")
     agg = (
         firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
@@ -4525,13 +4261,9 @@ def q_stat_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + one range-partitioned prefix pass + a scalar rollup.
     from trembita_spark.operators.ranking import prefix_sum_multi
 
-    ev = table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.min("ts").alias("entry_ts"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "purch_ts"
-        ),
-        F.max("ts").alias("last_ts"),
+    pu = _time_to_purchase(
+        spark,
+        sf_dir,
         F.when(
             F.min(F.when(F.col("event_type") == "signup", F.col("ts")))
             == F.min("ts"),
@@ -4539,14 +4271,6 @@ def q_stat_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("arm_a"),
-    )
-    end_ts = F.coalesce("purch_ts", "last_ts")
-    pu = per.select(
-        F.datediff(end_ts.cast("date"), F.col("entry_ts").cast("date"))
-        .cast("bigint")
-        .alias("t"),
-        F.when(F.col("purch_ts").isNotNull(), 1).otherwise(0).alias("obs"),
-        "arm_a",
     )
     lv = pu.groupBy("t").agg(
         F.sum(F.when(F.col("arm_a") == 1, F.col("obs")).otherwise(0))
@@ -4897,19 +4621,8 @@ def q_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (thousands of rows at ANY data volume — at 100 TB it is still
     # just the calendar), so the single sequential fold runs over a
     # config-sized list regardless of event volume.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=False)  # feeds spine bounds + dense join
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = spine.join(c, "hr", "left").select(
-        "hr", F.coalesce("x", F.lit(0)).cast("double").alias("x")
+    dense = hourly_series(spark, sf_dir).select(
+        "hr", F.col("x").cast("double").alias("x")
     )
     arr = dense.agg(
         F.expr(
@@ -5224,24 +4937,11 @@ def q_ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic on both engines. 100 TB: one fact-table groupBy to
     # the calendar-bounded spine; the three-way self-join is
     # spine-sized.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    b = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    spine = b.select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)  # feeds the three-way self-join + count
-    )
-    d = dense
+    dense = hourly_series(spark, sf_dir)  # feeds the three-way self-join + count
     p = dense.select((F.col("hr") + 1).alias("hr"), F.col("x").alias("xp"))
     nx = dense.select((F.col("hr") - 1).alias("hr"), F.col("x").alias("xn"))
     tp = (
-        d.join(p, "hr")
+        dense.join(p, "hr")
         .join(nx, "hr")
         .where(
             ((F.col("x") > F.col("xp")) & (F.col("x") > F.col("xn")))
@@ -5318,19 +5018,7 @@ def q_ts_bartels_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix sum + spine-sized equi-joins after.
     from trembita_spark.operators.ranking import prefix_sum
 
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    )
-    b = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    spine = b.select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    dense = (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)  # feeds support + rank join
-    )
+    dense = hourly_series(spark, sf_dir)  # feeds support + rank join
     pv = dense.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     pv = pv.localCheckpoint(eager=False)  # feeds prefix sum
     cc = prefix_sum(pv, "cnt", order_by=[F.col("x")], name="cum")
@@ -5452,27 +5140,7 @@ def q_events_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bounded by distinct durations) carries every window.
     from pyspark.sql.window import Window
 
-    ev0 = table(spark, sf_dir, "events")
-    per = ev0.groupBy("user_id").agg(
-        F.min("ts").alias("entry_ts"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "purch_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    pu = per.select(
-        F.when(
-            F.col("purch_ts").isNotNull(),
-            F.datediff(F.col("purch_ts").cast("date"), F.col("entry_ts").cast("date")),
-        )
-        .otherwise(
-            F.datediff(F.col("last_ts").cast("date"), F.col("entry_ts").cast("date"))
-        )
-        .cast("bigint")
-        .alias("t"),
-        F.when(F.col("purch_ts").isNotNull(), 1).otherwise(0).alias("obs"),
-    )
-    lv = pu.groupBy("t").agg(
+    lv = _time_to_purchase(spark, sf_dir).groupBy("t").agg(
         F.sum("obs").cast("bigint").alias("d"),
         F.count(F.lit(1)).cast("bigint").alias("m"),
     )
@@ -5593,23 +5261,11 @@ def q_ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact integer moments. 100 TB: one fact groupBy to the
     # calendar-bounded spine; the harmonic dimension is a <=4-row
     # broadcast; work = spine x harmonics column math.
-    ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(F.expr("unix_micros(ts) div 3600000000").alias("hr"))
-        .groupBy("hr")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
+    h = hourly_series(spark, sf_dir)  # feeds span start + moments + projections
+    dense = h.crossJoin(F.broadcast(h.agg(F.min("hr").alias("lo")))).select(
+        (F.col("hr") - F.col("lo")).alias("t"), "x"
     )
-    b = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    spine = b.select("lo", F.explode(F.sequence("lo", "hi")).alias("hr"))
-    dense = (
-        spine.join(c, "hr", "left")
-        .select(
-            (F.col("hr") - F.col("lo")).alias("t"),
-            F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-        )
-        .localCheckpoint(eager=False)  # feeds moments + projections
-    )
-    nn = dense.agg(
+    nn = h.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),

@@ -281,7 +281,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     because the supplier graph saturates). The closing check runs
     against the canonical u<v edge set via one semi join.
     """
-    e = _undirected(edges)  # reused 3x: degrees, wedges, close
+    return _node_triangles(_undirected(edges))
+
+
+def _node_triangles(e: DataFrame) -> DataFrame:
+    """``triangle_count`` over canonical edges (u, v), which it reads
+    three times: degrees, wedges and the closing check."""
     oriented = _oriented(e)
     o1 = oriented.select("a", F.col("x").alias("b"), F.col("dx").alias("db"))
     o2 = oriented.select("a", F.col("x").alias("c"), F.col("dx").alias("dc"))
@@ -573,15 +578,15 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     T(v) is the node's triangle participation count. Returns
     (node, deg, triangles, coeff).
 
-    Rides ``triangle_count`` (degree-ordered wedge-close — hub-safe)
-    for T and one degree aggregate over the canonical edge set; nodes
-    with no triangles keep coeff 0 via the left join's coalesce. The
+    Rides ``triangle_count``'s wedge-close (degree-ordered, hub-safe)
+    for T and one degree aggregate over the same canonical edge set;
+    nodes with no triangles keep coeff 0 via the left join's coalesce. The
     coefficient is one integer-over-integer double division —
     correctly rounded in both engines, no rounding needed.
     """
     e = _undirected(edges)  # reused: degrees + triangle pass
     deg = _degrees(e)
-    tri = triangle_count(e.select(F.col("u").alias("src"), F.col("v").alias("dst")))
+    tri = _node_triangles(e)
     out = deg.where(F.col("deg") >= 2).join(tri, "node", "left")
     t = F.coalesce(F.col("triangles"), F.lit(0)).cast("bigint")
     return out.select(
@@ -646,63 +651,6 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
             "node", (F.col("r") / F.col("t")).alias("hub")
         )
     return h.join(a, "node").select("node", "hub", "auth")
-
-
-def _triangles(e: DataFrame, broadcast_adjacency: bool = False) -> DataFrame:
-    """(a, b, c) with a < b < c: every triangle of a canonical
-    (u < v, distinct) edge frame exactly once, via degree-ordered
-    adjacency-list intersection (the "edge iterator" formulation of
-    Cohen's map-reduce triangle algorithm): orient each edge toward the
-    higher-(degree, id) endpoint — a DAG, so each triangle has a unique
-    all-out apex — build per-node OUT-neighbor arrays, and for every
-    oriented edge (a→x) emit array_intersect(N⁺(a), N⁺(x)). The triple
-    is re-sorted to id order so downstream edge projections
-    (a,b)/(a,c)/(b,c) are already canonical.
-
-    Why intersection instead of the wedge self-join (the pre-round-9
-    shape): the wedge join MATERIALIZES Σ outdeg² candidate rows
-    through a shuffle and then semi-joins them against the edge set —
-    at sf0.1's co-basket graph that is >20M wedge rows sorted twice.
-    The intersect form ships each adjacency array once per incident
-    oriented edge (Σ outdeg ≤ |E| array references) and intersects
-    JVM-side (hash, O(|N⁺(a)|+|N⁺(x)|) per edge) — same asymptotic
-    triangle work, none of the wedge materialization. Measured at
-    sf0.1: 9.2s → 3.9s (broadcast) / 6.3s (hash) for the identical
-    1,884,488-triangle output.
-
-    ``broadcast_adjacency``: the degree and adjacency frames are
-    |V|-keyed with Σ|N⁺| = |E| total entries — broadcastable ONLY when
-    the edge set fits the driver (callers that have the edge count
-    cheaply pass edge_count ≤ 5M). At 100 TB leave False: the three joins hash
-    co-partition on the node id, the same single-key shuffle family as
-    pagerank; nothing here is ever all-pairs.
-    """
-    B = F.broadcast if broadcast_adjacency else (lambda df: df)
-    oriented = _oriented(e, broadcast_adjacency)
-    adj = oriented.groupBy("a").agg(F.collect_list("x").alias("nb"))
-    with_nbrs = (
-        oriented.join(
-            B(adj.select(F.col("a").alias("_a"), F.col("nb").alias("nb_a"))),
-            F.col("a") == F.col("_a"),
-        )
-        # left: a sink node (no out-edges) has no adjacency row but its
-        # in-edges still reach here — they close no triangle (empty ∩).
-        .join(
-            B(adj.select(F.col("a").alias("_x"), F.col("nb").alias("nb_x"))),
-            F.col("x") == F.col("_x"),
-            "left",
-        )
-        .select(
-            "a",
-            "x",
-            F.array_intersect(
-                "nb_a", F.coalesce("nb_x", F.array().cast("array<long>"))
-            ).alias("ws"),
-        )
-    )
-    tri = with_nbrs.select("a", "x", F.explode("ws").alias("w"))
-    arr = F.array_sort(F.array("a", "x", "w"))
-    return tri.select(arr[0].alias("a"), arr[1].alias("b"), arr[2].alias("c"))
 
 
 def ktruss_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
