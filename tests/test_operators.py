@@ -1333,8 +1333,10 @@ def test_kendall_tau_b_hand_computed(spark):
     # no ties -> tau = (5-1)/6 = 2/3 exactly.
     from trembita_spark.operators.stats import kendall_tau_b
 
+    # (6.0, 9) has y outside y_values: dropped like the null rows.
     df = spark.createDataFrame(
-        [(1.0, 1), (2.0, 3), (3.0, 2), (4.0, 4), (None, 1), (5.0, None)],
+        [(1.0, 1), (2.0, 3), (3.0, 2), (4.0, 4), (None, 1), (5.0, None),
+         (6.0, 9)],
         "x double, y int",
     )
     r = kendall_tau_b(df, "x", "y", [1, 2, 3, 4]).collect()[0]
@@ -1345,10 +1347,11 @@ def test_kendall_tau_b_hand_computed(spark):
 def test_kendall_tau_b_matches_bruteforce_with_ties(spark):
     # heavy ties on both axes: the operator's cell/prefix-sum form must
     # agree with the O(n^2) textbook definition (C, D over strictly
-    # differing pairs; n1/n2 from the tie marginals).
+    # differing pairs; n1/n2 from the tie marginals). ordinal_association
+    # reads the same pair counts: gamma and both Somers' D.
     import math
 
-    from trembita_spark.operators.stats import kendall_tau_b
+    from trembita_spark.operators.stats import kendall_tau_b, ordinal_association
 
     pts = [
         (1.0, 1), (1.0, 2), (1.0, 2), (2.0, 1), (2.0, 3),
@@ -1374,6 +1377,11 @@ def test_kendall_tau_b_matches_bruteforce_with_ties(spark):
     r = kendall_tau_b(df, "x", "y", [1, 2, 3, 4]).collect()[0]
     assert (r.n, r.concordant, r.discordant) == (n, C, D)
     assert abs(r.tau_b - expect) < 1e-15
+    o = ordinal_association(df, "x", "y", [1, 2, 3, 4]).collect()[0]
+    assert (o.n, o.concordant, o.discordant) == (n, C, D)
+    assert abs(o.gamma - (C - D) / (C + D)) < 1e-15
+    assert abs(o.somers_d_yx - (C - D) / (n0 - tx)) < 1e-15
+    assert abs(o.somers_d_xy - (C - D) / (n0 - ty)) < 1e-15
 
 
 def test_degree_assortativity_hand_computed(spark):
@@ -1501,6 +1509,28 @@ def test_friedman_hand_computed(spark):
         "blk int, trt string, t long",
     )
     assert friedman_test(opp, "blk", "trt", "t").collect()[0].chi2 == 0.0
+
+
+def test_page_hand_computed(spark):
+    # n=2 blocks, k=3 treatments, both ordered t1<t2<t3 by value: ranks
+    # [1,2,3] per block, R_j = n*j, L = n*(1+4+9) = 28; the closed form
+    # z = (L - nk(k+1)^2/4) / sqrt(nk^2(k+1)(k^2-1)/144)
+    #   = (28 - 24) / sqrt(4) = 2.
+    from trembita_spark.operators.stats import page_test
+
+    same = spark.createDataFrame(
+        [(1, "t1", 10), (1, "t2", 20), (1, "t3", 30),
+         (2, "t1", 1), (2, "t2", 2), (2, "t3", 3)],
+        "blk int, trt string, t long",
+    )
+    r = page_test(same, "blk", "trt", "t").collect()[0]
+    n, k = 2, 3
+    assert (r.n_blocks, r.k) == (n, k)
+    assert r.l_stat == n * sum(j * j for j in range(1, k + 1)) == 28.0
+    z = (r.l_stat - n * k * (k + 1) ** 2 / 4) / (
+        (n * k * k * (k + 1) * (k * k - 1) / 144) ** 0.5
+    )
+    assert r.z == z == 2.0
 
 
 def test_closeness_hand_computed(spark):

@@ -1,22 +1,25 @@
 """External-connector surface (the reference's integration modules:
-Kafka, Cassandra, Elasticsearch, Slick/JDBC — reference:
-seamless/*/src, unverified; SURVEY.md §3.1).
+Kafka and Slick/JDBC — reference: seamless/*/src, unverified;
+SURVEY.md §3.1).
 
-Spark-first, every one of these is ``spark.read[Stream].format(...)``
-with connector-specific options — the builders below produce the
-correctly-configured reader/writer for each, with the scale-relevant
-options (parallelism, pushdown, offsets) spelled out rather than left
-to defaults. The connector JARs (spark-sql-kafka, spark-cassandra-
-connector, elasticsearch-spark) are NOT bundled in this environment, so
-``load()`` on those raises Spark's missing-data-source error; the JDBC
-path runs for real against the embedded Derby database
-(`q_source_jdbc`), and the builders' option plumbing is unit-tested.
-On a cluster, adding the JAR is the only change.
+Spark-first, each connector is ``spark.read[Stream].format(...)`` with
+connector-specific options. ``kafka_stream_reader`` and ``jdbc_reader``
+build the configured readers from the pure option maps
+``kafka_stream_options`` and ``jdbc_options``, with the scale-relevant
+options (offset bounds, partition bounds) spelled out rather than left
+to defaults; ``socket_stream_reader`` is the core-Spark line stream.
+The Kafka connector JAR (spark-sql-kafka) is NOT bundled in this
+environment, so ``load()`` on that reader raises Spark's
+missing-data-source error; the JDBC path runs for real against the
+embedded Derby database (`q_source_jdbc`), and the option plumbing is
+unit-tested. On a cluster, adding the JAR is the only change. The
+``register_*`` functions add the custom Python data sources and sink
+(``repeat``, ``pydump``, ``pyticks``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamReader
 
 
@@ -60,37 +63,6 @@ def kafka_stream_reader(
             max_offsets_per_trigger, fail_on_data_loss,
         )
     )
-
-
-def cassandra_reader(
-    spark: SparkSession, keyspace: str, table: str
-):
-    """Configured Cassandra table reader (DataSource V2 name
-    ``org.apache.spark.sql.cassandra``). The connector maps Cassandra
-    token ranges to Spark partitions and pushes partition-key and
-    clustering-column predicates into CQL — filter on those columns,
-    never on unindexed ones, or the scan degenerates to full-cluster."""
-    return (
-        spark.read.format("org.apache.spark.sql.cassandra")
-        .option("keyspace", keyspace)
-        .option("table", table)
-    )
-
-
-def elasticsearch_reader(
-    spark: SparkSession, resource: str, nodes: str, query: str | None = None
-):
-    """Configured Elasticsearch reader (``org.elasticsearch.spark.sql``):
-    one Spark partition per ES shard; ``es.query`` pushes the filter to
-    the cluster so only matching docs cross the wire."""
-    r = (
-        spark.read.format("org.elasticsearch.spark.sql")
-        .option("es.nodes", nodes)
-        .option("es.resource", resource)
-    )
-    if query is not None:
-        r = r.option("es.query", query)
-    return r
 
 
 def jdbc_options(
@@ -153,17 +125,6 @@ def socket_stream_reader(
         spark.readStream.format("socket")
         .option("host", host)
         .option("port", str(port))
-    )
-
-
-def kafka_sink(df: DataFrame, bootstrap_servers: str, topic: str, checkpoint: str):
-    """Configured Kafka stream writer: expects ``key``/``value`` binary
-    or string columns; checkpointed for exactly-once-per-offset."""
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
     )
 
 

@@ -109,22 +109,110 @@ def hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense hourly event-count series ``(hr, x)``: :func:`hourly_counts`
-    on the full spine from the first to the last event hour, empty hours
-    as true zeros (DuckDB: ``generate_series(lo, hi)`` LEFT JOIN with
-    ``COALESCE(x, 0)``). Calendar-sized at any event volume; checkpointed
-    lazily, because most time-series keys read it more than once."""
+def hourly_type_counts(events: DataFrame, **types: str) -> DataFrame:
+    """Sparse hourly counts per event type ``(hr, <name>...)``: one
+    bigint column per ``name=event_type`` pair, the number of
+    ``events`` rows of that type in the hour. Every hour with a row in
+    ``events`` gets a row (zeros where no event has a listed type).
+    Checkpointed lazily, like :func:`hourly_counts`."""
     from pyspark.sql import functions as F
 
-    c = hourly_counts(spark, sf_dir)
-    spine = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
+    return (
+        events.select(
+            F.expr("unix_micros(ts) div 3600000000").alias("hr"), "event_type"
+        )
+        .groupBy("hr")
+        .agg(
+            *[
+                F.sum(F.when(F.col("event_type") == t, 1).otherwise(0))
+                .cast("bigint")
+                .alias(name)
+                for name, t in types.items()
+            ]
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def dense_hours(counts: DataFrame) -> DataFrame:
+    """A sparse hourly frame ``(hr, ...)`` on the full spine from its
+    first to its last hour, every value column zero-filled for the
+    empty hours (DuckDB: ``generate_series(lo, hi)`` LEFT JOIN with
+    ``COALESCE(v, 0)``). Calendar-sized at any event volume;
+    checkpointed lazily, because the time-series keys read it more
+    than once."""
+    from pyspark.sql import functions as F
+
+    spine = counts.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
         F.explode(F.sequence("lo", "hi")).alias("hr")
     )
     return (
-        spine.join(c, "hr", "left")
-        .select("hr", F.coalesce("x", F.lit(0)).alias("x"))
+        spine.join(counts, "hr", "left")
+        .select(
+            "hr",
+            *[F.coalesce(v, F.lit(0)).alias(v) for v in counts.columns if v != "hr"],
+        )
         .localCheckpoint(eager=False)
+    )
+
+
+def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dense hourly event-count series ``(hr, x)``: :func:`hourly_counts`
+    through :func:`dense_hours`, empty hours as true zeros."""
+    return dense_hours(hourly_counts(spark, sf_dir))
+
+
+def daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(event_type, day) revenue ``(event_type, day, rev)``: ``day``
+    is the epoch day (DuckDB:
+    ``CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)``) and ``rev``
+    the exact DECIMAL(18,2) sum of the non-null values. A cell with no
+    valued event has no row. Checkpointed lazily."""
+    from pyspark.sql import functions as F
+
+    return (
+        table(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .groupBy(
+            "event_type",
+            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
+            .cast("bigint")
+            .alias("day"),
+        )
+        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("rev"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def order_baskets(lineitem: DataFrame) -> DataFrame:
+    """The distinct ``(okey, part)`` order baskets of a lineitem frame
+    (``l_orderkey``, ``l_partkey``). Checkpointed lazily: the basket
+    keys read it for the supports and both sides of the pair join."""
+    from pyspark.sql import functions as F
+
+    return (
+        lineitem.select(
+            F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def basket_pairs(baskets: DataFrame) -> DataFrame:
+    """Part pairs ``(part_a, part_b, support)`` of :func:`order_baskets`,
+    ``part_a < part_b``, with the bigint number of baskets holding both:
+    a self-join on the basket key — co-partitioned, one shuffle, pair
+    fan-out bounded by basket size squared, never |parts|²."""
+    from pyspark.sql import functions as F
+
+    a = baskets.select("okey", F.col("part").alias("part_a"))
+    b = baskets.select("okey", F.col("part").alias("part_b"))
+    return (
+        a.join(b, "okey")
+        .where(F.col("part_a") < F.col("part_b"))
+        .groupBy("part_a", "part_b")
+        .agg(F.count(F.lit(1)).alias("support"))
     )
 
 

@@ -14,10 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trembita_spark.contract import (
+    basket_pairs,
     customer_points,
+    daily_revenue,
+    dense_hours,
     dsum,
     hourly_counts,
     hourly_series,
+    hourly_type_counts,
+    order_baskets,
     register,
     table,
 )
@@ -787,6 +792,40 @@ def q_agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _quantity_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-``l_returnflag`` shape of ``l_quantity``: ``(l_returnflag, n,
+    mu, v, skew, kurt_excess)`` — population mean and variance and the
+    standardized third and fourth moments, from EXACT integer power sums
+    (a commutative bigint monoid, map-side combined) through one fixed
+    double expression tree. σ³ is spelled v·sqrt(v) (correctly-rounded
+    ops), never pow(v, 1.5) (libm, 1-ulp risk)."""
+    li = table(spark, sf_dir, "lineitem")
+    q = F.col("l_quantity").cast("long")
+    s = li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum(q).cast("double").alias("s1"),
+        F.sum(q * q).cast("double").alias("s2"),
+        F.sum(q * q * q).cast("double").alias("s3"),
+        F.sum(q * q * q * q).cast("double").alias("s4"),
+    )
+    n = F.col("n")
+    s1, s2, s3, s4 = F.col("s1"), F.col("s2"), F.col("s3"), F.col("s4")
+    m = s.select(
+        "l_returnflag", "n", "s1", "s2", "s3", "s4",
+        (s1 / n).alias("mu"),
+        (s2 / n - (s1 / n) * (s1 / n)).alias("v"),
+    )
+    mu, v = F.col("mu"), F.col("v")
+    return m.select(
+        "l_returnflag", "n", "mu", "v",
+        ((s3 / n - 3 * mu * (s2 / n) + 2 * mu * mu * mu) / (v * F.sqrt(v))).alias("skew"),
+        (
+            (s4 / n - 4 * mu * (s3 / n) + 6 * mu * mu * (s2 / n) - 3 * mu * mu * mu * mu)
+            / (v * v) - 3
+        ).alias("kurt_excess"),
+    )
+
+
 @register(
     "q_agg_skewkurt",
     oracle="""
@@ -823,32 +862,12 @@ def q_agg_skewkurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the closed-form standardized-moment arithmetic on identical
     # doubles is bit-exact in both engines. sigma^3 is spelled v*sqrt(v)
     # (mul+sqrt are correctly rounded; pow(v,1.5) is libm, 1-ulp risk).
-    li = table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("long")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(q).cast("double").alias("s1"),
-        F.sum(q * q).cast("double").alias("s2"),
-        F.sum(q * q * q).cast("double").alias("s3"),
-        F.sum(q * q * q * q).cast("double").alias("s4"),
-    )
-    n = F.col("n")
-    s1, s2, s3, s4 = F.col("s1"), F.col("s2"), F.col("s3"), F.col("s4")
-    m = s.select(
-        "l_returnflag", "n", "s1", "s2", "s3", "s4",
-        (s1 / n).alias("mu"),
-        (s2 / n - (s1 / n) * (s1 / n)).alias("v"),
-    )
-    mu, v = F.col("mu"), F.col("v")
-    return m.select(
+    return _quantity_shape(spark, sf_dir).select(
         "l_returnflag",
-        mu.alias("mean_qty"),
-        v.alias("var_pop"),
-        ((s3 / n - 3 * mu * (s2 / n) + 2 * mu * mu * mu) / (v * F.sqrt(v))).alias("skew"),
-        (
-            (s4 / n - 4 * mu * (s3 / n) + 6 * mu * mu * (s2 / n) - 3 * mu * mu * mu * mu)
-            / (v * v) - 3
-        ).alias("kurt_excess"),
+        F.col("mu").alias("mean_qty"),
+        F.col("v").alias("var_pop"),
+        "skew",
+        "kurt_excess",
     )
 
 
@@ -1269,6 +1288,31 @@ def q_stat_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_2samp(ev, "value", F.col("event_type") == "purchase")
 
 
+def _drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The purchase-vs-click value drift frame ``(bin, ca, cb, n_a,
+    n_b)``: per fixed-width value bin ``floor(value / 25)``, the exact
+    purchase (``ca``) and click (``cb``) counts, with the arm totals
+    broadcast onto every bin."""
+    ev = table(spark, sf_dir, "events").where(
+        F.col("event_type").isin("purchase", "click") & F.col("value").isNotNull()
+    )
+    b = ev.groupBy(
+        F.floor(F.col("value") / 25).cast("bigint").alias("bin")
+    ).agg(
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+        .cast("bigint")
+        .alias("ca"),
+        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+        .cast("bigint")
+        .alias("cb"),
+    )
+    t = b.agg(
+        F.sum("ca").cast("bigint").alias("n_a"),
+        F.sum("cb").cast("bigint").alias("n_b"),
+    )
+    return b.crossJoin(F.broadcast(t))
+
+
 @register(
     "q_stat_psi",
     oracle="""
@@ -1301,28 +1345,11 @@ def q_stat_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the both-arms filter are exact integers; the p/q divisions are
     # identical double trees, and ln is libm (1-ulp engine skew) →
     # round-12, the q_agg_entropy discipline (parity rule 5).
-    ev = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin("purchase", "click") & F.col("value").isNotNull()
-    )
-    b = ev.groupBy(
-        F.floor(F.col("value") / 25).cast("bigint").alias("bin")
-    ).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("ca"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("cb"),
-    )
-    t = b.agg(
-        F.sum("ca").cast("bigint").alias("n_a"),
-        F.sum("cb").cast("bigint").alias("n_b"),
-    )
     both = (F.col("ca") > 0) & (F.col("cb") > 0)
     p = F.col("ca").cast("double") / F.col("n_a")
     q = F.col("cb").cast("double") / F.col("n_b")
     return (
-        b.crossJoin(F.broadcast(t))
+        _drift_bins(spark, sf_dir)
         .groupBy("n_a", "n_b")
         .agg(
             F.sum(F.when(both, 1).otherwise(0)).cast("bigint").alias("n_bins"),
@@ -1422,23 +1449,6 @@ def q_stat_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # better drift metric when new bins appear in one snapshot, which is
     # exactly what corpus drift looks like. One hash agg + broadcast
     # scalar totals + one fold; ln is libm → round-12 (parity rule 5).
-    ev = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin("purchase", "click") & F.col("value").isNotNull()
-    )
-    b = ev.groupBy(
-        F.floor(F.col("value") / 25).cast("bigint").alias("bin")
-    ).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("ca"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("cb"),
-    )
-    t = b.agg(
-        F.sum("ca").cast("bigint").alias("n_a"),
-        F.sum("cb").cast("bigint").alias("n_b"),
-    )
     p = F.col("ca").cast("double") / F.col("n_a")
     q = F.col("cb").cast("double") / F.col("n_b")
     m = 0.5 * p + 0.5 * q
@@ -1446,7 +1456,7 @@ def q_stat_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0)
     ) + F.when(F.col("cb") > 0, 0.5 * q * F.log(q / m)).otherwise(F.lit(0))
     return (
-        b.crossJoin(F.broadcast(t))
+        _drift_bins(spark, sf_dir)
         .groupBy("n_a", "n_b")
         .agg(F.round(F.sum(term), 12).alias("jsd"))
     )
@@ -1782,22 +1792,10 @@ def q_mining_copair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unique (support desc, part_a, part_b) order.
     from pyspark.sql.window import Window
 
-    bask = (
-        table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds pairs (twice) + supports + N
-    )
+    bask = order_baskets(table(spark, sf_dir, "lineitem"))
     n = bask.agg(F.countDistinct("okey").alias("n_orders"))
     supp1 = bask.groupBy("part").agg(F.count(F.lit(1)).alias("s"))
-    a = bask.select(F.col("okey"), F.col("part").alias("part_a"))
-    b = bask.select(F.col("okey"), F.col("part").alias("part_b"))
-    pairs = (
-        a.join(b, "okey")
-        .where(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
+    pairs = basket_pairs(bask)
     top = pairs.orderBy(
         F.col("support").desc(), "part_a", "part_b"
     ).limit(20).withColumn(
@@ -2815,31 +2813,8 @@ def q_stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounding (parity rule 2). σ³ spelled v·sqrt(v) (correctly-rounded
     # ops), never pow(v,1.5) (libm, 1-ulp risk). 100 TB: one partial-agg
     # scan, one row per group out — nothing else moves.
-    li = table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("long")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(q).cast("double").alias("s1"),
-        F.sum(q * q).cast("double").alias("s2"),
-        F.sum(q * q * q).cast("double").alias("s3"),
-        F.sum(q * q * q * q).cast("double").alias("s4"),
-    )
+    k = _quantity_shape(spark, sf_dir)
     n = F.col("n")
-    s1, s2, s3, s4 = F.col("s1"), F.col("s2"), F.col("s3"), F.col("s4")
-    m = s.select(
-        "l_returnflag", "n", "s1", "s2", "s3", "s4",
-        (s1 / n).alias("mu"),
-        (s2 / n - (s1 / n) * (s1 / n)).alias("v"),
-    )
-    mu, v = F.col("mu"), F.col("v")
-    k = m.select(
-        "l_returnflag", "n",
-        ((s3 / n - 3 * mu * (s2 / n) + 2 * mu * mu * mu) / (v * F.sqrt(v))).alias("skew"),
-        (
-            (s4 / n - 4 * mu * (s3 / n) + 6 * mu * mu * (s2 / n) - 3 * mu * mu * mu * mu)
-            / (v * v) - 3
-        ).alias("kurt_excess"),
-    )
     sk, ku = F.col("skew"), F.col("kurt_excess")
     return k.select(
         "l_returnflag",
@@ -2912,6 +2887,26 @@ def q_stat_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _complete_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The complete-block frame ``(user_id, event_type, t)`` of the
+    repeated-measures tests: ``t`` is a user's exact cent-total spend
+    on one event type (bigint), and only users with all 5 event types
+    enter (DuckDB: ``HAVING count(*) = 5``)."""
+    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+    us = ev.groupBy("user_id", "event_type").agg(
+        F.sum(v100).cast("bigint").alias("t")
+    )
+    us = us.localCheckpoint(eager=False)  # feeds the block filter + join
+    full_blocks = (
+        us.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("__k"))
+        .where(F.col("__k") == 5)
+        .select("user_id")
+    )
+    return us.join(full_blocks, "user_id")
+
+
 @register(
     "q_stat_friedman",
     oracle="""
@@ -2968,16 +2963,7 @@ def q_stat_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lane. 100 TB: two user-key shuffles, work ∝ users·k².
     from trembita_spark.operators.stats import friedman_test
 
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    us = ev.groupBy("user_id", "event_type").agg(
-        F.sum(v100).cast("bigint").alias("t")
-    )
-    us = us.localCheckpoint(eager=False)  # feeds the block filter + join
-    full_blocks = us.groupBy("user_id").agg(F.count(F.lit(1)).alias("__k")).where(
-        F.col("__k") == 5
-    ).select("user_id")
-    cb = us.join(full_blocks, "user_id")
+    cb = _complete_blocks(spark, sf_dir)
     return friedman_test(cb, "user_id", "event_type", "t")
 
 
@@ -3048,16 +3034,7 @@ def q_stat_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two user-key shuffles, work ∝ users·k².
     from trembita_spark.operators.stats import page_test
 
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    us = ev.groupBy("user_id", "event_type").agg(
-        F.sum(v100).cast("bigint").alias("t")
-    )
-    us = us.localCheckpoint(eager=False)  # feeds the block filter + join
-    full_blocks = us.groupBy("user_id").agg(F.count(F.lit(1)).alias("__k")).where(
-        F.col("__k") == 5
-    ).select("user_id")
-    cb = us.join(full_blocks, "user_id")
+    cb = _complete_blocks(spark, sf_dir)
     return page_test(cb, "user_id", "event_type", "t")
 
 
@@ -3402,6 +3379,23 @@ def q_stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _high_value_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paired per-user binary ratings ``(user_id, x, y)``: ``x`` = 1 when
+    the user has a click with value > 100, ``y`` = 1 for such a
+    purchase (else 0)."""
+    ev = table(spark, sf_dir, "events")
+    return ev.groupBy("user_id").agg(
+        F.max(
+            F.when((F.col("event_type") == "click") & (F.col("value") > 100), 1)
+            .otherwise(0)
+        ).alias("x"),
+        F.max(
+            F.when((F.col("event_type") == "purchase") & (F.col("value") > 100), 1)
+            .otherwise(0)
+        ).alias("y"),
+    )
+
+
 @register(
     "q_stat_mcnemar",
     oracle="""
@@ -3438,17 +3432,7 @@ def q_stat_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two statistics are single double divisions, NO rounding (parity
     # rule 2). 100 TB: one conditional-max agg on the user key + a
     # scalar rollup.
-    ev = table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "click") & (F.col("value") > 100), 1)
-            .otherwise(0)
-        ).alias("x"),
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") > 100), 1)
-            .otherwise(0)
-        ).alias("y"),
-    )
+    per = _high_value_flags(spark, sf_dir)
     s = per.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
         F.sum(F.when((F.col("x") == 1) & (F.col("y") == 0), 1).otherwise(0))
@@ -3759,6 +3743,25 @@ def q_ml_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cents_histogram(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The value-support histogram of ``events.value`` on the cent lane:
+    ``pv`` is ``(v, cnt)`` with ``v`` the exact value in cents (bigint)
+    and ``cnt`` its count, non-null values only; ``c`` adds the
+    inclusive running count ``cum`` over ascending ``v`` from one
+    distributed prefix sum, so each value's rank interval is
+    ``(cum - cnt, cum]``. ``pv`` is checkpointed lazily (it feeds the
+    prefix sum and the caller's totals)."""
+    from trembita_spark.operators.ranking import prefix_sum
+
+    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+    pv = ev.groupBy(v100.alias("v")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    pv = pv.localCheckpoint(eager=False)
+    return pv, prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
+
+
 @register(
     "q_agg_trimmed_mean",
     oracle="""
@@ -3808,15 +3811,7 @@ def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # divisions, NO rounding (parity rule 2). The robust-location
     # companion to q_agg_mad / q_window_hampel. 100 TB: one hash agg +
     # one prefix sum over the value support.
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    pv = ev.groupBy(v100.alias("v")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
+    pv, c = _cents_histogram(spark, sf_dir)
     t = pv.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.expr("sum(cnt) div 10").cast("bigint").alias("k"),
@@ -3905,15 +3900,7 @@ def q_agg_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once into doubles (parity rule 2, no rounding). 100 TB: one hash
     # agg + one prefix sum + one broadcast-scalar re-scan of the
     # support frame.
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    pv = ev.groupBy(v100.alias("v")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
+    pv, c = _cents_histogram(spark, sf_dir)
     c = c.localCheckpoint(eager=False)  # feeds quartile + census passes
     t = pv.agg(
         F.sum("cnt").cast("bigint").alias("n"),
@@ -3997,17 +3984,7 @@ def q_stat_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from one conditional-max user agg; the kappa chain is one fixed
     # double tree — NO rounding (parity rule 2). 100 TB: one user-key
     # agg + a scalar rollup.
-    ev = table(spark, sf_dir, "events")
-    per = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "click") & (F.col("value") > 100), 1)
-            .otherwise(0)
-        ).alias("x"),
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") > 100), 1)
-            .otherwise(0)
-        ).alias("y"),
-    )
+    per = _high_value_flags(spark, sf_dir)
     s = per.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.when((F.col("x") == 1) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias("a"),
@@ -4621,6 +4598,24 @@ _CONF_METRICS = [
 ]
 
 
+def _confusion_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-row confusion matrix ``(tp, fp, fn, tn)`` of the
+    threshold classifier ``value >= 10`` against the label
+    ``event_type = 'purchase'`` — exact bigint counts."""
+    ev = table(spark, sf_dir, "events")
+    pred = F.col("value") >= 10
+    truth = F.col("event_type") == "purchase"
+    cell = lambda p, t: F.sum(  # noqa: E731
+        F.when(p & t, 1).otherwise(0)
+    ).cast("bigint")
+    return ev.agg(
+        cell(pred, truth).alias("tp"),
+        cell(pred, ~truth).alias("fp"),
+        cell(~pred, truth).alias("fn"),
+        cell(~pred, ~truth).alias("tn"),
+    )
+
+
 @register(
     "q_eval_confusion",
     oracle=f"""
@@ -4643,18 +4638,7 @@ def q_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on both engines. This is the eval half every ML key needs — the
     # q_eval_ndcg/recall discipline applied to classification. 100 TB:
     # a single partial-aggregated scan, O(1) result.
-    ev = table(spark, sf_dir, "events")
-    pred = F.col("value") >= 10
-    truth = F.col("event_type") == "purchase"
-    cell = lambda p, t: F.sum(  # noqa: E731
-        F.when(p & t, 1).otherwise(0)
-    ).cast("bigint")
-    c = ev.agg(
-        cell(pred, truth).alias("tp"),
-        cell(pred, ~truth).alias("fp"),
-        cell(~pred, truth).alias("fn"),
-        cell(~pred, ~truth).alias("tn"),
-    )
+    c = _confusion_cells(spark, sf_dir)
     return c.selectExpr("tp", "fp", "fn", "tn", *_CONF_METRICS)
 
 
@@ -5444,18 +5428,7 @@ def q_eval_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # product overflows BIGINT — the q_stat_odds_ratio lesson), and
     # sqrt is 1-ulp libm -> round-12. Youden's J is two exact
     # divisions in fixed formula-text order, no rounding.
-    ev = table(spark, sf_dir, "events")
-    pred = F.col("value") >= 10
-    truth = F.col("event_type") == "purchase"
-    cell = lambda p, t: F.sum(  # noqa: E731
-        F.when(p & t, 1).otherwise(0)
-    ).cast("bigint")
-    c = ev.agg(
-        cell(pred, truth).alias("tp"),
-        cell(pred, ~truth).alias("fp"),
-        cell(~pred, truth).alias("fn"),
-        cell(~pred, ~truth).alias("tn"),
-    )
+    c = _confusion_cells(spark, sf_dir)
     return c.selectExpr("tp", "fp", "fn", "tn", *_MCC_FIELDS)
 
 
@@ -5708,24 +5681,12 @@ def q_mining_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-integer ratio arithmetic in shared formula text — no
     # rounding (parity rule 2). 100 TB: one basket shuffle, 20-row
     # result.
-    bask = (
-        table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds pairs (twice) + supports + N
-    )
+    bask = order_baskets(table(spark, sf_dir, "lineitem"))
     n = bask.agg(F.countDistinct("okey").alias("n_bask"))
     supp1 = bask.groupBy("part").agg(F.count(F.lit(1)).cast("bigint").alias("s"))
-    a = bask.select("okey", F.col("part").alias("part_a"))
-    b = bask.select("okey", F.col("part").alias("part_b"))
-    top = (
-        a.join(b, "okey")
-        .where(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
-        .orderBy(F.col("support").desc(), "part_a", "part_b")
-        .limit(10)
-    )
+    top = basket_pairs(bask).orderBy(
+        F.col("support").desc(), "part_a", "part_b"
+    ).limit(10)
     rules = top.selectExpr(
         "part_a AS antecedent", "part_b AS consequent", "support"
     ).unionAll(
@@ -5803,12 +5764,7 @@ def q_recsys_itemknn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 60-row result.
     from pyspark.sql.window import Window
 
-    bask = (
-        table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds supports + both join sides
-    )
+    bask = order_baskets(table(spark, sf_dir, "lineitem"))
     supp1 = bask.groupBy("part").agg(F.count(F.lit(1)).cast("bigint").alias("s"))
     supp1 = supp1.localCheckpoint(eager=False)  # feeds heads + neighbor supports
     heads = supp1.orderBy(F.col("s").desc(), "part").limit(20)
@@ -5901,15 +5857,7 @@ def q_agg_trimmed_multi_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double divisions, NO rounding (parity rule 2). 100 TB: one hash
     # agg + one prefix sum over the value support, constant extra cost
     # per additional k.
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    pv = ev.groupBy(v100.alias("v")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
+    pv, c = _cents_histogram(spark, sf_dir)
     t = pv.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.expr("sum(cnt) div 20").cast("bigint").alias("k5"),
@@ -6744,8 +6692,6 @@ def q_stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell at the end. 100 TB: one contingency aggregate per arm + one
     # prefix sum over the value support; the decile dimension is a
     # 9-row broadcast.
-    from trembita_spark.operators.ranking import prefix_sum
-
     ev = (
         table(spark, sf_dir, "events")
         .where(
@@ -6928,17 +6874,7 @@ def q_stat_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # calendar-bounded self-join, z shares formula text (sqrt ->
     # round-12). 100 TB: one fact-table groupBy to (type, day); the
     # lag join is spine-sized.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    d = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-            .cast("bigint")
-            .alias("day"),
-        )
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("rev"))
-        .localCheckpoint(eager=False)  # feeds both lag sides
-    )
+    d = daily_revenue(spark, sf_dir)  # feeds both lag sides
     prev = d.select(
         "event_type", (F.col("day") + 7).alias("day"), F.col("rev").alias("prev")
     )
@@ -7381,15 +7317,7 @@ def q_stat_ks_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 1.5e-7 approximation floor -> round-6 on D. 100 TB: one
     # partial agg + one support-sized prefix sum; the erf column work
     # is support-bounded, never per-row.
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    x = ev.select(
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v")
-    )
-    pv = x.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + moments
-    c = prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
+    pv, c = _cents_histogram(spark, sf_dir)
     m = pv.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.sum(F.col("v") * F.col("cnt")).cast("bigint").alias("s"),
@@ -7505,15 +7433,7 @@ def q_stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ln/exp skew ~n*1e-16*|ln| stays below half-grid through 8x.
     # 100 TB: one partial agg + one support-sized prefix sum; all
     # per-support column work, exact-decimal reduce.
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    x = ev.select(
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v")
-    )
-    pv = x.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + moments
-    c = prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
+    pv, c = _cents_histogram(spark, sf_dir)
     m = pv.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.sum(F.col("v") * F.col("cnt")).cast("bigint").alias("s"),
@@ -8786,19 +8706,7 @@ def q_stat_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     # extra division on the final scalar row, bit-exact both engines.
     from trembita_spark.operators.stats import friedman_test
 
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    us = ev.groupBy("user_id", "event_type").agg(
-        F.sum(v100).cast("bigint").alias("t")
-    )
-    us = us.localCheckpoint(eager=False)
-    full_blocks = (
-        us.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("__k"))
-        .where(F.col("__k") == 5)
-        .select("user_id")
-    )
-    cb = us.join(full_blocks, "user_id")
+    cb = _complete_blocks(spark, sf_dir)
     f = friedman_test(cb, "user_id", "event_type", "t")
     return f.select(
         "n_blocks",
@@ -9274,45 +9182,25 @@ def q_stat_quade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # types, same convention as q_stat_friedman. At 100 TB: two
     # user-key shuffles + one value-support prefix + a 5-row rollup.
     from trembita_spark.operators.ranking import prefix_sum
-    from trembita_spark.operators.stats import friedman_test  # noqa: F401 — lane kin
+    from trembita_spark.operators.stats import _block_ranks
 
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    us = ev.groupBy("user_id", "event_type").agg(
-        F.sum(v100).cast("bigint").alias("t")
+    cb = _complete_blocks(spark, sf_dir).localCheckpoint(eager=False)
+    r = _block_ranks(cb, "user_id", "event_type", "t")  # (blk, trt, r2)
+    rng = cb.groupBy(F.col("user_id").alias("blk")).agg(
+        (F.max("t") - F.min("t")).cast("bigint").alias("rg")
     )
-    us = us.localCheckpoint(eager=False)
-    full_blocks = (
-        us.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("__k"))
-        .where(F.col("__k") == 5)
-        .select("user_id")
-    )
-    cb = us.join(full_blocks, "user_id").localCheckpoint(eager=False)
-    b = cb.select(
-        F.col("user_id"), F.col("event_type").alias("trt_b"), F.col("t").alias("t_b")
-    )
-    r = (
-        cb.join(b, "user_id")
-        .groupBy("user_id", "event_type")
-        .agg(
-            (
-                2 * F.sum(F.when(F.col("t_b") < F.col("t"), 1).otherwise(0))
-                + F.sum(F.when(F.col("t_b") == F.col("t"), 1).otherwise(0))
-                + 1
-            ).cast("bigint").alias("r2")
-        )
-    )
-    rng = cb.groupBy("user_id").agg((F.max("t") - F.min("t")).cast("bigint").alias("rg"))
     rv = rng.groupBy("rg").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     wr = prefix_sum(rv, "cnt", order_by=[F.col("rg")], name="cum").select(
         "rg", (2 * (F.col("cum") - F.col("cnt")) + F.col("cnt") + 1).alias("w2")
     )
     q = (
-        r.join(rng, "user_id")
+        r.join(rng, "blk")
         .join(wr, "rg")
-        .select("event_type", (dec(F.col("w2")) * (F.col("r2") - 6)).alias("q4"))
+        .select(
+            F.col("trt").alias("event_type"),
+            (dec(F.col("w2")) * (F.col("r2") - 6)).alias("q4"),
+        )
     )
     q = q.localCheckpoint(eager=False)  # feeds a16 + the per-treatment rollup
     sj = q.groupBy("event_type").agg(F.sum("q4").cast("decimal(38,0)").alias("s4"))
@@ -9330,7 +9218,7 @@ def q_stat_quade(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(
             F.broadcast(
-                full_blocks.agg(F.count(F.lit(1)).cast("bigint").alias("n_blocks"))
+                rng.agg(F.count(F.lit(1)).cast("bigint").alias("n_blocks"))
             )
         )
     )
@@ -9418,33 +9306,7 @@ def q_ts_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact groupBy to the hour contingency, spine joins, two scalar
     # rollups.
     ev = table(spark, sf_dir, "events")
-    c = (
-        ev.select(
-            F.expr("unix_micros(ts) div 3600000000").alias("hr"), "event_type"
-        )
-        .groupBy("hr")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("bigint")
-            .alias("x"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("bigint")
-            .alias("y"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    spine = c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi")).select(
-        F.explode(F.sequence("lo", "hi")).alias("hr")
-    )
-    d = (
-        spine.join(c, "hr", "left")
-        .select(
-            "hr",
-            F.coalesce("x", F.lit(0)).alias("x"),
-            F.coalesce("y", F.lit(0)).alias("y"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    d = dense_hours(hourly_type_counts(ev, x="click", y="purchase"))
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     s = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -9686,6 +9548,35 @@ def _mh_terms(expr: str) -> str:
     return " + ".join(expr.format(i=i) for i in range(7))
 
 
+def _dow_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stratified 2x2 tables of high-value (``value >= 50``) x
+    purchase over the 7 day-of-week strata, as ONE row of 28 exact
+    cells ``a{i}, b{i}, c{i}, d{i}`` plus the stratum totals ``n{i}``.
+    Day of week is integer epoch-day arithmetic ((days + 4) mod 7 —
+    1970-01-01 was a Thursday), so the strata are engine-identical."""
+    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    x = ev.select(
+        F.expr("(unix_micros(ts) div 86400000000 + 4) % 7").alias("dow"),
+        F.when(F.col("value") >= 50, 1).otherwise(0).alias("e"),
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
+    )
+    piv = x.agg(
+        *[
+            agg
+            for i in range(7)
+            for agg in (
+                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 1) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias(f"a{i}"),
+                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 1) & (F.col("y") == 0), 1).otherwise(0)).cast("bigint").alias(f"b{i}"),
+                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 0) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias(f"c{i}"),
+                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 0) & (F.col("y") == 0), 1).otherwise(0)).cast("bigint").alias(f"d{i}"),
+            )
+        ]
+    )
+    return piv.selectExpr(
+        "*", *[f"CAST(a{i} + b{i} + c{i} + d{i} AS BIGINT) AS n{i}" for i in range(7)]
+    )
+
+
 @register(
     "q_stat_mantel_haenszel",
     oracle=f"""
@@ -9732,26 +9623,7 @@ def q_stat_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conditional-count scan to a 28-cell scalar row; both sums are
     # FIXED 7-term chains — bit-exact, no rounding. At 100 TB: one
     # scan, O(1) after it.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    dow = F.expr("(unix_micros(ts) div 86400000000 + 4) % 7")
-    e = F.when(F.col("value") >= 50, 1).otherwise(0)
-    y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    x = ev.select(dow.alias("dow"), e.alias("e"), y.alias("y"))
-    piv = x.agg(
-        *[
-            agg
-            for i in range(7)
-            for agg in (
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 1) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias(f"a{i}"),
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 1) & (F.col("y") == 0), 1).otherwise(0)).cast("bigint").alias(f"b{i}"),
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 0) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias(f"c{i}"),
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 0) & (F.col("y") == 0), 1).otherwise(0)).cast("bigint").alias(f"d{i}"),
-            )
-        ]
-    )
-    t = piv.selectExpr(
-        "*", *[f"CAST(a{i} + b{i} + c{i} + d{i} AS BIGINT) AS n{i}" for i in range(7)]
-    )
+    t = _dow_strata(spark, sf_dir)
     r_txt = _mh_terms("CAST(CAST(a{i} AS DECIMAL(38,0)) * d{i} AS DOUBLE) / n{i}")
     s_txt = _mh_terms("CAST(CAST(b{i} AS DECIMAL(38,0)) * c{i} AS DOUBLE) / n{i}")
     return t.selectExpr(
@@ -11354,27 +11226,7 @@ def q_stat_breslow_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain -> bit-exact cross-engine, NO rounding (sqrt is correctly
     # rounded; psi = 1 exactly would 0/0 but is measure-zero for real
     # counts). 100 TB: one conditional-count scan, O(1) after.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    x = ev.select(
-        F.expr("(unix_micros(ts) div 86400000000 + 4) % 7").alias("dow"),
-        F.when(F.col("value") >= 50, 1).otherwise(0).alias("e"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    )
-    piv = x.agg(
-        *[
-            agg
-            for i in range(7)
-            for agg in (
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 1) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias(f"a{i}"),
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 1) & (F.col("y") == 0), 1).otherwise(0)).cast("bigint").alias(f"b{i}"),
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 0) & (F.col("y") == 1), 1).otherwise(0)).cast("bigint").alias(f"c{i}"),
-                F.sum(F.when((F.col("dow") == i) & (F.col("e") == 0) & (F.col("y") == 0), 1).otherwise(0)).cast("bigint").alias(f"d{i}"),
-            )
-        ]
-    )
-    t = piv.selectExpr(
-        "*", *[f"CAST(a{i} + b{i} + c{i} + d{i} AS BIGINT) AS n{i}" for i in range(7)]
-    )
+    t = _dow_strata(spark, sf_dir)
     r_txt = _mh_terms("CAST(CAST(a{i} AS DECIMAL(38,0)) * d{i} AS DOUBLE) / n{i}")
     s_txt = _mh_terms("CAST(CAST(b{i} AS DECIMAL(38,0)) * c{i} AS DOUBLE) / n{i}")
     p1 = t.selectExpr("*", f"({r_txt}) / ({s_txt}) AS psi")

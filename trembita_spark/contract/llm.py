@@ -17,7 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import customer_points, register, run_tmp, table
+from trembita_spark.contract import (
+    basket_pairs,
+    customer_points,
+    order_baskets,
+    register,
+    run_tmp,
+    table,
+)
 from trembita_spark.operators import dedup as D
 from trembita_spark.operators import multimodal as M
 from trembita_spark.operators import similarity as S
@@ -2782,21 +2789,11 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixpoint.
     from trembita_spark.operators.dedup import connected_components
 
-    bask = (
-        table(spark, sf_dir, "lineitem")
-        .where(F.col("l_partkey") < 2000)
-        .select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part"))
-        .distinct()
+    bask = order_baskets(
+        table(spark, sf_dir, "lineitem").where(F.col("l_partkey") < 2000)
     )
-    a = bask.select("okey", F.col("part").alias("doc_a"))
-    b = bask.select("okey", F.col("part").alias("doc_b"))
-    pairs = (
-        a.join(b, "okey")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .where(F.col("sup") >= 2)
-        .select("doc_a", "doc_b")
+    pairs = basket_pairs(bask).where(F.col("support") >= 2).select(
+        F.col("part_a").alias("doc_a"), F.col("part_b").alias("doc_b")
     )
     return connected_components(pairs).select(
         F.col("node"), F.col("cluster_id").alias("component")
@@ -3513,8 +3510,6 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rule 5). 100 TB: both arms are the existing banded/broadcast
     # retrieval shapes plus two query-cardinality joins — the eval
     # costs no more than the retrieval it grades.
-    from pyspark.sql.window import Window
-
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     approx = S.ivf_topk(emb, queries, k=3, nprobe=2)

@@ -842,6 +842,26 @@ def _both_directions(edges: DataFrame) -> DataFrame:
     )
 
 
+def _hub_seeds(
+    spark: SparkSession, sf_dir: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """The undirected customer–supplier graph as a directed edge list
+    (checkpointed lazily: it feeds the degree agg and every BFS level)
+    and its ``k`` highest-degree nodes ``(node)``, ties to the smallest
+    node key (DuckDB: ``ORDER BY d DESC, node LIMIT k``): the seed set
+    of the seeded-BFS keys."""
+    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
+    edges = edges.localCheckpoint(eager=False)
+    seeds = (
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).alias("d"))
+        .orderBy(F.col("d").desc(), "node")
+        .limit(k)
+        .select("node")
+    )
+    return edges, seeds
+
+
 def _pr_iter_sql(prev: str, this: str) -> str:
     # one power-method step: decimal-exact neighbor sum, double elsewhere.
     return f"""
@@ -2415,17 +2435,9 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a recursive CTE + min(d) (the q_graph_bfs equivalence). 100 TB:
     # k·BFS cost, hash-partitioned on the expansion key; seed selection
     # is one degree agg + TakeOrdered(5).
-    from trembita_spark.operators.graph import bfs, closeness  # noqa: F401
+    from trembita_spark.operators.graph import closeness
 
-    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
-    edges = edges.localCheckpoint(eager=False)  # feeds degree + 4 BFS levels
-    seeds = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.col("d").desc(), "node")
-        .limit(5)
-        .select("node")
-    )
+    edges, seeds = _hub_seeds(spark, sf_dir, 5)
     return closeness(edges, seeds, max_hops=4)
 
 
@@ -2523,15 +2535,7 @@ def q_graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # level; cost ∝ seeds·reached, the Brandes-Pich sampling bound.
     from trembita_spark.operators.graph import betweenness_sample
 
-    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
-    edges = edges.localCheckpoint(eager=False)  # feeds degree + both sweeps
-    seeds = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.col("d").desc(), "node")
-        .limit(3)
-        .select("node")
-    )
+    edges, seeds = _hub_seeds(spark, sf_dir, 3)
     return betweenness_sample(edges, seeds, max_hops=3)
 
 
@@ -2577,15 +2581,7 @@ def q_graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recurrence as a recursive CTE + min(d) per (seed, node).
     from trembita_spark.operators.graph import eccentricity
 
-    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
-    edges = edges.localCheckpoint(eager=False)  # feeds degree + BFS levels
-    seeds = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.col("d").desc(), "node")
-        .limit(5)
-        .select("node")
-    )
+    edges, seeds = _hub_seeds(spark, sf_dir, 5)
     return eccentricity(edges, seeds, max_hops=4)
 
 
@@ -2952,15 +2948,7 @@ def q_graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle replays the recurrence as a recursive CTE + min(d).
     from trembita_spark.operators.graph import harmonic_centrality
 
-    edges = _both_directions(_cust_supp_edges(spark, sf_dir))
-    edges = edges.localCheckpoint(eager=False)  # feeds degree + BFS levels
-    seeds = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.col("d").desc(), "node")
-        .limit(5)
-        .select("node")
-    )
+    edges, seeds = _hub_seeds(spark, sf_dir, 5)
     return harmonic_centrality(edges, seeds, max_hops=4)
 
 

@@ -19,7 +19,14 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trembita_spark.contract import hourly_series, register, table
+from trembita_spark.contract import (
+    daily_revenue,
+    dense_hours,
+    hourly_series,
+    hourly_type_counts,
+    register,
+    table,
+)
 from trembita_spark.io import local_rows
 from trembita_spark.operators.fsm import sessionize, sessionize_fsm
 from trembita_spark.operators import timeseries as TS
@@ -974,6 +981,29 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return interpolate_linear(table(spark, sf_dir, "events"))
 
 
+def _transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order event-type transition counts ``(from_type, to_type,
+    n, row_n)``: ``n`` consecutive pairs per (type, next type) over each
+    user's events in their unique (ts, event_id) order, ``row_n`` the
+    row total of ``from_type``. The |types|²-bounded pair table is
+    materialized once: without the cut the row-total branch re-scans
+    and re-windows the events table."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = table(spark, sf_dir, "events").select(
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
+    ).where(F.col("to_type").isNotNull())
+    tc = (
+        seq.groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    tot = tc.groupBy("from_type").agg(F.sum("n").alias("row_n"))
+    return tc.join(F.broadcast(tot), "from_type")
+
+
 @register(
     "q_events_markov",
     oracle="""
@@ -1004,24 +1034,8 @@ def q_events_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |types|²-bounded) pair aggregate; row totals re-aggregate the
     # pair table and join back broadcast. Probability is one exact-int
     # division per row — bit-identical.
-    ev = table(spark, sf_dir, "events")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    # materialize the |types|²-bounded pair table once — without the cut
-    # the row-total branch re-scans and re-windows the events table.
-    tc = (
-        seq.groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    tot = tc.groupBy("from_type").agg(F.sum("n").alias("row_n"))
     return (
-        tc.join(F.broadcast(tot), "from_type")
+        _transitions(spark, sf_dir)
         .select(
             "from_type",
             "to_type",
@@ -1059,7 +1073,6 @@ def q_stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same path is unsafe mid-plan). At 100 TB the state table is
     # keyed/bucketed so each merge is a co-partitioned join.
     from trembita_spark.contract import run_tmp
-    from trembita_spark.io import _normalize_ts
 
     ev = table(spark, sf_dir, "events")
     src = run_tmp("stream_upsert_src")
@@ -1358,6 +1371,27 @@ def q_ts_ohlc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TS.ohlc_rollup(hour_bars, grain="day")
 
 
+def _journey():
+    """Per-user aggregate: the user's event-type letters (the first
+    letter of event_type is unique across the five types) joined in the
+    unique (ts, event_id) order, e.g. ``"vcp"``."""
+    return F.array_join(
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        F.unix_micros("ts").alias("us"),
+                        F.col("event_id").alias("eid"),
+                        F.substring("event_type", 1, 1).alias("l"),
+                    )
+                )
+            ),
+            lambda s: s["l"],
+        ),
+        "",
+    )
+
+
 @register(
     "q_events_sequence_match",
     oracle=r"""
@@ -1384,21 +1418,7 @@ def q_events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.unix_micros("ts").alias("us"),
-                                F.col("event_id").alias("eid"),
-                                F.substring("event_type", 1, 1).alias("l"),
-                            )
-                        )
-                    ),
-                    lambda s: s["l"],
-                ),
-                "",
-            ).alias("seq"),
+            _journey().alias("seq"),
         )
     )
     return seq.select(
@@ -1481,6 +1501,36 @@ def q_events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lag_moments(spark: SparkSession, sf_dir: str, max_lag: int) -> DataFrame:
+    """Exact integer moments of the dense hourly series for lags
+    1..``max_lag``: per lag, the lagged cross-product sums
+    (lag, sab, sa, sb, nk) over the pairs (x_t, x_{t+lag}), with the
+    whole-series (s, sxx, n) broadcast onto every row — the inputs of
+    the closed-form ACF ``_LB_ACF``. Everything runs on the
+    calendar-bounded hour spine."""
+    dense = hourly_series(spark, sf_dir)  # feeds moments + both pair sides
+    g = dense.agg(
+        F.sum("x").alias("s"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    lags = spark.range(1, max_lag + 1).select(F.col("id").alias("lag"))
+    a = dense.select(F.col("hr").alias("hr_a"), F.col("x").alias("x_a"))
+    b = dense.select(F.col("hr").alias("hr_b"), F.col("x").alias("x_b"))
+    pairs = (
+        a.crossJoin(lags)
+        .join(b, F.col("hr_b") == F.col("hr_a") + F.col("lag"))
+        .groupBy("lag")
+        .agg(
+            F.sum(F.col("x_a") * F.col("x_b")).alias("sab"),
+            F.sum("x_a").alias("sa"),
+            F.sum("x_b").alias("sb"),
+            F.count(F.lit(1)).alias("nk"),
+        )
+    )
+    return pairs.crossJoin(F.broadcast(g))
+
+
 @register(
     "q_ts_autocorr",
     oracle="""
@@ -1531,35 +1581,8 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-table pass; everything after runs on the hours spine
     # (time-bounded, thousands of rows regardless of event volume — at
     # 100 TB the spine is still just the calendar).
-    dense = hourly_series(spark, sf_dir)  # feeds moments + both pair sides
-    g = dense.agg(
-        F.sum("x").alias("s"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    lags = spark.range(1, 25).select(F.col("id").alias("lag"))
-    a = dense.select(F.col("hr").alias("hr_a"), F.col("x").alias("x_a"))
-    b = dense.select(F.col("hr").alias("hr_b"), F.col("x").alias("x_b"))
-    pairs = (
-        a.crossJoin(lags)
-        .join(b, F.col("hr_b") == F.col("hr_a") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("x_a") * F.col("x_b")).alias("sab"),
-            F.sum("x_a").alias("sa"),
-            F.sum("x_b").alias("sb"),
-            F.count(F.lit(1)).alias("nk"),
-        )
-    )
-    m = F.col("s").cast("double") / F.col("n")
-    return pairs.crossJoin(F.broadcast(g)).select(
-        "lag",
-        "nk",
-        (
-            (F.col("sab") - m * F.col("sa") - m * F.col("sb") + F.col("nk") * m * m)
-            / (F.col("sxx") - 2 * m * F.col("s") + F.col("n") * m * m)
-        ).alias("acf"),
-    )
+    lm = _lag_moments(spark, sf_dir, 24)
+    return lm.selectExpr("lag", "nk", f"{_LB_ACF} AS acf")
 
 
 @register(
@@ -1643,6 +1666,37 @@ def q_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _seasonal_windows(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The additive-decomposition frames of the dense hourly series:
+    ``full_w`` is ``(hr, x, ws)`` with ``ws`` the exact centered 25-hour
+    moving sum, full windows only (checkpointed lazily), and ``seas`` is
+    ``(h, sa, wsum, n_h)``, its per-hour-of-day sums. The moving window
+    is global over the HOURS SPINE — calendar-sized at any data volume,
+    the documented benign exception to the global-window ban."""
+    from pyspark.sql.window import Window
+
+    dense = hourly_series(spark, sf_dir)
+    fr = Window.orderBy("hr").rowsBetween(-12, 12)
+    w = dense.select(
+        "hr",
+        "x",
+        F.sum("x").over(fr).cast("bigint").alias("ws"),
+        F.count(F.lit(1)).over(fr).cast("bigint").alias("wn"),
+    )
+    full_w = w.where(F.col("wn") == 25).drop("wn").localCheckpoint(eager=False)
+    seas = (
+        full_w.groupBy((F.col("hr") % 24).alias("h"))
+        .agg(
+            F.sum("x").alias("sa"),
+            F.sum("ws").alias("wsum"),
+            F.count(F.lit(1)).alias("n_h"),
+        )
+    )
+    return full_w, seas
+
+
 @register(
     "q_ts_decompose",
     oracle="""
@@ -1695,25 +1749,7 @@ def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     # moving average is over the HOURS SPINE — time-bounded, thousands
     # of rows at any data volume — the documented benign exception to
     # the global-window ban).
-    from pyspark.sql.window import Window
-
-    dense = hourly_series(spark, sf_dir)
-    fr = Window.orderBy("hr").rowsBetween(-12, 12)
-    w = dense.select(
-        "hr",
-        "x",
-        F.sum("x").over(fr).cast("bigint").alias("ws"),
-        F.count(F.lit(1)).over(fr).cast("bigint").alias("wn"),
-    )
-    full_w = w.where(F.col("wn") == 25).drop("wn").localCheckpoint(eager=False)
-    seas = (
-        full_w.groupBy((F.col("hr") % 24).alias("h"))
-        .agg(
-            F.sum("x").alias("sa"),
-            F.sum("ws").alias("wsum"),
-            F.count(F.lit(1)).alias("n_h"),
-        )
-    )
+    full_w, seas = _seasonal_windows(spark, sf_dir)
     # 25.0D: Spark parses a bare 25.0 literal as DECIMAL(3,1) (the whole
     # expression then lands decimal/object-dtyped); the D suffix pins
     # DOUBLE, matching DuckDB's float literal semantics.
@@ -1818,23 +1854,7 @@ def q_events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = table(spark, sf_dir, "events")
-    seqs = ev.groupBy("user_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.unix_micros("ts").alias("us"),
-                            F.col("event_id").alias("eid"),
-                            F.substring("event_type", 1, 1).alias("l"),
-                        )
-                    )
-                ),
-                lambda s: s["l"],
-            ),
-            "",
-        ).alias("path")
-    )
+    seqs = ev.groupBy("user_id").agg(_journey().alias("path"))
     c = seqs.groupBy("path").agg(F.count(F.lit(1)).alias("n_users"))
     top = c.orderBy(F.col("n_users").desc(), "path").limit(5)
     return top.withColumn(
@@ -2009,35 +2029,12 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-table pass to hourly counts, everything after runs on the
     # calendar-bounded spine.
     ev = table(spark, sf_dir, "events")
-    cx = (
-        ev.where(F.col("event_type").isin("click", "purchase"))
-        .select(
-            F.expr("unix_micros(ts) div 3600000000").alias("hr"),
-            "event_type",
+    dense = dense_hours(
+        hourly_type_counts(
+            ev.where(F.col("event_type").isin("click", "purchase")),
+            x="click",
+            y="purchase",
         )
-        .groupBy("hr")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("bigint")
-            .alias("x"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("bigint")
-            .alias("y"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        cx.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = (
-        spine.join(cx, "hr", "left")
-        .select(
-            "hr",
-            F.coalesce("x", F.lit(0)).alias("x"),
-            F.coalesce("y", F.lit(0)).alias("y"),
-        )
-        .localCheckpoint(eager=False)
     )
     lags = spark.range(0, 13).select(F.col("id").alias("lag"))
     a = dense.select(F.col("hr").alias("hr_a"), F.col("x").alias("x_a"))
@@ -2257,39 +2254,12 @@ def q_ts_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a fixed expression tree over exact sums, bit-identical both
     # engines, NO rounding (parity rule 2). 100 TB: the one fact-table
     # groupBy; the spine work is calendar-bounded.
-    dense = hourly_series(spark, sf_dir)
-    g = dense.agg(
-        F.sum("x").alias("s"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    lags = spark.range(1, 3).select(F.col("id").alias("lag"))
-    a = dense.select(F.col("hr").alias("hr_a"), F.col("x").alias("x_a"))
-    b2 = dense.select(F.col("hr").alias("hr_b"), F.col("x").alias("x_b"))
-    pairs = (
-        a.crossJoin(lags)
-        .join(b2, F.col("hr_b") == F.col("hr_a") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("x_a") * F.col("x_b")).alias("sab"),
-            F.sum("x_a").alias("sa"),
-            F.sum("x_b").alias("sb"),
-            F.count(F.lit(1)).alias("nk"),
-        )
-    )
-    m = F.col("s").cast("double") / F.col("n")
-    acf = (
-        F.col("sab") - m * F.col("sa") - m * F.col("sb") + F.col("nk") * m * m
-    ) / (
-        F.col("sxx") - 2 * m * F.col("s") + F.col("n") * m * m
-    )
-    rk = (
-        pairs.crossJoin(F.broadcast(g))
-        .agg(
-            F.max(F.when(F.col("lag") == 1, acf)).alias("r1"),
-            F.max(F.when(F.col("lag") == 2, acf)).alias("r2"),
-            F.max("n").cast("bigint").alias("n"),
-        )
+    lm = _lag_moments(spark, sf_dir, 2)
+    acf = F.expr(_LB_ACF)
+    rk = lm.agg(
+        F.max(F.when(F.col("lag") == 1, acf)).alias("r1"),
+        F.max(F.when(F.col("lag") == 2, acf)).alias("r2"),
+        F.max("n").cast("bigint").alias("n"),
     )
     r1, r2 = F.col("r1"), F.col("r2")
     phi1 = r1 * (1 - r2) / (1 - r1 * r1)
@@ -2361,25 +2331,7 @@ def q_ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # summed in partial-agg order → round-6 on the three outputs
     # (parity rule 5). Same 100 TB posture as decompose: one
     # fact-table groupBy, calendar-sized everything after.
-    from pyspark.sql.window import Window
-
-    dense = hourly_series(spark, sf_dir)
-    fr = Window.orderBy("hr").rowsBetween(-12, 12)
-    w = dense.select(
-        "hr",
-        "x",
-        F.sum("x").over(fr).cast("bigint").alias("ws"),
-        F.count(F.lit(1)).over(fr).cast("bigint").alias("wn"),
-    )
-    full_w = w.where(F.col("wn") == 25).drop("wn").localCheckpoint(eager=False)
-    seas = (
-        full_w.groupBy((F.col("hr") % 24).alias("h"))
-        .agg(
-            F.sum("x").alias("sa"),
-            F.sum("ws").alias("wsum"),
-            F.count(F.lit(1)).alias("n_h"),
-        )
-    )
+    full_w, seas = _seasonal_windows(spark, sf_dir)
     rows_d = (
         full_w.withColumn("h", F.col("hr") % 24)
         .join(F.broadcast(seas), "h")
@@ -2484,35 +2436,10 @@ def q_ts_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chains are fixed double trees, and round-6 guards the long
     # algebraic tails. 100 TB: one fact groupBy; the lag join and
     # regression run on the calendar-sized spine.
-    ev = table(spark, sf_dir, "events")
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact lane
-    c = (
-        ev.select(
-            F.expr("unix_micros(ts) div 3600000000").alias("hr"),
-            F.col("event_type"),
-        )
-        .groupBy("hr")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("bigint").alias("p"),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("bigint").alias("cl"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    spine = (
-        c.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(F.explode(F.sequence("lo", "hi")).alias("hr"))
-    )
-    dense = (
-        spine.join(c, "hr", "left")
-        .select(
-            "hr",
-            F.coalesce("p", F.lit(0)).alias("p"),
-            F.coalesce("cl", F.lit(0)).alias("cl"),
-        )
-        .localCheckpoint(eager=False)  # feeds both lag-join sides
-    )
+    ev = table(spark, sf_dir, "events")
+    # feeds both lag-join sides
+    dense = dense_hours(hourly_type_counts(ev, p="purchase", cl="click"))
     a = dense.select(F.col("hr").alias("hr_a"), F.col("p").alias("y"))
     bb = dense.select(
         F.col("hr").alias("hr_b"),
@@ -2938,21 +2865,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, so after the pair count everything is config-sized.
     # The per-state sums fold ≤|types| doubles whose addend sets are
     # identical but engine-ordered → round-12 on the final vector.
-    ev = table(spark, sf_dir, "events")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    tc = (
-        seq.groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)  # |types|²-bounded; reused 3+ times
-    )
-    tot = tc.groupBy("from_type").agg(F.sum("n").alias("row_n"))
-    tp = tc.join(tot, "from_type").select(
+    tp = _transitions(spark, sf_dir).select(
         "from_type",
         "to_type",
         (F.col("n").cast("double") / F.col("row_n")).alias("p"),
@@ -3085,28 +2998,9 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate every forecasting pipeline runs on its residuals. 100 TB:
     # one fact-table groupBy to the hour contingency; everything after
     # lives on the calendar spine.
-    dense = hourly_series(spark, sf_dir)
-    g = dense.agg(
-        F.sum("x").alias("s"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    lags = spark.range(1, 6).select(F.col("id").alias("lag"))
-    a = dense.select(F.col("hr").alias("hr_a"), F.col("x").alias("x_a"))
-    b = dense.select(F.col("hr").alias("hr_b"), F.col("x").alias("x_b"))
-    pairs = (
-        a.crossJoin(lags)
-        .join(b, F.col("hr_b") == F.col("hr_a") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("x_a") * F.col("x_b")).alias("sab"),
-            F.sum("x_a").alias("sa"),
-            F.sum("x_b").alias("sb"),
-            F.count(F.lit(1)).alias("nk"),
-        )
-    )
-    acf = pairs.crossJoin(F.broadcast(g)).selectExpr("lag", f"{_LB_ACF} AS r")
-    piv = acf.crossJoin(F.broadcast(g)).agg(
+    lm = _lag_moments(spark, sf_dir, 5)
+    acf = lm.selectExpr("lag", "n", f"{_LB_ACF} AS r")
+    piv = acf.agg(
         F.max("n").alias("n"),
         *[
             F.max(F.when(F.col("lag") == k, F.col("r"))).alias(f"r{k}")
@@ -3115,6 +3009,28 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return piv.selectExpr(
         "n", "CAST(5 AS BIGINT) AS n_lags", f"{_LB_Q} AS q_stat"
+    )
+
+
+def _daily_revenue_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dense per-type daily revenue ``(event_type, t, rev)``: every
+    event type of :func:`daily_revenue` crossed with the full day spine
+    from its first to its last day, ``rev`` zero-filled
+    (DECIMAL(18,2)) and ``t`` the 1-based day index. Checkpointed
+    lazily."""
+    d = daily_revenue(spark, sf_dir)  # feeds bounds + types + dense join
+    b = d.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
+    spine = b.select("lo", F.explode(F.sequence("lo", "hi")).alias("day"))
+    types = d.select("event_type").distinct()
+    return (
+        types.crossJoin(spine)
+        .join(d, ["event_type", "day"], "left")
+        .select(
+            "event_type",
+            (F.col("day") - F.col("lo") + 1).alias("t"),
+            F.coalesce("rev", F.lit(0).cast("decimal(18,2)")).alias("rev"),
+        )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -3172,39 +3088,16 @@ def q_eval_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (half-grid 5e-10 vs ~2e-13 ulp skew, seen flip at sf0.1); MAE and MASE are pure exact-division ratios, no rounding.
     # 100 TB: one fact-table groupBy to the (type, day) contingency;
     # the spine joins are calendar-sized.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    d = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-            .cast("bigint")
-            .alias("day"),
-        )
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("rev"))
-        .localCheckpoint(eager=False)  # feeds bounds + types + dense join
-    )
-    b = d.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    spine = b.select(F.explode(F.sequence("lo", "hi")).alias("day"))
-    types = d.select("event_type").distinct()
-    dense = (
-        types.crossJoin(spine)
-        .join(d, ["event_type", "day"], "left")
-        .select(
-            "event_type",
-            "day",
-            F.coalesce("rev", F.lit(0).cast("decimal(18,2)")).alias("rev"),
-        )
-        .localCheckpoint(eager=False)  # feeds the actuals + both forecast sides
-    )
+    dense = _daily_revenue_series(spark, sf_dir)  # actuals + both forecasts
     f7 = dense.select(
-        "event_type", (F.col("day") + 7).alias("day"), F.col("rev").alias("fc7")
+        "event_type", (F.col("t") + 7).alias("t"), F.col("rev").alias("fc7")
     )
     f1 = dense.select(
-        "event_type", (F.col("day") + 1).alias("day"), F.col("rev").alias("fc1")
+        "event_type", (F.col("t") + 1).alias("t"), F.col("rev").alias("fc1")
     )
     j = (
-        dense.join(f7, ["event_type", "day"], "left")
-        .join(f1, ["event_type", "day"], "left")
+        dense.join(f7, ["event_type", "t"], "left")
+        .join(f1, ["event_type", "t"], "left")
     )
     has7, has1 = F.col("fc7").isNotNull(), F.col("fc1").isNotNull()
     m = j.groupBy("event_type").agg(
@@ -3926,27 +3819,8 @@ def q_ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text over deterministic doubles — no libm, NO rounding (parity
     # rule 2). 100 TB: one fact-table groupBy; the recursion is O(1)
     # on a 1-row frame.
-    dense = hourly_series(spark, sf_dir)
-    g = dense.agg(
-        F.sum("x").alias("s"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    lags = spark.range(1, 4).select(F.col("id").alias("lag"))
-    a = dense.select(F.col("hr").alias("hr_a"), F.col("x").alias("x_a"))
-    b = dense.select(F.col("hr").alias("hr_b"), F.col("x").alias("x_b"))
-    pairs = (
-        a.crossJoin(lags)
-        .join(b, F.col("hr_b") == F.col("hr_a") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.sum(F.col("x_a") * F.col("x_b")).alias("sab"),
-            F.sum("x_a").alias("sa"),
-            F.sum("x_b").alias("sb"),
-            F.count(F.lit(1)).alias("nk"),
-        )
-    )
-    acf = pairs.crossJoin(F.broadcast(g)).selectExpr("lag", f"{_LB_ACF} AS r")
+    lm = _lag_moments(spark, sf_dir, 3)
+    acf = lm.selectExpr("lag", f"{_LB_ACF} AS r")
     piv = acf.agg(
         F.max(F.when(F.col("lag") == 1, F.col("r"))).alias("r1"),
         F.max(F.when(F.col("lag") == 2, F.col("r"))).alias("r2"),
@@ -4817,30 +4691,7 @@ def q_ts_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spine is calendar-bounded, the series per type is calendar-sized,
     # and the scale axis is series count — the q_ts_holt_winters
     # argument.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    d = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-            .cast("bigint")
-            .alias("day"),
-        )
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("rev"))
-        .localCheckpoint(eager=False)  # feeds bounds + types + dense join
-    )
-    b = d.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    spine = b.select("lo", F.explode(F.sequence("lo", "hi")).alias("day"))
-    types = d.select("event_type").distinct()
-    dense = (
-        types.crossJoin(spine)
-        .join(d, ["event_type", "day"], "left")
-        .select(
-            "event_type",
-            (F.col("day") - F.col("lo") + 1).alias("t"),
-            F.coalesce("rev", F.lit(0).cast("decimal(18,2)")).alias("rev"),
-        )
-        .localCheckpoint(eager=False)  # feeds moments + the series fold
-    )
+    dense = _daily_revenue_series(spark, sf_dir)  # moments + the series fold
     mo = dense.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("t").cast("bigint").alias("st"),

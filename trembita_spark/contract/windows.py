@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from trembita_spark.contract import register, table
 from trembita_spark.io import spread_scan
@@ -374,6 +374,40 @@ def q_window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_sequence(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """Each user's events in order: ``(user_id, event_id, rn, *cols)``
+    with ``rn`` the 1-based ``row_number`` over
+    ``(unix_micros(ts), event_id)`` (DuckDB:
+    ``row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)``).
+    The window partitions on user_id (data-cardinality)."""
+    wo = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
+    return table(spark, sf_dir, "events").select(
+        "user_id", "event_id", F.row_number().over(wo).alias("rn"), *cols
+    )
+
+
+def _trailing(rows: int) -> WindowSpec:
+    """The trailing ``rows``-row frame over a :func:`_user_sequence`."""
+    return (
+        Window.partitionBy("user_id")
+        .orderBy("rn")
+        .rowsBetween(-(rows - 1), Window.currentRow)
+    )
+
+
+def _value_powers(k: int) -> list:
+    """``value``, ``value²`` and ``value³`` (the first ``k``) on their
+    exact decimal grids ``vd``/``vd2``/``vd3`` (2, 4 and 6 decimals):
+    the square of a 2-decimal value is ON the 4-decimal grid, the cube
+    on the 6-decimal grid, so each cast is exact."""
+    v = F.col("value")
+    return [
+        v.cast("decimal(18,2)").alias("vd"),
+        (v * v).cast("decimal(18,4)").alias("vd2"),
+        (v * v * v).cast("decimal(18,6)").alias("vd3"),
+    ][:k]
+
+
 @register(
     "q_window_regression",
     oracle="""
@@ -408,19 +442,10 @@ def q_window_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full frames (rn >= 20) so n is the constant 20 and the
     # denominator is never zero. Partitioned window — per-user frames,
     # no global sort; the heaviest state is 20 rows per frame.
-    ev = table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
-    x = ev.select(
-        "user_id",
-        "event_id",
-        F.row_number().over(wo).alias("rn"),
-        F.col("value").cast("decimal(18,2)").alias("y"),
+    x = _user_sequence(
+        spark, sf_dir, F.col("value").cast("decimal(18,2)").alias("y")
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("rn")
-        .rowsBetween(-19, Window.currentRow)
-    )
+    w = _trailing(20)
     s = x.select(
         "user_id",
         "event_id",
@@ -511,21 +536,10 @@ def q_window_zscore_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4-dec grid, so the decimal cast is exact), mean/var/z are
     # closed-form doubles over them, null when the window is
     # degenerate. Emitted for full frames only (n = 20 constant).
-    ev = table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
-    x = ev.select(
-        "user_id",
-        "event_id",
-        F.row_number().over(wo).alias("rn"),
-        F.col("value").cast("double").alias("v"),
-        F.col("value").cast("decimal(18,2)").alias("vd"),
-        (F.col("value") * F.col("value")).cast("decimal(18,4)").alias("vd2"),
+    x = _user_sequence(
+        spark, sf_dir, F.col("value").cast("double").alias("v"), *_value_powers(2)
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("rn")
-        .rowsBetween(-19, Window.currentRow)
-    )
+    w = _trailing(20)
     s = x.select(
         "user_id",
         "event_id",
@@ -588,23 +602,8 @@ def q_window_rolling_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     # libm pow) → bit-identical cross-engine, NO rounding (parity rule
     # 2). Emitted for full frames only (n = 5 constant). The window
     # partitions on user_id (data-cardinality) — audit-safe.
-    ev = table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
-    x = ev.select(
-        "user_id",
-        "event_id",
-        F.row_number().over(wo).alias("rn"),
-        F.col("value").cast("decimal(18,2)").alias("vd"),
-        (F.col("value") * F.col("value")).cast("decimal(18,4)").alias("vd2"),
-        (F.col("value") * F.col("value") * F.col("value"))
-        .cast("decimal(18,6)")
-        .alias("vd3"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("rn")
-        .rowsBetween(-4, Window.currentRow)
-    )
+    x = _user_sequence(spark, sf_dir, *_value_powers(3))
+    w = _trailing(5)
     s = x.select(
         "user_id",
         "event_id",
@@ -687,23 +686,8 @@ def q_window_rolling_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion and var^2 denominator are multiply-only IEEE — bit
     # exact, NO rounding (parity rule 2). Partitions on user_id
     # (data-cardinality) — audit-safe.
-    ev = table(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
-    x = ev.select(
-        "user_id",
-        "event_id",
-        F.row_number().over(wo).alias("rn"),
-        F.col("value").cast("decimal(18,2)").alias("vd"),
-        (F.col("value") * F.col("value")).cast("decimal(18,4)").alias("vd2"),
-        (F.col("value") * F.col("value") * F.col("value"))
-        .cast("decimal(18,6)")
-        .alias("vd3"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("rn")
-        .rowsBetween(-4, Window.currentRow)
-    )
+    x = _user_sequence(spark, sf_dir, *_value_powers(3))
+    w = _trailing(5)
     s = x.select(
         "user_id",
         "event_id",
@@ -734,6 +718,45 @@ def q_window_rolling_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.when(varp > 0, m4 / (varp * varp) - 3).alias("kurt5"),
+    )
+
+
+def _rolling_mad2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The doubled-cent rolling median/MAD lane over each user's
+    trailing 5-row frame (ordered by ts, event_id): ``(event_id,
+    user_id, v100, med2, mad2)`` with ``v100`` the value in cents,
+    ``med2`` the sum of the frame's two middle order statistics of
+    v100 (= 2·100·median) and ``mad2`` the two-middle sum of the
+    deviations |2·v100 − med2| (= 4·100·MAD) — integers throughout."""
+    ev = table(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-4, Window.currentRow)
+    )
+    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+    arr = F.array_sort(F.collect_list(v100).over(w))
+    n = F.size(arr)
+    lo = F.floor((n + 1) / 2).cast("int")
+    hi = (F.floor(n / 2) + 1).cast("int")
+    med2 = F.element_at(arr, lo) + F.element_at(arr, hi)
+    x = ev.select(
+        "event_id",
+        "user_id",
+        v100.alias("v100"),
+        arr.alias("s"),
+        n.alias("n"),
+        med2.alias("med2"),
+    )
+    ds = F.array_sort(F.transform("s", lambda v: F.abs(2 * v - F.col("med2"))))
+    nlo = F.floor((F.col("n") + 1) / 2).cast("int")
+    nhi = (F.floor(F.col("n") / 2) + 1).cast("int")
+    return x.select(
+        "event_id",
+        "user_id",
+        "v100",
+        "med2",
+        (F.element_at(ds, nlo) + F.element_at(ds, nhi)).alias("mad2"),
     )
 
 
@@ -780,32 +803,7 @@ def q_window_rolling_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anywhere (q_window_median needs a float (a+b)/2; the doubled
     # lane avoids even that). State is O(frame) per row; the window
     # partitions on user_id (data-cardinality) — audit-safe.
-    ev = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-4, Window.currentRow)
-    )
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    arr = F.array_sort(F.collect_list(v100).over(w))
-    n = F.size(arr)
-    lo = F.floor((n + 1) / 2).cast("int")
-    hi = (F.floor(n / 2) + 1).cast("int")
-    med2 = F.element_at(arr, lo) + F.element_at(arr, hi)
-    x = ev.select(
-        "event_id", "user_id", arr.alias("s"), n.alias("n"), med2.alias("med2")
-    )
-    ds = F.array_sort(
-        F.transform("s", lambda v: F.abs(2 * v - F.col("med2")))
-    )
-    nlo = F.floor((F.col("n") + 1) / 2).cast("int")
-    nhi = (F.floor(F.col("n") / 2) + 1).cast("int")
-    return x.select(
-        "event_id",
-        "user_id",
-        "med2",
-        (F.element_at(ds, nlo) + F.element_at(ds, nhi)).alias("mad2"),
-    )
+    return _rolling_mad2(spark, sf_dir).select("event_id", "user_id", "med2", "mad2")
 
 
 @register(
@@ -859,36 +857,7 @@ def q_window_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are integers: parity rule 1, no floats anywhere. Window
     # partitions on user_id — data-cardinality, audit-safe; O(frame)
     # state per row.
-    ev = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-4, Window.currentRow)
-    )
-    v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    arr = F.array_sort(F.collect_list(v100).over(w))
-    n = F.size(arr)
-    lo = F.floor((n + 1) / 2).cast("int")
-    hi = (F.floor(n / 2) + 1).cast("int")
-    med2 = F.element_at(arr, lo) + F.element_at(arr, hi)
-    x = ev.select(
-        "event_id",
-        "user_id",
-        v100.alias("v100"),
-        arr.alias("s"),
-        n.alias("n"),
-        med2.alias("med2"),
-    )
-    ds = F.array_sort(F.transform("s", lambda v: F.abs(2 * v - F.col("med2"))))
-    nlo = F.floor((F.col("n") + 1) / 2).cast("int")
-    nhi = (F.floor(F.col("n") / 2) + 1).cast("int")
-    mm = x.select(
-        "event_id",
-        "user_id",
-        "v100",
-        "med2",
-        (F.element_at(ds, nlo) + F.element_at(ds, nhi)).alias("mad2"),
-    )
+    mm = _rolling_mad2(spark, sf_dir)
     dev = 20000 * F.abs(2 * F.col("v100") - F.col("med2"))
     flag = dev > 44478 * F.col("mad2")
     return mm.select(

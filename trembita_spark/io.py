@@ -4,7 +4,7 @@ The reference's ``Input.*`` / ``Output.*`` objects (reference:
 kernel/src/main/scala/trembita/Input.scala and Output.scala, unverified)
 lift collections / files / connectors into pipelines and materialize them
 back out. Spark-first, these collapse into ``spark.read.*`` / ``df.write.*``
-plus ``createDataFrame`` for in-memory lifts; Catalyst gives projection and
+plus ``local_rows`` for in-memory lifts; Catalyst gives projection and
 predicate pushdown on the columnar formats for free.
 """
 
@@ -98,11 +98,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _TABLE_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All testdata tables as a dict of lazy DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def _parse_bytes(value: str) -> int:
@@ -237,21 +232,6 @@ def local_rows(spark: SparkSession, rows: Iterable[Any], schema: Any) -> DataFra
         return spark.createDataFrame(pdf, schema=st)
     except Exception:
         return spark.createDataFrame(rows, schema=st)
-
-
-def from_collection(
-    spark: SparkSession, rows: Iterable[Any], schema: Any = None
-) -> DataFrame:
-    """``Input.sequential`` / ``Input.parallel`` equivalent: lift an
-    in-memory collection. Parallelism is Spark's default — the
-    sequential/parallel environment split in the reference is a no-op
-    here (one engine, partitioned execution)."""
-    return spark.createDataFrame(list(rows), schema=schema)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """``Input.file`` equivalent: text file as a `value: string` column."""
-    return spark.read.text(path)
 
 
 def write_parquet(

@@ -290,22 +290,6 @@ def dedup_clusters(
     )
 
 
-def dedup_keep_canonical(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    k: int = 3,
-) -> DataFrame:
-    """The deduplicated corpus: one canonical doc (min id) per near-dup
-    cluster, all original columns preserved. This is the operation a
-    training-data pipeline actually runs; `dedup_clusters` is its
-    explainable intermediate."""
-    clusters = dedup_clusters(df, text_col, id_col, bands, k)
-    keep = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
-    return df.join(keep, df[id_col] == keep.doc_id, "left_semi")
-
-
 # 60-bit integer from the first 15 hex chars of md5 — cross-engine
 # (DuckDB mirrors it with a char fold; see contract/llm.py).
 def _md5_int60(col):

@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 from trembita_spark.operators.ranking import prefix_sum, prefix_sum_multi
 
 
+def _dec(col: Column) -> Column:
+    """The exact decimal(38,0) lane for integer moments."""
+    return col.cast("decimal(38,0)")
+
+
 def _arm_counts(df: DataFrame, value_col: str, is_a: Column) -> DataFrame:
     x = df.select(
         F.col(value_col).alias("v"),
@@ -62,9 +67,8 @@ def mann_whitney_u(df: DataFrame, value_col: str, is_a: Column) -> DataFrame:
     )
     n_a, n_b = F.col("n_a"), F.col("n_b")
     bigint_u2 = F.col("r2a") - n_a * (n_a + 1)
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact big-integer lane
-    s_dec = dec(n_a) * dec(n_b) * (
-        dec(n_a + n_b + 1) * dec(n_a + n_b) * dec(n_a + n_b - 1) - dec(F.col("ties"))
+    s_dec = _dec(n_a) * _dec(n_b) * (
+        _dec(n_a + n_b + 1) * _dec(n_a + n_b) * _dec(n_a + n_b - 1) - _dec(F.col("ties"))
     )
     denom = F.sqrt(
         s_dec.cast("double")
@@ -122,16 +126,15 @@ def spearman_rho(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         .join(ry, F.col("y") == ry["v"])
         .drop("v")
     )
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact lane
     s = j.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(dec(F.col("rx2"))).alias("sx"),
-        F.sum(dec(F.col("ry2"))).alias("sy"),
+        F.sum(_dec(F.col("rx2"))).alias("sx"),
+        F.sum(_dec(F.col("ry2"))).alias("sy"),
         # products in the decimal lane too: a bigint rx2·rx2 overflows
         # once n exceeds ~2.1e9 rows (rx2 ≤ 2n+1)
-        F.sum(dec(F.col("rx2")) * dec(F.col("rx2"))).alias("sxx"),
-        F.sum(dec(F.col("ry2")) * dec(F.col("ry2"))).alias("syy"),
-        F.sum(dec(F.col("rx2")) * dec(F.col("ry2"))).alias("sxy"),
+        F.sum(_dec(F.col("rx2")) * _dec(F.col("rx2"))).alias("sxx"),
+        F.sum(_dec(F.col("ry2")) * _dec(F.col("ry2"))).alias("syy"),
+        F.sum(_dec(F.col("rx2")) * _dec(F.col("ry2"))).alias("sxy"),
     )
     # all six inputs are exact integers; cast once to double and keep a
     # FIXED expression tree so any engine replays it bit-for-bit.
@@ -219,40 +222,23 @@ def cusum_changepoint(
     )
 
 
-def kendall_tau_b(
+def _pair_moments(
     df: DataFrame, x_col: str, y_col: str, y_values: list
 ) -> DataFrame:
-    """Kendall's tau-b rank correlation between ``x_col`` (any ordered
-    support) and ``y_col`` (a SMALL ENUMERATED domain, ``y_values``),
-    tie-corrected. Returns one row: (n, concordant, discordant, tau_b).
-
-    Shape: the naive statistic is an all-pairs O(n²) comparison; this
-    operator instead aggregates to the (x, y) CONTINGENCY CELLS (one
-    data-touching groupBy), pivots the bounded y-domain into columns,
-    and takes ONE distributed prefix sum over the x-support — the
-    number of (x'<x, y'<y) pairs below each cell is then a fixed
-    per-row expression over the exclusive per-y running counts. Work
-    after the first groupBy is ∝ |x-support|·|y-domain|, never n², and
-    there is no theta join and no low-cardinality window. Pair counts
-    and tie moments ride the exact decimal(38,0) lane; only the final
-    tau expression is double (identical tree in a SQL oracle). The
-    bigint output cast is safe while pair counts < 2⁶³ (n ≲ 4e9 rows);
-    widen to decimal output past that.
-
-    ``y_values`` must be sorted ascending (the concordant/discordant
-    orientation is read off the column order) and must cover the full
-    non-null y domain — rows whose y is outside it are treated as
-    null-y and EXCLUDED from n, the pair counts, and the tie moments
-    (asserted below, so a stale enumeration fails loudly instead of
-    silently flipping pair orientations or shrinking n).
-    """
+    """The pair moments of ``x_col`` against the enumerated ``y_col``:
+    one row (n, cc, dd, tx2, ty2) with the concordant and discordant
+    pair counts and the doubled tie moments Σn_x(n_x−1), Σn_y(n_y−1),
+    exact decimal(38,0). Rows with a null x or a y outside ``y_values``
+    are dropped first. The (x, y) contingency cells pivot the bounded
+    y-domain into columns, and ONE prefix sum over the x-support gives
+    the exclusive per-y running counts each cell pairs with."""
     ys = list(y_values)
     if ys != sorted(ys):
         raise ValueError(f"y_values must be sorted ascending, got {ys}")
     k = len(ys)
     cells = (
         df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .where(F.col("x").isNotNull() & F.col("y").isNotNull())
+        .where(F.col("x").isNotNull() & F.col("y").isin(ys))
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -275,18 +261,17 @@ def kendall_tau_b(
     # exclusive prefix: rows with x' < x at each y level
     for i in range(k):
         wide = wide.withColumn(f"e{i}", F.col(f"p{i}") - F.col(f"c{i}"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — exact pair lane
     conc = sum(
         (
-            dec(F.col(f"c{i}")) * dec(sum((F.col(f"e{j}") for j in range(i)), F.lit(0)))
+            _dec(F.col(f"c{i}")) * _dec(sum((F.col(f"e{j}") for j in range(i)), F.lit(0)))
             for i in range(1, k)
         ),
         F.lit(0).cast("decimal(38,0)"),
     )
     disc = sum(
         (
-            dec(F.col(f"c{i}"))
-            * dec(sum((F.col(f"e{j}") for j in range(i + 1, k)), F.lit(0)))
+            _dec(F.col(f"c{i}"))
+            * _dec(sum((F.col(f"e{j}") for j in range(i + 1, k)), F.lit(0)))
             for i in range(k - 1)
         ),
         F.lit(0).cast("decimal(38,0)"),
@@ -296,14 +281,46 @@ def kendall_tau_b(
         F.sum(nx).cast("bigint").alias("n"),
         F.sum(conc).alias("cc"),
         F.sum(disc).alias("dd"),
-        F.sum(dec(nx) * dec(nx - 1)).alias("tx2"),
+        F.sum(_dec(nx) * _dec(nx - 1)).alias("tx2"),
         *[F.sum(f"c{i}").cast("bigint").alias(f"ny{i}") for i in range(k)],
     )
     ty2 = sum(
-        (dec(F.col(f"ny{i}")) * dec(F.col(f"ny{i}") - 1) for i in range(k)),
+        (_dec(F.col(f"ny{i}")) * _dec(F.col(f"ny{i}") - 1) for i in range(k)),
         F.lit(0).cast("decimal(38,0)"),
     )
-    n02 = dec(F.col("n")) * dec(F.col("n") - 1)
+    return s.select("n", "cc", "dd", "tx2", ty2.alias("ty2"))
+
+
+def kendall_tau_b(
+    df: DataFrame, x_col: str, y_col: str, y_values: list
+) -> DataFrame:
+    """Kendall's tau-b rank correlation between ``x_col`` (any ordered
+    support) and ``y_col`` (a SMALL ENUMERATED domain, ``y_values``),
+    tie-corrected. Returns one row: (n, concordant, discordant, tau_b).
+
+    Shape: the naive statistic is an all-pairs O(n²) comparison; this
+    operator instead aggregates to the (x, y) CONTINGENCY CELLS (one
+    data-touching groupBy), pivots the bounded y-domain into columns,
+    and takes ONE distributed prefix sum over the x-support — the
+    number of (x'<x, y'<y) pairs below each cell is then a fixed
+    per-row expression over the exclusive per-y running counts. Work
+    after the first groupBy is ∝ |x-support|·|y-domain|, never n², and
+    there is no theta join and no low-cardinality window. Pair counts
+    and tie moments ride the exact decimal(38,0) lane; only the final
+    tau expression is double (identical tree in a SQL oracle). The
+    bigint output cast is safe while pair counts < 2⁶³ (n ≲ 4e9 rows);
+    widen to decimal output past that.
+
+    ``y_values`` must be sorted ascending (the concordant/discordant
+    orientation is read off the column order; an unsorted list raises
+    ``ValueError``). Rows whose y is null or outside ``y_values`` are
+    dropped before the cells are built, so they are excluded from n,
+    the pair counts and the tie moments; no error is raised, so a
+    stale enumeration shrinks n silently. :func:`ordinal_association`
+    has the same contract.
+    """
+    s = _pair_moments(df, x_col, y_col, y_values)
+    n02 = _dec(F.col("n")) * _dec(F.col("n") - 1)
     return s.select(
         "n",
         F.col("cc").cast("bigint").alias("concordant"),
@@ -312,7 +329,8 @@ def kendall_tau_b(
             (F.col("cc") - F.col("dd")).cast("double")
             * 2
             / F.sqrt(
-                (n02 - F.col("tx2")).cast("double") * (n02 - ty2).cast("double")
+                (n02 - F.col("tx2")).cast("double")
+                * (n02 - F.col("ty2")).cast("double")
             )
         ).alias("tau_b"),
     )
@@ -397,11 +415,10 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: Column) -> DataFram
         F.sum("ngv").cast("bigint").alias("n_g"),
         F.sum(F.col("ngv") * F.col("r2v")).cast("bigint").alias("r2_g"),
     )
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact big-integer lane
     gs = pg.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum(
-            (dec(F.col("r2_g")) * dec(F.col("r2_g"))).cast("double")
+            (_dec(F.col("r2_g")) * _dec(F.col("r2_g"))).cast("double")
             / F.col("n_g").cast("double")
         ).alias("s_term"),
     )
@@ -413,8 +430,8 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: Column) -> DataFram
         F.sum(
             F.when(
                 F.col("n") > 1,
-                dec(F.col("n")) * dec(F.col("n")) * dec(F.col("n"))
-                - dec(F.col("n")),
+                _dec(F.col("n")) * _dec(F.col("n")) * _dec(F.col("n"))
+                - _dec(F.col("n")),
             ).otherwise(F.lit(0).cast("decimal(38,0)"))
         ).cast("decimal(38,0)").alias("tie3"),
     )
@@ -426,7 +443,7 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: Column) -> DataFram
         - (3 * (nd + 1)).cast("double")
     )
     corr = F.lit(1.0) - F.col("tie3").cast("double") / (
-        dec(nd) * dec(nd) * dec(nd) - dec(nd)
+        _dec(nd) * _dec(nd) * _dec(nd) - _dec(nd)
     ).cast("double")
     return z.select(
         "k",
@@ -502,6 +519,34 @@ def runs_test(
     )
 
 
+def _block_ranks(
+    totals: DataFrame, block_col: str, treat_col: str, t_col: str
+) -> DataFrame:
+    """Doubled within-block tied-average ranks (blk, trt, r2) of a
+    complete-block (block, treatment, exact integer total) frame:
+    2r = 2·#less + #equal + 1 from a block-key equi self-join (k² rows
+    per block, k small) — an exact integer, no window."""
+    a = totals.select(
+        F.col(block_col).alias("blk"),
+        F.col(treat_col).alias("trt"),
+        F.col(t_col).alias("t"),
+    )
+    b = a.select(
+        F.col("blk"), F.col("trt").alias("trt_b"), F.col("t").alias("t_b")
+    )
+    return (
+        a.join(b, "blk")
+        .groupBy("blk", "trt")
+        .agg(
+            (
+                2 * F.sum(F.when(F.col("t_b") < F.col("t"), 1).otherwise(0))
+                + F.sum(F.when(F.col("t_b") == F.col("t"), 1).otherwise(0))
+                + 1
+            ).cast("bigint").alias("r2")
+        )
+    )
+
+
 def friedman_test(
     totals: DataFrame, block_col: str, treat_col: str, t_col: str
 ) -> DataFrame:
@@ -516,30 +561,11 @@ def friedman_test(
     Within-block ranks come from a block-key equi self-join (k² rows per
     block, k small), not a window: 2r = 2·#less + #equal + 1. 100 TB:
     two block-key shuffles (self-join + rollup), work ∝ blocks·k²."""
-    a = totals.select(
-        F.col(block_col).alias("blk"),
-        F.col(treat_col).alias("trt"),
-        F.col(t_col).alias("t"),
-    )
-    b = a.select(
-        F.col("blk"), F.col("trt").alias("trt_b"), F.col("t").alias("t_b")
-    )
-    r = (
-        a.join(b, "blk")
-        .groupBy("blk", "trt")
-        .agg(
-            (
-                2 * F.sum(F.when(F.col("t_b") < F.col("t"), 1).otherwise(0))
-                + F.sum(F.when(F.col("t_b") == F.col("t"), 1).otherwise(0))
-                + 1
-            ).cast("bigint").alias("r2")
-        )
-    )
+    r = _block_ranks(totals, block_col, treat_col, t_col)
     per_t = r.groupBy("trt").agg(F.sum("r2").cast("bigint").alias("r2_t"))
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact lane
     gs = per_t.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(dec(F.col("r2_t")) * dec(F.col("r2_t"))).cast("decimal(38,0)").alias("ssr2"),
+        F.sum(_dec(F.col("r2_t")) * _dec(F.col("r2_t"))).cast("decimal(38,0)").alias("ssr2"),
     )
     nb = r.agg(F.count_distinct(F.col("blk")).cast("bigint").alias("n_blocks"))
     z = gs.crossJoin(F.broadcast(nb))
@@ -572,25 +598,7 @@ def page_test(
     (windowless — no single-partition window anywhere). Returns one row
     (n_blocks, k, l_stat, z). 100 TB: identical cost shape to
     friedman_test — two block-key shuffles, work ∝ blocks·k²."""
-    a = totals.select(
-        F.col(block_col).alias("blk"),
-        F.col(treat_col).alias("trt"),
-        F.col(t_col).alias("t"),
-    )
-    b = a.select(
-        F.col("blk"), F.col("trt").alias("trt_b"), F.col("t").alias("t_b")
-    )
-    r = (
-        a.join(b, "blk")
-        .groupBy("blk", "trt")
-        .agg(
-            (
-                2 * F.sum(F.when(F.col("t_b") < F.col("t"), 1).otherwise(0))
-                + F.sum(F.when(F.col("t_b") == F.col("t"), 1).otherwise(0))
-                + 1
-            ).cast("bigint").alias("r2")
-        )
-    )
+    r = _block_ranks(totals, block_col, treat_col, t_col)
     r = r.localCheckpoint(eager=False)  # feeds rank sums + block count
     per_t = r.groupBy("trt").agg(F.sum("r2").cast("bigint").alias("r2_t"))
     trts = per_t.select("trt").distinct()
@@ -623,6 +631,25 @@ def page_test(
     )
 
 
+def _event_times(per: DataFrame, dur_col: str, obs_col: str) -> DataFrame:
+    """The event-time rows (t, d, n_risk, ...) of a per-subject
+    (duration, observed∈{0,1}) frame: one duration-level hash agg
+    (d events, m subjects per t), and the exact integer at-risk count
+    n_risk(t) = N − Σ_{t'<t} m from one distributed prefix sum. Only
+    the times with d ≥ 1 are kept."""
+    lv = per.groupBy(F.col(dur_col).alias("t")).agg(
+        F.sum(obs_col).cast("bigint").alias("d"),
+        F.count(F.lit(1)).cast("bigint").alias("m"),
+    )
+    lv = lv.localCheckpoint(eager=False)  # feeds prefix sum + totals
+    c = prefix_sum(lv, "m", order_by=[F.col("t")], name="cumm")
+    tot = lv.agg(F.sum("m").cast("bigint").alias("n_tot"))
+    r = c.crossJoin(F.broadcast(tot)).withColumn(
+        "n_risk", (F.col("n_tot") - (F.col("cumm") - F.col("m"))).cast("bigint")
+    )
+    return r.where(F.col("d") >= 1)
+
+
 def kaplan_meier(per: DataFrame, dur_col: str, obs_col: str) -> DataFrame:
     """Kaplan-Meier survival estimator over a per-subject
     (duration, observed∈{0,1}) frame. Returns one row per distinct
@@ -638,17 +665,7 @@ def kaplan_meier(per: DataFrame, dur_col: str, obs_col: str) -> DataFrame:
     d = n_risk terminal row is pinned to exactly 0.0 (ln(0) guard —
     DuckDB raises on it). 100 TB: everything after the subject agg is
     support-sized; no global sort, no low-cardinality window."""
-    lv = per.groupBy(F.col(dur_col).alias("t")).agg(
-        F.sum(obs_col).cast("bigint").alias("d"),
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-    )
-    lv = lv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(lv, "m", order_by=[F.col("t")], name="cumm")
-    tot = lv.agg(F.sum("m").cast("bigint").alias("n_tot"))
-    r = c.crossJoin(F.broadcast(tot)).withColumn(
-        "n_risk", (F.col("n_tot") - (F.col("cumm") - F.col("m"))).cast("bigint")
-    )
-    ev = r.where(F.col("d") >= 1).withColumn(
+    ev = _event_times(per, dur_col, obs_col).withColumn(
         "lnf",
         F.when(
             F.col("n_risk") > F.col("d"),
@@ -676,17 +693,7 @@ def nelson_aalen(per: DataFrame, dur_col: str, obs_col: str) -> DataFrame:
     duration-level agg, exact integer at-risk counts via prefix sum);
     the running hazard/variance are float prefix sums of exact-ratio
     doubles → round-6 (parity rule 5)."""
-    lv = per.groupBy(F.col(dur_col).alias("t")).agg(
-        F.sum(obs_col).cast("bigint").alias("d"),
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-    )
-    lv = lv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(lv, "m", order_by=[F.col("t")], name="cumm")
-    tot = lv.agg(F.sum("m").cast("bigint").alias("n_tot"))
-    r = c.crossJoin(F.broadcast(tot)).withColumn(
-        "n_risk", (F.col("n_tot") - (F.col("cumm") - F.col("m"))).cast("bigint")
-    )
-    ev = r.where(F.col("d") >= 1).select(
+    ev = _event_times(per, dur_col, obs_col).select(
         "t",
         "n_risk",
         "d",
@@ -733,7 +740,6 @@ def ansari_bradley(df: DataFrame, value_col: str, is_a: Column) -> DataFrame:
     Scale shape: one value-level hash agg + one distributed prefix sum
     + a scalar rollup — identical 100 TB posture to mann_whitney_u.
     """
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact lane
     pv = _arm_counts(df, value_col, is_a)
     pv = pv.withColumn("n", F.col("na") + F.col("nb"))
     c = prefix_sum(pv, "n", order_by=[F.col("v")], name="cumn")
@@ -746,18 +752,18 @@ def ansari_bradley(df: DataFrame, value_col: str, is_a: Column) -> DataFrame:
         F.sum("na").cast("bigint").alias("n_a"),
         F.sum("nb").cast("bigint").alias("n_b"),
         F.max("N_tot").alias("N_tot"),
-        F.sum(dec(F.col("na")) * dec(s2)).cast("decimal(38,0)").alias("ab2"),
-        F.sum(dec(F.col("n")) * dec(s2)).cast("decimal(38,0)").alias("s1_2"),
-        F.sum(dec(F.col("n")) * dec(s2) * dec(s2))
+        F.sum(_dec(F.col("na")) * _dec(s2)).cast("decimal(38,0)").alias("ab2"),
+        F.sum(_dec(F.col("n")) * _dec(s2)).cast("decimal(38,0)").alias("s1_2"),
+        F.sum(_dec(F.col("n")) * _dec(s2) * _dec(s2))
         .cast("decimal(38,0)")
         .alias("fac4"),
     )
     n_a, n_b, N = F.col("n_a"), F.col("n_b"), F.col("N_tot")
-    var_num = dec(n_a) * dec(n_b) * (
-        dec(N) * F.col("fac4") - F.col("s1_2") * F.col("s1_2")
+    var_num = _dec(n_a) * _dec(n_b) * (
+        _dec(N) * F.col("fac4") - F.col("s1_2") * F.col("s1_2")
     )
-    var_den = 4 * dec(N) * dec(N) * dec(N - 1)
-    mean_ab = (dec(n_a) * F.col("s1_2")).cast("double") / (
+    var_den = 4 * _dec(N) * _dec(N) * _dec(N - 1)
+    mean_ab = (_dec(n_a) * F.col("s1_2")).cast("double") / (
         2 * N.cast("double")
     )
     return m.select(
@@ -801,7 +807,6 @@ def brunner_munzel(df: DataFrame, value_col: str, is_a: Column) -> DataFrame:
     c = prefix_sum_multi(
         pv, ["n", "na", "nb"], order_by=[F.col("v")], names=["cumn", "cuma", "cumb"]
     )
-    dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731 — exact lane
     rc2 = 2 * F.col("cumn") - F.col("n") + 1
     d2a = 2 * (F.col("cumn") - F.col("cuma")) - F.col("nb")
     d2b = 2 * (F.col("cumn") - F.col("cumb")) - F.col("na")
@@ -809,25 +814,25 @@ def brunner_munzel(df: DataFrame, value_col: str, is_a: Column) -> DataFrame:
     m = c.agg(
         F.sum("na").cast("bigint").alias("n_a"),
         F.sum("nb").cast("bigint").alias("n_b"),
-        F.sum(dec(F.col("na")) * dec(rc2)).cast("decimal(38,0)").alias("rca2"),
-        F.sum(dec(F.col("nb")) * dec(rc2)).cast("decimal(38,0)").alias("rcb2"),
-        F.sum(dec(F.col("na")) * dec(d2a)).cast("decimal(38,0)").alias("sa1"),
-        F.sum(dec(F.col("na")) * dec(d2a) * dec(d2a))
+        F.sum(_dec(F.col("na")) * _dec(rc2)).cast("decimal(38,0)").alias("rca2"),
+        F.sum(_dec(F.col("nb")) * _dec(rc2)).cast("decimal(38,0)").alias("rcb2"),
+        F.sum(_dec(F.col("na")) * _dec(d2a)).cast("decimal(38,0)").alias("sa1"),
+        F.sum(_dec(F.col("na")) * _dec(d2a) * _dec(d2a))
         .cast("decimal(38,0)")
         .alias("sa2"),
-        F.sum(dec(F.col("nb")) * dec(d2b)).cast("decimal(38,0)").alias("sb1"),
-        F.sum(dec(F.col("nb")) * dec(d2b) * dec(d2b))
+        F.sum(_dec(F.col("nb")) * _dec(d2b)).cast("decimal(38,0)").alias("sb1"),
+        F.sum(_dec(F.col("nb")) * _dec(d2b) * _dec(d2b))
         .cast("decimal(38,0)")
         .alias("sb2"),
     )
     n_a, n_b = F.col("n_a"), F.col("n_b")
     s_a = (
-        (dec(n_a) * F.col("sa2") - F.col("sa1") * F.col("sa1"))
+        (_dec(n_a) * F.col("sa2") - F.col("sa1") * F.col("sa1"))
         .cast("double")
         / (4 * n_a * (n_a - 1)).cast("double")
     )
     s_b = (
-        (dec(n_b) * F.col("sb2") - F.col("sb1") * F.col("sb1"))
+        (_dec(n_b) * F.col("sb2") - F.col("sb1") * F.col("sb1"))
         .cast("double")
         / (4 * n_b * (n_b - 1)).cast("double")
     )
@@ -875,72 +880,18 @@ def ordinal_association(
     (n, concordant, discordant, gamma, somers_d_yx, somers_d_xy).
 
     Same contingency-cell + bounded-pivot + ONE prefix-sum lane as
-    kendall_tau_b (never O(n²) pairs); pair and tie moments ride the
-    exact decimal(38,0) lane, the three ratios are single double
-    expressions (identical trees in a SQL oracle — no rounding).
+    kendall_tau_b (:func:`_pair_moments`; never O(n²) pairs); pair and
+    tie moments ride the exact decimal(38,0) lane, the three ratios are
+    single double expressions (identical trees in a SQL oracle — no
+    rounding).
 
     Rows whose y is OUTSIDE ``y_values`` are excluded from the test
-    (n, ties, and pair moments) — filtered explicitly here, so the
+    (n, ties, and pair moments) — filtered explicitly, so the
     restriction is part of the operator's contract rather than an
-    accident of the pivot (ADVICE r10: a SQL oracle that counts all y
-    values would silently diverge)."""
-    ys = list(y_values)
-    if ys != sorted(ys):
-        raise ValueError(f"y_values must be sorted ascending, got {ys}")
-    k = len(ys)
-    cells = (
-        df.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
-        .where(F.col("x").isNotNull() & F.col("y").isin(ys))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wide = cells.groupBy("x").agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("y") == F.lit(yv), F.col("c"))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias(f"c{i}")
-            for i, yv in enumerate(ys)
-        ]
-    )
-    wide = prefix_sum_multi(
-        wide,
-        [f"c{i}" for i in range(k)],
-        order_by=[F.col("x")],
-        names=[f"p{i}" for i in range(k)],
-    )
-    for i in range(k):
-        wide = wide.withColumn(f"e{i}", F.col(f"p{i}") - F.col(f"c{i}"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — exact pair lane
-    conc = sum(
-        (
-            dec(F.col(f"c{i}")) * dec(sum((F.col(f"e{j}") for j in range(i)), F.lit(0)))
-            for i in range(1, k)
-        ),
-        F.lit(0).cast("decimal(38,0)"),
-    )
-    disc = sum(
-        (
-            dec(F.col(f"c{i}"))
-            * dec(sum((F.col(f"e{j}") for j in range(i + 1, k)), F.lit(0)))
-            for i in range(k - 1)
-        ),
-        F.lit(0).cast("decimal(38,0)"),
-    )
-    nx = sum((F.col(f"c{i}") for i in range(k)), F.lit(0))
-    s = wide.agg(
-        F.sum(nx).cast("bigint").alias("n"),
-        F.sum(conc).alias("cc"),
-        F.sum(disc).alias("dd"),
-        F.sum(dec(nx) * dec(nx - 1)).alias("tx2"),
-        *[F.sum(f"c{i}").cast("bigint").alias(f"ny{i}") for i in range(k)],
-    )
-    ty2 = sum(
-        (dec(F.col(f"ny{i}")) * dec(F.col(f"ny{i}") - 1) for i in range(k)),
-        F.lit(0).cast("decimal(38,0)"),
-    )
-    n02 = dec(F.col("n")) * dec(F.col("n") - 1)
+    accident of the pivot (a SQL oracle that counts all y values would
+    silently diverge)."""
+    s = _pair_moments(df, x_col, y_col, y_values)
+    n02 = _dec(F.col("n")) * _dec(F.col("n") - 1)
     cd = (F.col("cc") - F.col("dd")).cast("double")
     return s.select(
         "n",
@@ -948,8 +899,48 @@ def ordinal_association(
         F.col("dd").cast("bigint").alias("discordant"),
         (cd / (F.col("cc") + F.col("dd")).cast("double")).alias("gamma"),
         (cd * 2 / (n02 - F.col("tx2")).cast("double")).alias("somers_d_yx"),
-        (cd * 2 / (n02 - ty2).cast("double")).alias("somers_d_xy"),
+        (cd * 2 / (n02 - F.col("ty2")).cast("double")).alias("somers_d_xy"),
     )
+
+
+def _table_2x2(
+    df: DataFrame, exposure: Column, outcome: Column
+) -> tuple[int, int, int, int]:
+    """The 2x2 cell counts (a, b, c, d) of exposure x outcome — one
+    scan and a config-sized 1-row collect."""
+    cell = lambda p: F.sum(F.when(p, 1).otherwise(0)).cast("bigint")  # noqa: E731
+    row = df.agg(
+        cell(exposure & outcome).alias("a"),
+        cell(exposure & ~outcome).alias("b"),
+        cell(~exposure & outcome).alias("c"),
+        cell(~exposure & ~outcome).alias("d"),
+    ).collect()[0]
+    return int(row["a"]), int(row["b"]), int(row["c"]), int(row["d"])
+
+
+def _lf_zero() -> Column:
+    return F.lit(0).cast("decimal(38,12)")
+
+
+def _ln_factorials(spark, m: int) -> DataFrame:
+    """(i, lf) with lf = ln(i!) for i = 1..m: each ln(i) quantized to
+    DECIMAL(32,12), then one exact decimal prefix sum. The input is
+    ``spark.range(1, m+1)``, so ``range_key`` replaces the range
+    shuffle + sampling pass + the hash(__pid) re-shuffle with ONE
+    arithmetic-bucket exchange."""
+    lf = spark.range(1, m + 1).select(
+        F.col("id").alias("i"),
+        F.log(F.col("id").cast("double")).cast("decimal(32,12)").alias("lnl"),
+    )
+    return prefix_sum(lf, "lnl", [F.col("i")], name="lf", range_key=(1, m + 1)).select(
+        "i", "lf"
+    )
+
+
+def _lf_at(idx: int) -> Column:
+    """Aggregate over the :func:`_ln_factorials` table: ln(idx!), and
+    0 = ln(0!) for an index outside it."""
+    return F.coalesce(F.max(F.when(F.col("i") == F.lit(idx), F.col("lf"))), _lf_zero())
 
 
 def fisher_exact_2x2(
@@ -988,37 +979,14 @@ def fisher_exact_2x2(
     any zip_with_index pass).
     """
     spark = df.sparkSession
-    cell = lambda p: F.sum(F.when(p, 1).otherwise(0)).cast("bigint")  # noqa: E731
-    row = df.agg(
-        cell(exposure & outcome).alias("a"),
-        cell(exposure & ~outcome).alias("b"),
-        cell(~exposure & outcome).alias("c"),
-        cell(~exposure & ~outcome).alias("d"),
-    ).collect()[0]
-    a, b, c, d = int(row["a"]), int(row["b"]), int(row["c"]), int(row["d"])
+    a, b, c, d = _table_2x2(df, exposure, outcome)
     r1, r2, c1 = a + b, c + d, a + c
     n = r1 + r2
     kmin, kmax = max(0, c1 - r2), min(r1, c1)
 
-    lf = spark.range(1, n + 1).select(
-        F.col("id").alias("i"),
-        F.log(F.col("id").cast("double")).cast("decimal(32,12)").alias("lnl"),
-    )
-    # range_key: the input is spark.range(1, n+1) — the dense-integer
-    # specialization replaces the range shuffle + sampling pass + the
-    # hash(__pid) re-shuffle with ONE arithmetic-bucket exchange.
-    lf = prefix_sum(lf, "lnl", [F.col("i")], name="lf", range_key=(1, n + 1)).select(
-        "i", "lf"
-    )
-    zero = F.lit(0).cast("decimal(38,12)")
-
-    def pick(idx: int) -> Column:
-        return F.coalesce(
-            F.max(F.when(F.col("i") == F.lit(idx), F.col("lf"))), zero
-        )
-
+    lf = _ln_factorials(spark, n)
     consts = lf.agg(
-        (pick(r1) + pick(r2) + pick(c1) + pick(n - c1) - pick(n)).alias("c_tot")
+        (_lf_at(r1) + _lf_at(r2) + _lf_at(c1) + _lf_at(n - c1) - _lf_at(n)).alias("c_tot")
     )
     ks = spark.range(kmin, kmax + 1).select(F.col("id").alias("k"))
     lk = ks.select(
@@ -1035,7 +1003,7 @@ def fisher_exact_2x2(
     neg = (
         lk.join(lf, "i", "left")
         .groupBy("k")
-        .agg(F.sum(F.coalesce(F.col("lf"), zero)).alias("neg"))
+        .agg(F.sum(F.coalesce(F.col("lf"), _lf_zero())).alias("neg"))
     )
     terms = neg.crossJoin(F.broadcast(consts)).select(
         "k", F.exp((F.col("c_tot") - F.col("neg")).cast("double")).alias("p")
@@ -1138,14 +1106,7 @@ def barnard_exact_2x2(
     test" survives 100 TB the same way the Fisher lane does.
     """
     spark = df.sparkSession
-    cell = lambda p: F.sum(F.when(p, 1).otherwise(0)).cast("bigint")  # noqa: E731
-    row = df.agg(
-        cell(exposure & outcome).alias("a"),
-        cell(exposure & ~outcome).alias("b"),
-        cell(~exposure & outcome).alias("c"),
-        cell(~exposure & ~outcome).alias("d"),
-    ).collect()[0]
-    a, b, c, d = int(row["a"]), int(row["b"]), int(row["c"]), int(row["d"])
+    a, b, c, d = _table_2x2(df, exposure, outcome)
     n1, n2 = a + b, c + d
     nn, s0 = n1 + n2, a + c
     zn = a * n2 - c * n1  # BIGINT-exact (< 2^53 through 64x replicas)
@@ -1155,24 +1116,29 @@ def barnard_exact_2x2(
     znd, s0cd, s0d = float(zn), float(s0c), float(s0)
 
     # --- shared lnfact lane (identical to fisher_exact_2x2) ------------
-    m = max(n1, n2)
-    lf = spark.range(1, m + 1).select(
-        F.col("id").alias("i"),
-        F.log(F.col("id").cast("double")).cast("decimal(32,12)").alias("lnl"),
-    )
-    # dense-integer specialization: one arithmetic-bucket exchange, no
-    # range sampling pass, no hash(__pid) re-shuffle (see prefix_sum).
-    lf = prefix_sum(lf, "lnl", [F.col("i")], name="lf", range_key=(1, m + 1)).select(
-        "i", "lf"
-    )
-    zlf = F.lit(0).cast("decimal(38,12)")
+    lf = _ln_factorials(spark, max(n1, n2))
+    lfc = lf.agg(_lf_at(n1).alias("lf_n1"), _lf_at(n2).alias("lf_n2"))
 
-    def pick(idx: int) -> Column:
-        return F.coalesce(
-            F.max(F.when(F.col("i") == F.lit(idx), F.col("lf"))), zlf
+    def ln_binom(x: str, nx: int, lf_n: str, out: str) -> DataFrame:
+        # (x, out): ln C(nx, x) for x = 0..nx from the lnfact table
+        return (
+            spark.range(0, nx + 1)
+            .select(F.col("id").alias(x))
+            .join(lf.select(F.col("i").alias(x), F.col("lf").alias("lf_a")), x, "left")
+            .withColumn("i2", F.lit(nx) - F.col(x))
+            .join(lf.select(F.col("i").alias("i2"), F.col("lf").alias("lf_b")), "i2", "left")
+            .crossJoin(F.broadcast(lfc))
+            .select(
+                x,
+                (
+                    F.col(lf_n)
+                    - F.coalesce(F.col("lf_a"), _lf_zero())
+                    - F.coalesce(F.col("lf_b"), _lf_zero())
+                )
+                .cast("double")
+                .alias(out),
+            )
         )
-
-    lfc = lf.agg(pick(n1).alias("lf_n1"), pick(n2).alias("lf_n2"))
 
     # --- nuisance grid: pi_g = g/(grid+1), libm logs once per point ----
     gd = spark.range(1, grid + 1).select(
@@ -1187,24 +1153,7 @@ def barnard_exact_2x2(
     )
 
     # --- Bin(n2, pi) term table + distributed CDF ----------------------
-    x2f = (
-        spark.range(0, n2 + 1)
-        .select(F.col("id").alias("x2"))
-        .join(lf.select(F.col("i").alias("x2"), F.col("lf").alias("lf_a")), "x2", "left")
-        .withColumn("i2", F.lit(n2) - F.col("x2"))
-        .join(lf.select(F.col("i").alias("i2"), F.col("lf").alias("lf_b")), "i2", "left")
-        .crossJoin(F.broadcast(lfc))
-        .select(
-            "x2",
-            (
-                F.col("lf_n2")
-                - F.coalesce(F.col("lf_a"), zlf)
-                - F.coalesce(F.col("lf_b"), zlf)
-            )
-            .cast("double")
-            .alias("lnc2"),
-        )
-    )
+    x2f = ln_binom("x2", n2, "lf_n2", "lnc2")
     t2 = x2f.crossJoin(F.broadcast(gd)).select(
         "g",
         "x2",
@@ -1231,24 +1180,8 @@ def barnard_exact_2x2(
     )
 
     # --- per-x1 extreme-set boundaries (exact quadratic, doubles) ------
-    x1f = (
-        spark.range(0, n1 + 1)
-        .select(F.col("id").alias("x1"))
-        .join(lf.select(F.col("i").alias("x1"), F.col("lf").alias("lf_a")), "x1", "left")
-        .withColumn("i2", F.lit(n1) - F.col("x1"))
-        .join(lf.select(F.col("i").alias("i2"), F.col("lf").alias("lf_b")), "i2", "left")
-        .crossJoin(F.broadcast(lfc))
-        .select(
-            "x1",
-            (
-                F.col("lf_n1")
-                - F.coalesce(F.col("lf_a"), zlf)
-                - F.coalesce(F.col("lf_b"), zlf)
-            )
-            .cast("double")
-            .alias("lnc1"),
-            F.col("x1").cast("double").alias("x1d"),
-        )
+    x1f = ln_binom("x1", n1, "lf_n1", "lnc1").withColumn(
+        "x1d", F.col("x1").cast("double")
     )
     qa = F.lit(s0cd) * F.lit(n1d) * F.lit(n1d) + F.lit(znd) * F.lit(znd)
     x1f = x1f.select(
