@@ -6685,13 +6685,14 @@ def q_stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # purchase and click value distributions side by side — the
     # where-do-the-distributions-diverge readout behind every Q-Q plot,
     # complementing q_stat_ks's single worst-point max. Each decile is
-    # an EXACT order statistic (rank ceil(d*n/10) selected via the
-    # per-arm value-support prefix sum and interval membership — the
+    # an EXACT order statistic: rank ceil(d*n/10) is the value whose
+    # running count interval (cum - cnt, cum] holds it — the
     # trimmed-mean machinery; no percentile interpolation crosses
-    # engines). Cent-lane values, exact ranks, one double division per
-    # cell at the end. 100 TB: one contingency aggregate per arm + one
-    # prefix sum over the value support; the decile dimension is a
-    # 9-row broadcast.
+    # engines. Cent-lane values, exact ranks, one double division per
+    # cell at the end. 100 TB: one contingency aggregate over (arm,
+    # cent value), then a running-sum window partitioned by the arm key
+    # is_a over that value support; the decile dimension is a 9-row
+    # broadcast.
     ev = (
         table(spark, sf_dir, "events")
         .where(
@@ -6704,11 +6705,11 @@ def q_stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("is_a"),
     )
     pv = x.groupBy("is_a", "v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    # per-arm prefix sum: order by (is_a, v) and subtract the other
-    # arm's total would break per-arm cum; instead run prefix_sum per
-    # arm via the partitioned window equivalent — the arm key bounds
-    # partitions at 2, but the INPUT is the value-support contingency
+    pv = pv.localCheckpoint(eager=False)  # feeds the running sum + totals
+    # Running count per arm: a window partitioned by the 2-valued is_a,
+    # not one prefix_sum over (is_a, v), which would carry the first
+    # arm's count into the second. The arm key bounds the window at 2
+    # partitions, but its INPUT is the value-support contingency
     # (aggregate-sized), the same exemption as the chi-sq family.
     from pyspark.sql.window import Window
 
