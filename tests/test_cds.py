@@ -62,6 +62,8 @@ if "--key" in sys.argv:
 print("CDS " + json.dumps(report), flush=True)
 if "--kill" in sys.argv:  # skip the dump at exit
     os.kill(pid, signal.SIGKILL)
+if "--hold" in sys.argv:  # keep the session until stdin closes
+    sys.stdin.read()
 """
 
 
@@ -112,6 +114,38 @@ def test_absent_archive_is_dumped_then_published_and_mapped(built):
     assert re.fullmatch(re.escape(f"{cache}/{key}.") + r"\d+\.jsa", archive)
     assert archive in second["maps"]
     assert not os.path.exists(tmp)
+
+
+@pytest.mark.slow
+def test_launch_while_a_dump_is_pending_neither_dumps_nor_deletes_it(tmp_path):
+    # The first JVM writes its dump for seconds after it is told to exit;
+    # a session launched meanwhile must leave that temp alone and launch
+    # without an archive, so exactly one temp is ever written.
+    home = tmp_path / "xdg"
+    cache = str(home / "trembita_spark")
+    env = dict(os.environ, XDG_CACHE_HOME=str(home))
+    env["PYTHONPATH"] = _REPO + os.pathsep + env.get("PYTHONPATH", "")
+    with open(tmp_path / "first.err", "w") as err:
+        first = subprocess.Popen(
+            [sys.executable, "-c", _SCRIPT, SF_DIR_SMALL, "--hold"],
+            cwd=_REPO, env=env, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+            stderr=err, text=True,
+        )
+        try:
+            lines = iter(first.stdout.readline, "")
+            line = next((ln for ln in lines if ln.startswith("CDS ")), "CDS {}")
+            second = _session(home)
+        finally:
+            out, _ = first.communicate(input="", timeout=300)
+    assert first.returncode == 0, (tmp_path / "first.err").read_text()[-3000:]
+    assert not [ln for ln in out.splitlines() if "[cds" in ln], out[-2000:]
+    (dump,) = [a for a in json.loads(line[4:])["cds"] if a.startswith("-XX:ArchiveClassesAtExit=")]
+    assert second["cds"] == [] and not [m for m in second["maps"] if m.startswith(cache)]
+    tmp = dump.split("=", 1)[1]
+    assert glob.glob(os.path.join(cache, "*.tmp")) == [tmp]
+    third = _session(home)
+    (archive,) = _offered(third)
+    assert archive in third["maps"] and not os.path.exists(tmp)
 
 
 @pytest.mark.slow

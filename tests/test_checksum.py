@@ -132,3 +132,28 @@ def test_unsupported_type_is_loud(spark):
     df = spark.createDataFrame([([1, 2],)], "a array<bigint>")
     with pytest.raises(TypeError, match="canonical"):
         CK.spark_checksum(df)
+
+
+def test_md5_int60_matches_duckdb_hex60(spark, duck):
+    # The 60-bit md5 fold behind every hash-derived column, compared
+    # value for value on the two engines (not only through a row fold).
+    # md5('') and md5('event:17') start with a hex digit >= 8, so the
+    # fold's top bit is set; the non-ASCII string hashes its UTF-8 bytes.
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    strings = ["", "a", "unicode ✓ löwe 中文", "event:17"]
+    df = spark.createDataFrame(list(enumerate(strings)), "i int, s string")
+    got = dict(df.select("i", CK.md5_int60(F.md5("s"))).collect())
+    duck.execute("DROP TABLE IF EXISTS fold_in")
+    duck.execute("CREATE TABLE fold_in (i INTEGER, s VARCHAR)")
+    duck.executemany("INSERT INTO fold_in VALUES (?, ?)", list(enumerate(strings)))
+    want = dict(
+        duck.execute(
+            f"SELECT i, {CK.HEX60_SQL.format(md5='md5(s)')} FROM fold_in"
+        ).fetchall()
+    )
+    digests = [hashlib.md5(s.encode()).hexdigest() for s in strings]
+    assert [d[0] >= "8" for d in digests] == [True, False, False, True]
+    assert got == want == {i: int(d[:15], 16) for i, d in enumerate(digests)}

@@ -5,8 +5,7 @@ the non-blank lines of a module with comments and multi-line strings
 (docstrings, oracle SQL) removed, each stripped of its indentation. A
 line is "repeated" when some window of 5 consecutive code lines that
 holds it occurs at least twice in the same module. Prints one row per
-module of the four modules the duplicate sweep targets, then the package
-totals.
+module that has repeated lines, most first, then the package totals.
 """
 import io
 import os
@@ -14,8 +13,6 @@ import tokenize
 from collections import defaultdict
 
 PACKAGE = "trembita_spark"
-TRACKED = ["contract/aggregates.py", "contract/streaming_batch.py",
-           "operators/stats.py", "contract/windows.py"]
 WINDOW = 5
 
 
@@ -56,8 +53,9 @@ def main():
                     lines = code_lines(f.read())
                 rows[os.path.relpath(path, PACKAGE)] = (repeated(lines), len(lines))
     print(f"{'module':<32}{'repeated':>10}{'code lines':>12}")
-    for mod in TRACKED:
-        print(f"{mod:<32}{rows[mod][0]:>10}{rows[mod][1]:>12}")
+    for mod, (rep, n) in sorted(rows.items(), key=lambda kv: (-kv[1][0], kv[0])):
+        if rep:
+            print(f"{mod:<32}{rep:>10}{n:>12}")
     total = [sum(r[i] for r in rows.values()) for i in (0, 1)]
     print(f"{'package (' + str(len(rows)) + ' modules)':<32}{total[0]:>10}{total[1]:>12}")
 

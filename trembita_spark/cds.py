@@ -17,10 +17,14 @@ work. Everything lives in ``$XDG_CACHE_HOME/trembita_spark`` (default
   SIGBUS.
 - ``<key>.<random>.tmp`` is a dump in progress or not yet checked. A
   launch that finds no published archive dumps to a fresh one at exit,
-  and records its class path in ``<key>.cp``. The next launch checks it
-  with a one-off ``java -Xshare:on -XX:+VerifySharedSpaces -version`` on
-  that class path, publishes it with ``os.replace`` if that exits 0 and
-  deletes it otherwise. Publishing removes every other key's files.
+  and records the JVM's pid and class path in ``<key>.cp``. While that
+  JVM runs (it writes the dump for 7-9 s after it is told to exit), a
+  launch leaves its temp alone and gets no archive, so it neither
+  deletes the half-written dump nor writes a second one. A later launch
+  checks the temp with a one-off ``java -Xshare:on
+  -XX:+VerifySharedSpaces -version`` on the recorded class path,
+  publishes it with ``os.replace`` if that exits 0 and deletes it
+  otherwise. Publishing removes every other key's files.
 - ``conf/`` is an empty directory. Spark puts ``$SPARK_CONF_DIR`` on the
   class path, and a non-empty directory there makes the dump fail and a
   later load reject the archive. So the driver JVM is launched with
@@ -61,7 +65,7 @@ def driver_jvm(extra_conf: dict[str, str]) -> Iterator[str | None]:
     """Yield the ``spark.driver.defaultJavaOptions`` for the driver JVM
     about to launch, or None for no archive. While the block runs,
     ``SPARK_CONF_DIR`` points at the empty conf dir; after a launch that
-    dumps, the JVM's class path is recorded for the check."""
+    dumps, the JVM's pid and class path are recorded."""
     launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
     plan = _plan(extra_conf) if launches else None
     if plan is None:
@@ -78,8 +82,13 @@ def driver_jvm(extra_conf: dict[str, str]) -> Iterator[str | None]:
         else:
             os.environ["SPARK_CONF_DIR"] = saved
     if cp_file:
+        jvm = SparkContext._jvm
         with contextlib.suppress(OSError):
-            _write(cp_file, SparkContext._jvm.System.getProperty("java.class.path"))
+            _write(
+                cp_file,
+                f"{jvm.ProcessHandle.current().pid()}\n"
+                + jvm.System.getProperty("java.class.path"),
+            )
 
 
 def _plan(extra_conf: dict[str, str]) -> tuple[str, str, str | None] | None:
@@ -113,10 +122,11 @@ def _plan(extra_conf: dict[str, str]) -> tuple[str, str, str | None] | None:
             [java, os.path.join(server, "libjvm.so"), os.path.join(server, "classes.jsa")]
             + [os.path.join(jars, n) for n in sorted(os.listdir(jars))],
         )
-        archive = _archive(cache, key, java)
+        dumping = _dumping(cache, key)
+        archive = _archive(cache, key, java, dumping)
         if archive is not None:
             return f"{shlex.quote('-XX:SharedArchiveFile=' + archive)} {_LOG}", empty, None
-        if not os.access(cache, os.W_OK):
+        if dumping is not None or not os.access(cache, os.W_OK):
             return None
         tmp = os.path.join(cache, f"{key}.{uuid.uuid4().hex}.tmp")
         options = f"{shlex.quote('-XX:ArchiveClassesAtExit=' + tmp)} {_LOG}"
@@ -133,10 +143,33 @@ def _key(conf_dir: str, files: list[str]) -> str:
     return h.hexdigest()[:24]
 
 
-def _archive(cache: str, key: str, java: str) -> str | None:
+def _recorded(cache: str, key: str) -> tuple[int, str]:
+    """(pid, class path) of the key's last dumping JVM."""
+    with open(os.path.join(cache, key + ".cp")) as f:
+        pid, cp = f.read().split("\n", 1)
+    return int(pid), cp
+
+
+def _dumping(cache: str, key: str) -> str | None:
+    """The temp the key's last dumping JVM writes, while that JVM runs;
+    None once it has exited (an exiting JVM's cmdline reads empty before
+    it closes its files) or if its pid now names another process."""
+    flag = "-XX:ArchiveClassesAtExit="
+    try:
+        pid, _ = _recorded(cache, key)
+        with open(f"/proc/{pid}/cmdline") as f:
+            args = f.read().split("\0")
+    except (OSError, ValueError):
+        return None
+    mine = os.path.join(cache, key + ".")
+    return next((a[len(flag):] for a in args if a.startswith(flag + mine)), None)
+
+
+def _archive(cache: str, key: str, java: str, dumping: str | None) -> str | None:
     """This key's published archive, after publishing a temporary one
     that passes the check if none is; None if there is none. Every other
-    file of the key is removed."""
+    file of the key is removed, except ``dumping``, the temp a running
+    JVM still writes."""
     names = sorted(n for n in os.listdir(cache) if n.startswith(key + "."))
     found = None
     for name in (n for n in names if n.endswith(".jsa")):
@@ -147,6 +180,8 @@ def _archive(cache: str, key: str, java: str) -> str | None:
             _remove(path)
     for name in (n for n in names if n.endswith(".tmp")):
         path = os.path.join(cache, name)
+        if path == dumping:
+            continue
         if found is None and _publishable(cache, key, java, path):
             found = os.path.join(cache, f"{key}.{os.path.getsize(path)}.jsa")
             os.replace(path, found)
@@ -163,15 +198,14 @@ def _publishable(cache: str, key: str, java: str, tmp: str) -> bool:
     every region passes its checksum. A truncated archive makes the
     checking JVM die, and that reads as False."""
     try:
-        with open(os.path.join(cache, key + ".cp")) as f:
-            cp = f.read()
+        _, cp = _recorded(cache, key)
         proc = subprocess.run(
             [java, "-Xshare:on", f"-XX:SharedArchiveFile={tmp}", "-XX:+VerifySharedSpaces",
              "-XX:+SuppressFatalErrorMessage", "-XX:-CreateCoredumpOnCrash",
              "-cp", cp, "-version"],
             capture_output=True, timeout=60,
         )
-    except (OSError, subprocess.SubprocessError):
+    except (OSError, ValueError, subprocess.SubprocessError):
         return False
     return proc.returncode == 0
 

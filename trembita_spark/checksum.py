@@ -60,6 +60,23 @@ SEP = "\x1f"
 NULL_SENTINEL = "\x01"
 MOD = 1152921504606846976  # 2^60
 
+# The engine's one deterministic hash, on both engines: the first 15 hex
+# chars of an md5 hex string read as a 60-bit integer. Every
+# hash-derived column (count-min cells, bloom bits, shards, folds,
+# bootstrap draws, this module's row fold) is built from it. DuckDB has
+# no ``conv``, so its form folds the hex chars; ``{md5}`` is the md5
+# expression.
+HEX60_SQL = (
+    "list_reduce(list_transform(string_split_regex(substr({md5}, 1, 15), ''), "
+    "c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)"
+)
+
+
+def md5_int60(md5_hex: Column) -> Column:
+    """Spark form of ``HEX60_SQL``: BIGINT from the first 15 hex chars of
+    the md5 hex column ``md5_hex``."""
+    return F.conv(F.substring(md5_hex, 1, 15), 16, 10).cast("bigint")
+
 
 # ---------------------------------------------------------------------------
 # Spark side
@@ -116,11 +133,7 @@ def spark_fold(df: DataFrame) -> DataFrame:
         F.coalesce(_spark_canon(f.name, f.dataType), F.lit(NULL_SENTINEL))
         for f in fields
     ]
-    h = (
-        F.conv(F.substring(F.md5(F.concat_ws(SEP, *parts)), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("h")
-    )
+    h = md5_int60(F.md5(F.concat_ws(SEP, *parts))).alias("h")
     return df.select(h).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         (F.sum(F.col("h").cast("decimal(38,0)")) % F.lit(MOD))
@@ -182,11 +195,7 @@ def duckdb_fold_sql(inner_sql: str, cols: list) -> str:
     return f"""
     WITH __res AS ({inner}),
     __h AS (
-      SELECT list_reduce(list_transform(
-               string_split_regex(
-                 substr(md5(concat_ws(chr(31), {canons})), 1, 15), ''),
-               c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-             (a, b) -> a * 16 + b) AS h
+      SELECT {HEX60_SQL.format(md5=f"md5(concat_ws(chr(31), {canons}))")} AS h
       FROM __res
     )
     SELECT CAST(count(*) AS BIGINT) AS n_rows,

@@ -232,15 +232,6 @@ def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB fragment: 60-bit int from the first 15 hex chars of an md5
-# string (Spark side: ``conv(substring(md5(x),1,15),16,10)``; DuckDB has
-# no ``conv``, so fold hex chars). Shared by every hash-derived bucket.
-HEX60_SQL = (
-    "list_reduce(list_transform(string_split_regex(substr({md5}, 1, 15), ''), "
-    "c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)), (a, b) -> a * 16 + b)"
-)
-
-
 def load_all() -> None:
     """Import every contract module so registration side effects run.
 

@@ -10,7 +10,7 @@ one shuffle, not n).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trembita_spark.contract import (
@@ -950,7 +950,7 @@ def q_agg_sketch_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Count-min sketch oracle: identical md5-fold hashing, the same
 # pre-agg → fan-out → cell-sum → broadcast-probe min, all BIGINT.
-from trembita_spark.contract import HEX60_SQL as _H60
+from trembita_spark.checksum import HEX60_SQL as _H60, md5_int60
 
 _CMS_H = _H60.format(md5="md5(k || '#' || CAST(dd.d AS VARCHAR))")
 _CMS_HP = _H60.format(md5="md5(p.k || '#' || CAST(dd.d AS VARCHAR))")
@@ -2083,6 +2083,44 @@ def q_histogram_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _between_within(md: DataFrame, arms: list[str]) -> DataFrame:
+    """One-way ANOVA over the exact per-arm moments in the one row of
+    ``md`` (``n_<a>``, ``sd_<a>`` = Σx and ``ssd_<a>`` = Σx² for each
+    arm ``a``): ``(n, ss_between, ss_within, f_stat)`` as fixed-order
+    double trees. The decimal moments are split-cast to double (see the
+    q_stat_anova oracle comment): floor part + fraction part are each
+    one correctly-rounded conversion in both engines, so the doubles
+    agree bit-for-bit while the integer part is < 2^53 (holds far past
+    the fixture scales; the statistic itself loses meaning before the
+    bound does)."""
+    from functools import reduce
+    from operator import add
+
+    d2d = lambda c: F.floor(c).cast("double") + (c - F.floor(c)).cast("double")  # noqa: E731
+    m = md.select(
+        *[F.col(f"n_{a}") for a in arms],
+        *[d2d(F.col(f"sd_{a}")).alias(f"s_{a}") for a in arms],
+        *[d2d(F.col(f"ssd_{a}")).alias(f"ss_{a}") for a in arms],
+    )
+    col = lambda name: [F.col(f"{name}_{a}") for a in arms]  # noqa: E731
+    v = m.select(
+        reduce(add, col("n")).alias("n"),
+        reduce(add, col("s")).alias("s"),
+        reduce(add, [s * s / n for s, n in zip(col("s"), col("n"))]).alias("sg"),
+        reduce(add, col("ss")).alias("sst"),
+    )
+    w = v.select(
+        "n",
+        (F.col("sg") - F.col("s") * F.col("s") / F.col("n")).alias("ss_between"),
+        (F.col("sst") - F.col("sg")).alias("ss_within"),
+    )
+    k = len(arms)
+    return w.withColumn(
+        "f_stat",
+        (F.col("ss_between") / (k - 1)) / (F.col("ss_within") / (F.col("n") - k)),
+    )
+
+
 @register(
     "q_stat_anova",
     oracle="""
@@ -2164,44 +2202,8 @@ def q_stat_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
             for a, fv in arms
         ],
     )
-    # split-cast decimal->double (see the oracle comment): floor part +
-    # fraction part are each one correctly-rounded conversion in both
-    # engines, so the doubles agree bit-for-bit while the integer part
-    # is < 2^53 (holds far past the fixture scales; the statistic
-    # itself loses meaning before the bound does).
-    d2d = lambda c: F.floor(c).cast("double") + (c - F.floor(c)).cast("double")  # noqa: E731
-    m = md.select(
-        "n_a",
-        "n_n",
-        "n_r",
-        *[d2d(F.col(f"sd_{a}")).alias(f"s_{a}") for a, _ in arms],
-        *[d2d(F.col(f"ssd_{a}")).alias(f"ss_{a}") for a, _ in arms],
-    )
-    v = m.select(
-        (F.col("n_a") + F.col("n_n") + F.col("n_r")).alias("n"),
-        (F.col("s_a") + F.col("s_n") + F.col("s_r")).alias("s"),
-        (
-            F.col("s_a") * F.col("s_a") / F.col("n_a")
-            + F.col("s_n") * F.col("s_n") / F.col("n_n")
-            + F.col("s_r") * F.col("s_r") / F.col("n_r")
-        ).alias("sg"),
-        (F.col("ss_a") + F.col("ss_n") + F.col("ss_r")).alias("sst"),
-    )
-    w = v.select(
-        "n",
-        (F.col("sg") - F.col("s") * F.col("s") / F.col("n")).alias("ss_between"),
-        (F.col("sst") - F.col("sg")).alias("ss_within"),
-    )
-    return w.select(
-        "n",
-        "ss_between",
-        "ss_within",
-        (
-            (F.col("ss_between") / 2) / (F.col("ss_within") / (F.col("n") - 3))
-        ).alias("f_stat"),
-        (
-            F.col("ss_between") / (F.col("ss_between") + F.col("ss_within"))
-        ).alias("eta_sq"),
+    return _between_within(md, [a for a, _ in arms]).withColumn(
+        "eta_sq", F.col("ss_between") / (F.col("ss_between") + F.col("ss_within"))
     )
 
 
@@ -2481,34 +2483,8 @@ def q_stat_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
             for a, _ in _LEVENE_ARMS
         ],
     )
-    d2d = lambda c: F.floor(c).cast("double") + (c - F.floor(c)).cast("double")  # noqa: E731
-    m = dm.crossJoin(F.broadcast(tot)).select(
-        *[F.col(f"n_{a}") for a, _ in _LEVENE_ARMS],
-        *[d2d(F.col(f"sd_{a}")).alias(f"s_{a}") for a, _ in _LEVENE_ARMS],
-        *[d2d(F.col(f"ssd_{a}")).alias(f"ss_{a}") for a, _ in _LEVENE_ARMS],
-    )
-    v = m.select(
-        (F.col("n_a") + F.col("n_b") + F.col("n_c")).alias("n"),
-        (F.col("s_a") + F.col("s_b") + F.col("s_c")).alias("s"),
-        (
-            F.col("s_a") * F.col("s_a") / F.col("n_a")
-            + F.col("s_b") * F.col("s_b") / F.col("n_b")
-            + F.col("s_c") * F.col("s_c") / F.col("n_c")
-        ).alias("sg"),
-        (F.col("ss_a") + F.col("ss_b") + F.col("ss_c")).alias("sst"),
-    )
-    w = v.select(
-        "n",
-        (F.col("sg") - F.col("s") * F.col("s") / F.col("n")).alias("ss_between"),
-        (F.col("sst") - F.col("sg")).alias("ss_within"),
-    )
-    return w.select(
-        "n",
-        "ss_between",
-        "ss_within",
-        (
-            (F.col("ss_between") / 2) / (F.col("ss_within") / (F.col("n") - 3))
-        ).alias("f_stat"),
+    return _between_within(
+        dm.crossJoin(F.broadcast(tot)), [a for a, _ in _LEVENE_ARMS]
     )
 
 
@@ -4137,6 +4113,19 @@ _BOOT_W_SQL = (
 ).format(t0=_BOOT_T[0], t1=_BOOT_T[1], t2=_BOOT_T[2], t3=_BOOT_T[3], t4=_BOOT_T[4])
 
 
+def _replica_draw() -> Column:
+    """Replica ``b``'s draw for row ``event_id``: the 60-bit md5 fold of
+    ``'<event_id>:<b>'`` (q_stat_bootstrap_ci's multinomial weights,
+    q_stat_permutation_test's relabelling)."""
+    return md5_int60(
+        F.md5(
+            F.concat(
+                F.col("event_id").cast("string"), F.lit(":"), F.col("b").cast("string")
+            )
+        )
+    )
+
+
 @register(
     "q_stat_bootstrap_ci",
     oracle=f"""
@@ -4205,24 +4194,7 @@ def q_stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         F.explode(F.sequence(F.lit(0), F.lit(31))).alias("b"),
         "event_id",
-    ).withColumn(
-        "u",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-    )
+    ).withColumn("u", _replica_draw())
     wr = reps.selectExpr("v", "b", f"{_BOOT_W_SQL} AS w")
     per = wr.groupBy("b").agg(
         F.sum("w").cast("bigint").alias("sw"),
@@ -4653,6 +4625,21 @@ _ODDS_FIELDS = [
 ]
 
 
+def _afternoon_purchase_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact 2x2 cells ``(a, b, c, d)`` in one row: exposure =
+    afternoon (hour >= 12) by outcome = purchase, exposed row first."""
+    ev = table(spark, sf_dir, "events")
+    exp_ = F.hour("ts") >= 12
+    out_ = F.col("event_type") == "purchase"
+    cell = lambda p, t: F.sum(F.when(p & t, 1).otherwise(0)).cast("bigint")  # noqa: E731
+    return ev.agg(
+        cell(exp_, out_).alias("a"),
+        cell(exp_, ~out_).alias("b"),
+        cell(~exp_, out_).alias("c"),
+        cell(~exp_, ~out_).alias("d"),
+    )
+
+
 @register(
     "q_stat_odds_ratio",
     oracle=f"""
@@ -4675,18 +4662,7 @@ def q_stat_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engines (libm ln/exp are 1-ulp → round-12, the q_stat_psi
     # discipline). Epidemiology's workhorse effect-size test, missing
     # from the chi-square family until now.
-    ev = table(spark, sf_dir, "events")
-    exp_ = F.hour("ts") >= 12
-    out_ = F.col("event_type") == "purchase"
-    cell = lambda p, t: F.sum(  # noqa: E731
-        F.when(p & t, 1).otherwise(0)
-    ).cast("bigint")
-    t = ev.agg(
-        cell(exp_, out_).alias("a"),
-        cell(exp_, ~out_).alias("b"),
-        cell(~exp_, out_).alias("c"),
-        cell(~exp_, ~out_).alias("d"),
-    )
+    t = _afternoon_purchase_2x2(spark, sf_dir)
     return t.selectExpr("a", "b", "c", "d", *_ODDS_FIELDS)
 
 
@@ -4804,6 +4780,18 @@ def q_anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r1.select("n1", "g1", "suspect1").crossJoin(F.broadcast(r2))
 
 
+def _score_bins(ev: DataFrame) -> DataFrame:
+    """The calibration frame ``(bin, v, y)`` of ``ev``: ``v`` the exact
+    DECIMAL(18,2) score, ``bin`` = min(floor(v / 10), 9) and ``y`` = 1
+    for a purchase."""
+    v = F.col("value").cast("decimal(18,2)")
+    return ev.select(
+        F.least(F.floor(v / 10).cast("bigint"), F.lit(9)).alias("bin"),
+        v.alias("v"),
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
+    )
+
+
 @register(
     "q_eval_calibration",
     oracle="""
@@ -4831,13 +4819,7 @@ def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and acc are single double divisions over exact decimal/integer
     # sums — no rounding needed. 100 TB: one partial-aggregated scan,
     # 10-row result.
-    ev = table(spark, sf_dir, "events")
-    v = F.col("value").cast("decimal(18,2)")
-    b = ev.select(
-        F.least(F.floor(v / 10).cast("bigint"), F.lit(9)).alias("bin"),
-        v.alias("v"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    )
+    b = _score_bins(table(spark, sf_dir, "events"))
     return b.groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bin"),
         # round-12: the engines' decimal→double conversion of the Σp̂
@@ -4945,6 +4927,29 @@ def q_stat_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _purchase_dominance(ev: DataFrame, neg) -> DataFrame:
+    """Purchases against the ``neg`` rows of ``ev`` over the value
+    support: ``(v, np, nn, cumn, n_pos, n_neg)`` with ``np``/``nn`` the
+    purchase/negative counts at value ``v``, ``cumn`` the running
+    negative count up to and including ``v`` (one distributed prefix
+    sum) and the two totals broadcast onto every row."""
+    from trembita_spark.operators.ranking import prefix_sum
+
+    pv = ev.groupBy(F.col("value").alias("v")).agg(
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+        .cast("bigint")
+        .alias("np"),
+        F.sum(F.when(neg, 1).otherwise(0)).cast("bigint").alias("nn"),
+    )
+    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
+    c = prefix_sum(pv, "nn", order_by=[F.col("v")], name="cumn")
+    t = pv.agg(
+        F.sum("np").cast("bigint").alias("n_pos"),
+        F.sum("nn").cast("bigint").alias("n_neg"),
+    )
+    return c.crossJoin(F.broadcast(t))
+
+
 @register(
     "q_ml_auc",
     oracle="""
@@ -4981,24 +4986,8 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ranking-quality eval the confusion/calibration keys can't
     # express (threshold-free). 100 TB: one hash agg + one prefix sum
     # over the value support — same cost envelope as KS/CvM.
-    from trembita_spark.operators.ranking import prefix_sum
-
     ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    pv = ev.groupBy(F.col("value").alias("v")).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("np"),
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("nn"),
-    )
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(pv, "nn", order_by=[F.col("v")], name="cumn")
-    t = pv.agg(
-        F.sum("np").cast("bigint").alias("n_pos"),
-        F.sum("nn").cast("bigint").alias("n_neg"),
-    )
-    j = c.crossJoin(F.broadcast(t))
+    j = _purchase_dominance(ev, F.col("event_type") != "purchase")
     return (
         j.groupBy("n_pos", "n_neg")
         .agg(
@@ -5012,6 +5001,59 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(s AS DOUBLE) / (2.0e0 * n_pos * n_neg) AS auc",
         )
     )
+
+
+def _hour_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly value totals ``(h, x)``: ``h`` the 1-hour window start,
+    ``x`` the exact DECIMAL(18,2) sum of ``events.value``."""
+    ev = table(spark, sf_dir, "events")
+    return ev.groupBy(F.window("ts", "1 hour").getField("start").alias("h")).agg(
+        F.sum(F.col("value").cast("decimal(18,2)")).alias("x")
+    )
+
+
+def _mk_sums(b: DataFrame, *keys: str) -> tuple[DataFrame, DataFrame]:
+    """Mann-Kendall's two sums over the buckets ``b`` (``h``, ``x`` and
+    ``keys``), as 1-row frames: ``mk_s``, the sign sum over every
+    bucket pair ``h_a < h_c`` with equal ``keys``, and ``tie_adj``,
+    Σ t(t−1)(2t+5) over the groups of equal (``keys``, ``x``)."""
+    a, c2 = (
+        b.select(
+            *[F.col(k).alias(k + t) for k in keys],
+            F.col("h").alias("h" + t),
+            F.col("x").alias("x" + t),
+        )
+        for t in ("a", "c")
+    )
+    on = F.col("ha") < F.col("hc")
+    for k in reversed(keys):
+        on = (F.col(k + "a") == F.col(k + "c")) & on
+    s = (
+        a.join(F.broadcast(c2), on)
+        .agg(
+            F.sum(
+                F.when(F.col("xa") < F.col("xc"), 1)
+                .when(F.col("xa") > F.col("xc"), -1)
+                .otherwise(0)
+            )
+            .cast("bigint")
+            .alias("mk_s")
+        )
+    )
+    ties = (
+        b.groupBy(*keys, "x")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+        .where(F.col("t") > 1)
+        .agg(
+            F.coalesce(
+                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
+                F.lit(0),
+            )
+            .cast("bigint")
+            .alias("tie_adj")
+        )
+    )
+    return s, ties
 
 
 @register(
@@ -5050,39 +5092,10 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grows it quadratically, which is when you coarsen the bucket (the
     # m4-downsample rationale). Kendall-tau's trend-test sibling, the
     # monitoring question "is this metric drifting".
-    ev = table(spark, sf_dir, "events")
-    b = ev.groupBy(F.window("ts", "1 hour").getField("start").alias("h")).agg(
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("x")
-    )
+    b = _hour_totals(spark, sf_dir)
     b = b.localCheckpoint(eager=False)  # feeds pairs + counts + ties
-    a = b.select(F.col("h").alias("ha"), F.col("x").alias("xa"))
-    c2 = b.select(F.col("h").alias("hc"), F.col("x").alias("xc"))
-    s = (
-        a.join(F.broadcast(c2), F.col("ha") < F.col("hc"))
-        .agg(
-            F.sum(
-                F.when(F.col("xa") < F.col("xc"), 1)
-                .when(F.col("xa") > F.col("xc"), -1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("mk_s")
-        )
-    )
+    s, ties = _mk_sums(b)
     n = b.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    ties = (
-        b.groupBy("x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-        .where(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("tie_adj")
-        )
-    )
     return (
         s.crossJoin(F.broadcast(n))
         .crossJoin(F.broadcast(ties))
@@ -5201,18 +5214,9 @@ def q_ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One scan, |k| output rows; the label never influences the fold
     # (no leakage by construction).
     ev = table(spark, sf_dir, "events")
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fold#"), F.col("event_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 5
-    )
+    fold = md5_int60(
+        F.md5(F.concat(F.lit("fold#"), F.col("event_id").cast("string")))
+    ) % 5
     f = ev.select(
         fold.alias("fold"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
@@ -5228,6 +5232,68 @@ _WILSON = (
     "(phat + z * z / (2 * n) {sign} z * sqrt((phat * (1.0e0 - phat)"
     " + z * z / (4 * n)) / n)) / (1.0e0 + z * z / n)"
 )
+
+
+def _high_value_cells(spark: SparkSession, sf_dir: str, *keys) -> DataFrame:
+    """Per cell of the ``keys`` columns over the non-null values: ``n``
+    and ``x``, how many of them are ``>= 50`` (q_stat_wilson_ci's
+    proportions, the bh_fdr and by_fdr families)."""
+    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    return ev.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(F.col("value") >= 50, 1).otherwise(0))
+        .cast("bigint")
+        .alias("x"),
+    )
+
+
+def _ranked_p_values(g: DataFrame, *keys: str) -> DataFrame:
+    """The step-up input over the cells ``g`` (``keys``, n, x): each
+    cell's one-sample proportion z against the pooled rate and its
+    two-sided p from the shared erf fragment (both rounded to 6), the
+    family size ``m``, and the rank ``rk`` in (p_value, ``keys``) order
+    — a unique total order over pre-rounded values, so a cutoff index
+    is bit-stable cross-engine."""
+    from pyspark.sql.window import Window
+
+    t = g.agg(
+        F.sum("n").cast("bigint").alias("tn"),
+        F.sum("x").cast("bigint").alias("tx"),
+        F.count(F.lit(1)).cast("bigint").alias("m"),
+    )
+    p0 = F.col("tx").cast("double") / F.col("tn")
+    z = g.crossJoin(F.broadcast(t)).select(
+        *keys,
+        "n",
+        "x",
+        "m",
+        (
+            (F.col("x").cast("double") / F.col("n") - p0)
+            / F.sqrt(p0 * (1 - p0) / F.col("n"))
+        ).alias("zval"),
+    )
+    xh_ = z.withColumn("xh", F.abs(F.col("zval")) / F.sqrt(F.lit(2.0)))
+    p = xh_.selectExpr(
+        *keys,
+        "n",
+        "x",
+        "m",
+        "round(zval, 6) AS z",
+        f"round({_P_TWO_SIDED}, 6) AS p_value",
+    )
+    w = Window.orderBy("p_value", *keys)
+    return p.withColumn("rk", F.row_number().over(w).cast("bigint"))
+
+
+def _step_up_cut(r: DataFrame, scaled_p) -> DataFrame:
+    """The step-up cutoff over the ranked family ``r``: 1-row ``k``, the
+    largest ``rk`` with ``scaled_p <= rk * 0.05`` (0 when none is)."""
+    return r.agg(
+        F.coalesce(
+            F.max(F.when(scaled_p <= F.col("rk") * 0.05, F.col("rk"))),
+            F.lit(0).cast("bigint"),
+        ).alias("k")
+    )
 
 
 @register(
@@ -5256,13 +5322,7 @@ def q_stat_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact formula text with the oracle (sqrt is 1-ulp → round-12,
     # the q_stat_psi discipline). One conditional-count scan, |groups|
     # output rows.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    g = ev.groupBy(F.col("event_type").alias("grp")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("value") >= 50, 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-    )
+    g = _high_value_cells(spark, sf_dir, F.col("event_type").alias("grp"))
     p = g.selectExpr("grp", "n", "x", "CAST(x AS DOUBLE) / n AS phat", "1.96e0 AS z")
     return p.selectExpr(
         "grp",
@@ -5908,6 +5968,19 @@ _TUKEY_Q = (
 )
 
 
+def _type_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact per-event-type moments of the non-null values: ``(grp, n,
+    s, q)`` with ``s`` = Σx and ``q`` = Σx² as decimals, from one
+    partial-aggregated scan."""
+    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    d = F.col("value").cast("decimal(18,2)")
+    return ev.groupBy(F.col("event_type").alias("grp")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(d).alias("s"),
+        F.sum(d * d).alias("q"),
+    )
+
+
 @register(
     "q_stat_tukey_hsd",
     oracle=f"""
@@ -5946,13 +6019,7 @@ def q_stat_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |event_type|^2 rows, config-bounded at any data scale (BNLJ
     # allowlisted with that bound). 100 TB: one partial-aggregated
     # scan, k(k-1)/2-row result.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    d = F.col("value").cast("decimal(18,2)")
-    g = ev.groupBy(F.col("event_type").alias("grp")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(d).alias("s"),
-        F.sum(d * d).alias("q"),
-    )
+    g = _type_moments(spark, sf_dir)
     g = g.localCheckpoint(eager=False)  # feeds pooled MSE + both pair sides
     p = g.agg(
         F.sum("n").cast("bigint").alias("nn"),
@@ -6088,6 +6155,19 @@ _PERM_U_SQL = (
 )
 
 
+def _purchase_click_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchase and click rows with a value: ``(event_id, v, is_a)``,
+    ``v`` the exact value in cents and ``is_a`` = 1 for a purchase."""
+    ev = table(spark, sf_dir, "events").where(
+        F.col("value").isNotNull() & F.col("event_type").isin("purchase", "click")
+    )
+    return ev.select(
+        "event_id",
+        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("is_a"),
+    )
+
+
 @register(
     "q_stat_permutation_test",
     oracle=f"""
@@ -6137,20 +6217,9 @@ def q_stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NO rounding anywhere. 100 TB: the replica dimension is map-side
     # (explode ×B then a 64-group partial agg) — same single-scan shape
     # as the bootstrap.
-    ev = (
-        table(spark, sf_dir, "events")
-        .where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin("purchase", "click")
-        )
-    )
-    x = ev.select(
-        "event_id",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("grp"),
-    )
+    x = _purchase_click_cents(spark, sf_dir)
     x = x.localCheckpoint(eager=False)  # feeds observed diff + replicas
-    g = F.col("grp")
+    g = F.col("is_a")
     obs = x.agg(
         (
             F.sum(F.col("v") * g).cast("double") / (100 * F.sum(g))
@@ -6164,24 +6233,7 @@ def q_stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "v",
         "b",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("event_id").cast("string"),
-                            F.lit(":"),
-                            F.col("b").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("pg"),
+        (_replica_draw() % 2).alias("pg"),
     )
     pg = F.col("pg")
     per = reps.groupBy("b").agg(
@@ -6693,17 +6745,7 @@ def q_stat_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cent value), then a running-sum window partitioned by the arm key
     # is_a over that value support; the decile dimension is a 9-row
     # broadcast.
-    ev = (
-        table(spark, sf_dir, "events")
-        .where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin("purchase", "click")
-        )
-    )
-    x = ev.select(
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("is_a"),
-    )
+    x = _purchase_click_cents(spark, sf_dir)
     pv = x.groupBy("is_a", "v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     pv = pv.localCheckpoint(eager=False)  # feeds the running sum + totals
     # Running count per arm: a window partitioned by the 2-valued is_a,
@@ -6945,6 +6987,19 @@ def q_ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _positive_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-event-type cent contingency ``(grp, v, c)`` of the
+    positive values, the support the geometric and harmonic means fold
+    over."""
+    ev = table(spark, sf_dir, "events").where(
+        F.col("value").isNotNull() & (F.col("value") > 0)
+    )
+    return ev.groupBy(
+        F.col("event_type").alias("grp"),
+        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+
+
 @register(
     "q_agg_geometric_mean",
     oracle="""
@@ -6974,14 +7029,7 @@ def q_agg_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its ~49k-level ceiling outgrows round-12 → round-6 on the ln
     # rollup, round-9 on the exp (the q_ts_hurst grids). 100 TB: one
     # partial-aggregated scan to the contingency, |groups| rows out.
-    ev = table(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & (F.col("value") > 0)
-    )
-    pv = ev.groupBy(
-        F.col("event_type").alias("grp"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    t = pv.groupBy("grp").agg(
+    t = _positive_cents(spark, sf_dir).groupBy("grp").agg(
         F.sum("c").cast("bigint").alias("n"),
         F.round(
             F.sum(F.col("c") * F.log(F.col("v").cast("double") / 100)), 6
@@ -7096,13 +7144,7 @@ def q_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-12 (entropy shape, no libm). 100 TB: one partial-aggregated
     # scan to the 10-bin frame, 1-row result.
     ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    v = F.col("value").cast("decimal(18,2)")
-    b = ev.select(
-        F.least(F.floor(v / 10).cast("bigint"), F.lit(9)).alias("bin"),
-        v.alias("v"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    )
-    g = b.groupBy("bin").agg(
+    g = _score_bins(ev).groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bin"),
         F.sum(F.least(F.col("v"), F.lit(100).cast("decimal(18,2)"))).alias("sconf"),
         F.sum("y").cast("bigint").alias("n_pos"),
@@ -7197,56 +7239,11 @@ def q_stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-segment metrics sweep needs before declaring winners.
     # 100 TB: one conditional-count scan; everything after lives on
     # the |groups| frame.
-    from pyspark.sql.window import Window
-
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    g = ev.groupBy(F.col("event_type").alias("grp")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("value") >= 50, 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
-    )
+    g = _high_value_cells(spark, sf_dir, F.col("event_type").alias("grp"))
     g = g.localCheckpoint(eager=False)  # feeds totals + per-group rows
-    t = g.agg(
-        F.sum("n").cast("bigint").alias("tn"),
-        F.sum("x").cast("bigint").alias("tx"),
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-    )
-    p0 = F.col("tx").cast("double") / F.col("tn")
-    z = g.crossJoin(F.broadcast(t)).select(
-        "grp",
-        "n",
-        "x",
-        "m",
-        (
-            (F.col("x").cast("double") / F.col("n") - p0)
-            / F.sqrt(p0 * (1 - p0) / F.col("n"))
-        ).alias("zval"),
-    )
-    xh_ = z.withColumn("xh", F.abs(F.col("zval")) / F.sqrt(F.lit(2.0)))
-    p = xh_.selectExpr(
-        "grp",
-        "n",
-        "x",
-        "m",
-        "round(zval, 6) AS z",
-        f"round({_P_TWO_SIDED}, 6) AS p_value",
-    )
-    r = p.withColumn(
-        "rk",
-        F.row_number()
-        .over(Window.orderBy("p_value", "grp"))
-        .cast("bigint"),
-    )
+    r = _ranked_p_values(g, "grp")
     r = r.localCheckpoint(eager=False)  # feeds the cutoff + output rows
-    cut = r.agg(
-        F.coalesce(
-            F.max(
-                F.when(F.col("p_value") * F.col("m") <= F.col("rk") * 0.05, F.col("rk"))
-            ),
-            F.lit(0).cast("bigint"),
-        ).alias("k")
-    )
+    cut = _step_up_cut(r, F.col("p_value") * F.col("m"))
     return r.crossJoin(F.broadcast(cut)).select(
         "grp",
         "n",
@@ -7257,6 +7254,29 @@ def q_stat_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rk") * 0.05 / F.col("m")).alias("bh_critical"),
         (F.col("rk") <= F.col("k")).alias("rejected"),
     )
+
+
+def _fitted_normal_z(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cents histogram against the Normal(mu-hat, sd-hat) fitted to
+    it from exact moments: ``(v, cnt, cum, n, zv, xh)`` per support row,
+    ``zv`` the standardized value and ``xh`` = |zv|/sqrt 2, the input of
+    the shared erf fragment ``_P_TWO_SIDED``."""
+    pv, c = _cents_histogram(spark, sf_dir)
+    m = pv.agg(
+        F.sum("cnt").cast("bigint").alias("n"),
+        F.sum(F.col("v") * F.col("cnt")).cast("bigint").alias("s"),
+        F.sum(F.col("v") * F.col("v") * F.col("cnt")).cast("bigint").alias("q"),
+    )
+    mu = F.col("s").cast("double") / F.col("n")
+    st = m.select(
+        "n",
+        mu.alias("mu"),
+        F.sqrt(F.col("q").cast("double") / F.col("n") - mu * mu).alias("sd"),
+    )
+    zc = c.crossJoin(F.broadcast(st)).select(
+        "v", "cnt", "cum", "n", ((F.col("v") - F.col("mu")) / F.col("sd")).alias("zv")
+    )
+    return zc.withColumn("xh", F.abs(F.col("zv")) / F.sqrt(F.lit(2.0)))
 
 
 @register(
@@ -7318,22 +7338,7 @@ def q_stat_ks_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 1.5e-7 approximation floor -> round-6 on D. 100 TB: one
     # partial agg + one support-sized prefix sum; the erf column work
     # is support-bounded, never per-row.
-    pv, c = _cents_histogram(spark, sf_dir)
-    m = pv.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum(F.col("v") * F.col("cnt")).cast("bigint").alias("s"),
-        F.sum(F.col("v") * F.col("v") * F.col("cnt")).cast("bigint").alias("q"),
-    )
-    mu = F.col("s").cast("double") / F.col("n")
-    st = m.select(
-        "n",
-        mu.alias("mu"),
-        F.sqrt(F.col("q").cast("double") / F.col("n") - mu * mu).alias("sd"),
-    )
-    zc = c.crossJoin(F.broadcast(st)).select(
-        "v", "cnt", "cum", "n", ((F.col("v") - F.col("mu")) / F.col("sd")).alias("zv")
-    )
-    ph = zc.withColumn("xh", F.abs(F.col("zv")) / F.sqrt(F.lit(2.0)))
+    ph = _fitted_normal_z(spark, sf_dir)
     phi = ph.selectExpr(
         "v",
         "cnt",
@@ -7434,22 +7439,7 @@ def q_stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ln/exp skew ~n*1e-16*|ln| stays below half-grid through 8x.
     # 100 TB: one partial agg + one support-sized prefix sum; all
     # per-support column work, exact-decimal reduce.
-    pv, c = _cents_histogram(spark, sf_dir)
-    m = pv.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum(F.col("v") * F.col("cnt")).cast("bigint").alias("s"),
-        F.sum(F.col("v") * F.col("v") * F.col("cnt")).cast("bigint").alias("q"),
-    )
-    mu = F.col("s").cast("double") / F.col("n")
-    st = m.select(
-        "n",
-        mu.alias("mu"),
-        F.sqrt(F.col("q").cast("double") / F.col("n") - mu * mu).alias("sd"),
-    )
-    zc = c.crossJoin(F.broadcast(st)).select(
-        "cnt", "cum", "n", ((F.col("v") - F.col("mu")) / F.col("sd")).alias("zv")
-    )
-    ph = zc.withColumn("xh", F.abs(F.col("zv")) / F.sqrt(F.lit(2.0)))
+    ph = _fitted_normal_z(spark, sf_dir)
     pp = ph.selectExpr("cnt", "cum", "n", "zv", f"({_P_TWO_SIDED}) AS p2")
     lg = pp.selectExpr(
         "cnt",
@@ -7748,13 +7738,7 @@ def q_stat_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold routes through round-9 before reuse (~1e2-1e4 magnitudes,
     # the q_ts_hurst grid), and the final statistics share formula
     # text. 100 TB: one partial-aggregated scan, 1-row result.
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    d = F.col("value").cast("decimal(18,2)")
-    g = ev.groupBy(F.col("event_type").alias("grp")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(d).alias("s"),
-        F.sum(d * d).alias("q"),
-    )
+    g = _type_moments(spark, sf_dir)
     w = g.select(
         "grp",
         "n",
@@ -7882,14 +7866,7 @@ def q_agg_harmonic_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the support-bounded frame -> round-9 before the final division,
     # round-9 after). 100 TB: one partial-aggregated scan to the
     # contingency, |groups| rows out.
-    ev = table(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & (F.col("value") > 0)
-    )
-    pv = ev.groupBy(
-        F.col("event_type").alias("grp"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    t = pv.groupBy("grp").agg(
+    t = _positive_cents(spark, sf_dir).groupBy("grp").agg(
         F.sum("c").cast("bigint").alias("n"),
         F.round(F.sum(F.col("c").cast("double") * 100 / F.col("v")), 9).alias("sinv"),
     )
@@ -10190,16 +10167,7 @@ def q_stat_risk_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-12 on the CI, round-6 on the NNT reciprocal (its ~1e2
     # magnitude needs the coarser absolute grid); p-ratios identical
     # trees. At 100 TB: one conditional-count scan to a scalar row.
-    ev = table(spark, sf_dir, "events")
-    exp_ = F.hour("ts") >= 12
-    out_ = F.col("event_type") == "purchase"
-    cell = lambda p, t: F.sum(F.when(p & t, 1).otherwise(0)).cast("bigint")  # noqa: E731
-    t = ev.agg(
-        cell(exp_, out_).alias("a"),
-        cell(exp_, ~out_).alias("b"),
-        cell(~exp_, out_).alias("c"),
-        cell(~exp_, ~out_).alias("d"),
-    )
+    t = _afternoon_purchase_2x2(spark, sf_dir)
     a, b, c, d = F.col("a"), F.col("b"), F.col("c"), F.col("d")
     p1 = a.cast("double") / (a + b)
     p0 = c.cast("double") / (c + d)
@@ -10318,6 +10286,19 @@ WITH t AS (
 """
 
 
+def _user_parity_fisher(spark: SparkSession, sf_dir: str, midp: bool) -> DataFrame:
+    """``stats.fisher_exact_2x2`` of even vs odd ``user_id`` (independent
+    of the outcome by construction) by purchase."""
+    from trembita_spark.operators.stats import fisher_exact_2x2
+
+    return fisher_exact_2x2(
+        table(spark, sf_dir, "events"),
+        exposure=F.col("user_id") % 2 == 0,
+        outcome=F.col("event_type") == "purchase",
+        midp=midp,
+    )
+
+
 @register(
     "q_stat_fisher_exact",
     oracle=f"""
@@ -10354,14 +10335,7 @@ def q_stat_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fisher_exact_2x2, numpy/lgamma-validated in tests. At 100 TB:
     # O(n) prefix sum + O(|k-range|) explode-join — the "small-sample"
     # exact test at any scale.
-    from trembita_spark.operators.stats import fisher_exact_2x2
-
-    ev = table(spark, sf_dir, "events")
-    return fisher_exact_2x2(
-        ev,
-        exposure=F.col("user_id") % 2 == 0,
-        outcome=F.col("event_type") == "purchase",
-    )
+    return _user_parity_fisher(spark, sf_dir, midp=False)
 
 
 @register(
@@ -10394,15 +10368,7 @@ def q_stat_fisher_midp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressions (tail − 0.5·P(a), doubling rule capped at 1) replayed
     # verbatim by the oracle. Same 100 TB posture: O(n) prefix sum +
     # O(|k-range|) explode-join.
-    from trembita_spark.operators.stats import fisher_exact_2x2
-
-    ev = table(spark, sf_dir, "events")
-    return fisher_exact_2x2(
-        ev,
-        exposure=F.col("user_id") % 2 == 0,
-        outcome=F.col("event_type") == "purchase",
-        midp=True,
-    )
+    return _user_parity_fisher(spark, sf_dir, midp=True)
 
 
 @register(
@@ -10629,6 +10595,56 @@ _PROBIT_STAGE = (
 )
 
 
+def _group_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-arm cent contingency ``(g, v, cnt)``: ``g`` the event
+    type, ``v`` the exact value in cents, over rows with both set;
+    checkpointed lazily (it feeds the pooled support and the per-group
+    sums)."""
+    ev = table(spark, sf_dir, "events").where(
+        F.col("value").isNotNull() & F.col("event_type").isNotNull()
+    )
+    x = ev.select(
+        F.col("event_type").alias("g"),
+        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
+    )
+    gv = x.groupBy("g", "v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    return gv.localCheckpoint(eager=False)
+
+
+def _probit_group_sums(
+    gk: DataFrame, key: str, pq: str
+) -> tuple[DataFrame, DataFrame]:
+    """Normal scores over the pooled ``key`` support of the per-group
+    counts ``gk`` (g, ``key``, cnt). One distributed prefix sum gives
+    each support row its running count ``cum`` and the total ``n``;
+    ``pq`` (SQL over cum, cnt, n) is the score's probability, and the
+    shared Acklam fragment turns it into the score ``a``. Returns the
+    per-group ``(g, n_g, sa)`` with ``sa`` the exact DECIMAL(38,12) sum
+    of quantized scores (the anderson_darling lane), and the support
+    scores ``(key, cnt, n, a)``, checkpointed lazily."""
+    from trembita_spark.operators.ranking import prefix_sum
+
+    pooled = gk.groupBy(key).agg(F.sum("cnt").cast("bigint").alias("cnt"))
+    pooled = pooled.localCheckpoint(eager=False)  # feeds prefix sum + total
+    c = prefix_sum(pooled, "cnt", order_by=[F.col(key)], name="cum")
+    t = pooled.agg(F.sum("cnt").cast("bigint").alias("n"))
+    pr = c.crossJoin(F.broadcast(t)).selectExpr(key, "cnt", "n", f"{pq} AS pq")
+    stg = pr.selectExpr(key, "cnt", "n", "pq", *_PROBIT_STAGE)
+    sc = stg.selectExpr(key, "cnt", "n", f"({_PROBIT}) AS a")
+    sc = sc.localCheckpoint(eager=False)  # feeds per-group join + totals
+    ga = (
+        gk.join(sc.select(key, "a"), key)
+        .groupBy("g")
+        .agg(
+            F.sum("cnt").cast("bigint").alias("n_g"),
+            F.sum(
+                F.expr("CAST(CAST(cnt AS DOUBLE) * a AS DECIMAL(38,12))")
+            ).alias("sa"),
+        )
+    )
+    return ga, sc
+
+
 @register(
     "q_stat_fligner_killeen",
     oracle=f"""
@@ -10721,17 +10737,7 @@ def q_stat_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate-sized per-group support (the qq_deciles exemption).
     from pyspark.sql.window import Window
 
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    )
-    x = ev.select(
-        F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-    )
-    gv = x.groupBy("g", "v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    gv = gv.localCheckpoint(eager=False)  # feeds median + deviations
+    gv = _group_cents(spark, sf_dir)  # feeds median + deviations
     w = (
         Window.partitionBy("g")
         .orderBy("v")
@@ -10759,29 +10765,10 @@ def q_stat_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
     dg = dg.localCheckpoint(eager=False)  # feeds pooled support + per-group sums
-    pd_ = dg.groupBy("d").agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    pd_ = pd_.localCheckpoint(eager=False)  # feeds prefix sum + total
-    c = prefix_sum(pd_, "cnt", order_by=[F.col("d")], name="cum")
-    t = pd_.agg(F.sum("cnt").cast("bigint").alias("n"))
-    pr = c.crossJoin(F.broadcast(t)).selectExpr(
+    ga, sc = _probit_group_sums(
+        dg,
         "d",
-        "cnt",
-        "n",
-        "(2.0e0 * (n + 1) + (2 * (cum - cnt) + cnt + 1))"
-        " / (4.0e0 * (n + 1)) AS pq",
-    )
-    stg = pr.selectExpr("d", "cnt", "n", "pq", *_PROBIT_STAGE)
-    sc = stg.selectExpr("d", "cnt", "n", f"({_PROBIT}) AS a")
-    sc = sc.localCheckpoint(eager=False)  # feeds per-group join + totals
-    ga = (
-        dg.join(sc.select("d", "a"), "d")
-        .groupBy("g")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n_g"),
-            F.sum(
-                F.expr("CAST(CAST(cnt AS DOUBLE) * a AS DECIMAL(38,12))")
-            ).alias("sa"),
-        )
+        "(2.0e0 * (n + 1) + (2 * (cum - cnt) + cnt + 1)) / (4.0e0 * (n + 1))",
     )
     tot = sc.agg(
         F.max("n").alias("n"),
@@ -10874,40 +10861,9 @@ def q_stat_van_der_waerden(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeping rank robustness — the practical middle ground between
     # q_stat_anova and q_stat_kruskal. 100 TB: one contingency
     # aggregate + one support prefix sum; k-row frames after.
-    from trembita_spark.operators.ranking import prefix_sum
-
-    ev = table(spark, sf_dir, "events").where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    )
-    x = ev.select(
-        F.col("event_type").alias("g"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
-    )
-    gv = x.groupBy("g", "v").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    gv = gv.localCheckpoint(eager=False)  # feeds pooled support + group sums
-    pv = gv.groupBy("v").agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + total
-    c = prefix_sum(pv, "cnt", order_by=[F.col("v")], name="cum")
-    t = pv.agg(F.sum("cnt").cast("bigint").alias("n"))
-    pr = c.crossJoin(F.broadcast(t)).selectExpr(
-        "v",
-        "cnt",
-        "n",
-        "(2 * (cum - cnt) + cnt + 1)"
-        " / (2.0e0 * (n + 1)) AS pq",
-    )
-    stg = pr.selectExpr("v", "cnt", "n", "pq", *_PROBIT_STAGE)
-    sc = stg.selectExpr("v", "cnt", "n", f"({_PROBIT}) AS a")
-    sc = sc.localCheckpoint(eager=False)  # feeds per-group join + totals
-    ga = (
-        gv.join(sc.select("v", "a"), "v")
-        .groupBy("g")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n_g"),
-            F.sum(
-                F.expr("CAST(CAST(cnt AS DOUBLE) * a AS DECIMAL(38,12))")
-            ).alias("sa"),
-        )
+    gv = _group_cents(spark, sf_dir)  # feeds pooled support + group sums
+    ga, sc = _probit_group_sums(
+        gv, "v", "(2 * (cum - cnt) + cnt + 1) / (2.0e0 * (n + 1))"
     )
     tot = sc.agg(
         F.max("n").alias("n"),
@@ -10927,6 +10883,19 @@ def q_stat_van_der_waerden(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("vdw_stat"),
         )
         .selectExpr("n AS n_tot", "k", "vdw_stat")
+    )
+
+
+def _pair_products(pairs: DataFrame, *extra) -> DataFrame:
+    """One row over the directed rook neighbour pairs ``(yi, yj)``:
+    ``s0`` (the pair count, binary weights), ``pa`` = Σ yi·yj in exact
+    DECIMAL(38,0), then the ``extra`` aggregates."""
+    return pairs.agg(
+        F.count(F.lit(1)).cast("bigint").alias("s0"),
+        F.sum(F.col("yi").cast("decimal(38,0)") * F.col("yj"))
+        .cast("decimal(38,0)")
+        .alias("pa"),
+        *extra,
     )
 
 
@@ -10990,11 +10959,8 @@ def q_geo_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell frame (16 x 36 cells max); everything after is
     # lattice-sized, the offs cross join is a 4-row broadcast.
     pairs, ct = _rook_lattice(spark, sf_dir)
-    ag = pairs.agg(
-        F.count(F.lit(1)).cast("bigint").alias("s0"),
-        F.sum(F.col("yi").cast("decimal(38,0)") * F.col("yj"))
-        .cast("decimal(38,0)")
-        .alias("pa"),
+    ag = _pair_products(
+        pairs,
         F.sum(F.col("yi").cast("decimal(38,0)") + F.col("yj"))
         .cast("decimal(38,0)")
         .alias("pb"),
@@ -11133,12 +11099,7 @@ def q_geo_getis_g(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double divisions, bit-exact, no rounding. Same lattice-bounded
     # cost shape as q_geo_moran_i.
     pairs, ct = _rook_lattice(spark, sf_dir)
-    ag = pairs.agg(
-        F.count(F.lit(1)).cast("bigint").alias("s0"),
-        F.sum(F.col("yi").cast("decimal(38,0)") * F.col("yj"))
-        .cast("decimal(38,0)")
-        .alias("pa"),
-    )
+    ag = _pair_products(pairs)
     return ct.crossJoin(F.broadcast(ag)).selectExpr(
         "n AS n_cells",
         "s0",
@@ -11498,6 +11459,22 @@ _CMS_W = 64
 _CMS_ROWS = ((1000003, 12345), (999983, 54321), (999979, 98765), (1000033, 24680))
 
 
+def _user_counts_and_hashes(
+    spark: SparkSession, sf_dir: str, rows: tuple
+) -> tuple[DataFrame, DataFrame]:
+    """The per-user event counts ``(u, cnt)``, checkpointed lazily (a
+    sketch and its exact reference both read them), and the sketch's
+    fixed multiplicative hash rows ``(i, a, b)`` from ``rows``."""
+    uc = (
+        table(spark, sf_dir, "events")
+        .groupBy(F.col("user_id").alias("u"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    )
+    uc = uc.localCheckpoint(eager=False)
+    rows_sql = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(rows))
+    return uc, spark.sql(f"SELECT * FROM (VALUES {rows_sql}) AS t(i, a, b)")
+
+
 @register(
     "q_sketch_countmin",
     oracle=f"""
@@ -11553,14 +11530,7 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size), estimates a 5x4 broadcast join. 100 TB: one user
     # aggregate; the sketch itself is O(d*w) — THE mergeable-summary
     # pattern for distributed heavy-hitter monitoring.
-    uc = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.col("user_id").alias("u"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    uc = uc.localCheckpoint(eager=False)  # feeds counters + top5
-    rows_sql = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(_CMS_ROWS))
-    rfr = spark.sql(f"SELECT * FROM (VALUES {rows_sql}) AS t(i, a, b)")
+    uc, rfr = _user_counts_and_hashes(spark, sf_dir, _CMS_ROWS)
     hh = uc.crossJoin(F.broadcast(rfr)).selectExpr(
         "i",
         "u",
@@ -11660,14 +11630,7 @@ def q_sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final casts and one division -> bit-exact, no rounding. 100 TB:
     # one per-user aggregate, a 5x fan-out of the user frame into five
     # signed sums (each a partial-aggregated scalar), O(1) after.
-    uc = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.col("user_id").alias("u"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    uc = uc.localCheckpoint(eager=False)  # feeds sign sums + exact F2
-    rows_sql = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(_AMS_ROWS))
-    rfr = spark.sql(f"SELECT * FROM (VALUES {rows_sql}) AS t(i, a, b)")
+    uc, rfr = _user_counts_and_hashes(spark, sf_dir, _AMS_ROWS)
     sg = uc.crossJoin(F.broadcast(rfr)).selectExpr(
         "i",
         "cnt",
@@ -11774,61 +11737,19 @@ def q_stat_by_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # family frame.
     from pyspark.sql.window import Window
 
-    ev = table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    g = ev.groupBy(
+    g = _high_value_cells(
+        spark,
+        sf_dir,
         F.col("event_type").alias("grp"),
         F.expr("(unix_micros(ts) div 86400000000 + 4) % 7").alias("dow"),
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("value") >= 50, 1).otherwise(0))
-        .cast("bigint")
-        .alias("x"),
     )
     g = g.localCheckpoint(eager=False)  # feeds totals + per-cell rows
-    t = g.agg(
-        F.sum("n").cast("bigint").alias("tn"),
-        F.sum("x").cast("bigint").alias("tx"),
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-    )
-    z = g.crossJoin(F.broadcast(t)).selectExpr(
-        "grp",
-        "dow",
-        "n",
-        "x",
-        "m",
-        "(CAST(x AS DOUBLE) / n - CAST(tx AS DOUBLE) / tn)"
-        " / sqrt((CAST(tx AS DOUBLE) / tn) * (1 - CAST(tx AS DOUBLE) / tn) / n)"
-        " AS zval",
-    )
-    xh_ = z.withColumn("xh", F.abs(F.col("zval")) / F.sqrt(F.lit(2.0)))
-    p = xh_.selectExpr(
-        "grp",
-        "dow",
-        "n",
-        "x",
-        "m",
-        "round(zval, 6) AS z",
-        f"round({_P_TWO_SIDED}, 6) AS p_value",
-    )
-    w = Window.orderBy("p_value", "grp", "dow")
-    r = p.withColumn("rk", F.row_number().over(w).cast("bigint"))
+    r = _ranked_p_values(g, "grp", "dow")
     wc = Window.orderBy("rk").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     h = r.withColumn("hcum", F.sum(F.lit(1.0) / F.col("rk")).over(wc))
     hm = h.agg(F.max("hcum").alias("harm"))
-    cut = (
-        h.crossJoin(F.broadcast(hm))
-        .agg(
-            F.coalesce(
-                F.max(
-                    F.when(
-                        F.col("p_value") * F.col("m") * F.col("harm")
-                        <= F.col("rk") * 0.05,
-                        F.col("rk"),
-                    )
-                ),
-                F.lit(0).cast("bigint"),
-            ).alias("k")
-        )
+    cut = _step_up_cut(
+        h.crossJoin(F.broadcast(hm)), F.col("p_value") * F.col("m") * F.col("harm")
     )
     return (
         h.crossJoin(F.broadcast(hm))
@@ -11901,38 +11822,13 @@ def q_ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the time span; the pair join is season-partitioned
     # span-quadratic — coarsen the bucket when the span grows (the
     # m4-downsample rationale).
-    ev = table(spark, sf_dir, "events")
-    b = (
-        ev.groupBy(F.window("ts", "1 hour").getField("start").alias("h"))
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("x"))
-        .selectExpr(
-            "h",
-            "(unix_micros(h) div 3600000000) % 24 AS season",
-            "x",
-        )
+    b = _hour_totals(spark, sf_dir).selectExpr(
+        "h",
+        "(unix_micros(h) div 3600000000) % 24 AS season",
+        "x",
     )
     b = b.localCheckpoint(eager=False)  # feeds pairs + counts + ties
-    a = b.select(
-        F.col("season").alias("sa"), F.col("h").alias("ha"), F.col("x").alias("xa")
-    )
-    c2 = b.select(
-        F.col("season").alias("sc"), F.col("h").alias("hc"), F.col("x").alias("xc")
-    )
-    s = (
-        a.join(
-            F.broadcast(c2),
-            (F.col("sa") == F.col("sc")) & (F.col("ha") < F.col("hc")),
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("xa") < F.col("xc"), 1)
-                .when(F.col("xa") > F.col("xc"), -1)
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("mk_s")
-        )
-    )
+    s, ties = _mk_sums(b, "season")
     ns = b.groupBy("season").agg(F.count(F.lit(1)).cast("bigint").alias("n_k"))
     vb = ns.agg(
         F.sum(F.col("n_k") * (F.col("n_k") - 1) * (2 * F.col("n_k") + 5))
@@ -11940,19 +11836,6 @@ def q_ts_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("base"),
         F.count(F.lit(1)).cast("bigint").alias("n_seasons"),
         F.sum("n_k").cast("bigint").alias("n_total"),
-    )
-    ties = (
-        b.groupBy("season", "x")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-        .where(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("tie_adj")
-        )
     )
     return (
         s.crossJoin(F.broadcast(vb))
@@ -12016,28 +11899,12 @@ def q_stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulated in DECIMAL(38,0) (products cross BIGINT at replica
     # scale), with ONE double division -> bit-exact, no rounding.
     # 100 TB: one contingency agg + one support prefix sum.
-    from trembita_spark.operators.ranking import prefix_sum
-
     ev = table(spark, sf_dir, "events")
     x = ev.where(
         F.col("value").isNotNull() & F.col("event_type").isin("purchase", "click")
     )
-    pv = x.groupBy(F.col("value").alias("v")).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("np"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("nn"),
-    )
-    pv = pv.localCheckpoint(eager=False)  # feeds prefix sum + totals
-    c = prefix_sum(pv, "nn", order_by=[F.col("v")], name="cumn")
-    t = pv.agg(
-        F.sum("np").cast("bigint").alias("n_pos"),
-        F.sum("nn").cast("bigint").alias("n_neg"),
-    )
     s = (
-        c.crossJoin(F.broadcast(t))
+        _purchase_dominance(x, F.col("event_type") == "click")
         .groupBy("n_pos", "n_neg")
         .agg(
             F.sum(

@@ -282,7 +282,7 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from trembita_spark.contract import HEX60_SQL as _H60
+from trembita_spark.checksum import HEX60_SQL as _H60
 
 
 def _bf_pos(key_sql: str, h_sql: str, n_bits: int) -> str:

@@ -6,10 +6,11 @@ tf-idf, language-ID, quality, token counting, fingerprints), multimodal
 binary columns, and file sinks.
 
 Oracle notes: every hash is md5 (identical across engines); 60-bit
-integers come from the first 15 hex chars — Spark ``conv(…,16,10)``,
-DuckDB a character fold (no ``conv`` there); all float similarity math
-is sequential double folds (``F.aggregate`` ↔ ``list_reduce``), which
-both engines evaluate left-to-right → bit-identical.
+integers come from the first 15 hex chars — ``checksum.md5_int60`` in
+Spark, ``checksum.HEX60_SQL`` in DuckDB (no ``conv`` there); all float
+similarity math is sequential double folds (``F.aggregate`` ↔
+``list_reduce``), which both engines evaluate left-to-right →
+bit-identical.
 """
 
 from __future__ import annotations
@@ -32,8 +33,8 @@ from trembita_spark.operators import sampling as SMP
 from trembita_spark.operators import text as TX
 from trembita_spark.io import spread_scan
 
-# DuckDB fragment: 60-bit int from md5 (shared; contract/__init__.py).
-from trembita_spark.contract import HEX60_SQL as _HEX60
+# The 60-bit md5 fold on both engines (checksum.py).
+from trembita_spark.checksum import HEX60_SQL as _HEX60, md5_int60
 
 # DuckDB fragment: word k-shingles (1-based list indexing).
 def _sh_sql(k: int) -> str:
@@ -1306,6 +1307,35 @@ def q_text_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bigrams(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """The corpus's bigram positions ``(*keep, w1, w2)``. Each document
+    is split once into a materialized array that ``TX.bigram_structs``
+    zips two slices of (an inline-split HOF would re-split the string
+    per element, and interpreted lambdas get no codegen). The spread
+    fans the single-split local scan across cores (no-op at production
+    split counts)."""
+    docs = table(spark, sf_dir, "documents")
+    return (
+        spread_scan(docs.select("doc_id", "text"), "doc_id")
+        .select(*keep, F.split(F.col("text"), " ").alias("__toks"))
+        .select(*keep, F.explode(TX.bigram_structs(F.col("__toks"))).alias("b"))
+        .select(*keep, "b.w1", "b.w2")
+    )
+
+
+def _bigram_lm(bg: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The count-based bigram LM over the positions ``bg``: ``(w1, w2,
+    c12)`` checkpointed eagerly (one corpus pass feeds the LM and the
+    caller's join back to the positions) and the first-slot margin
+    ``(w1, c1)``."""
+    bc = (
+        bg.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c12"))
+        .localCheckpoint(eager=True)
+    )
+    return bc, bc.groupBy("w1").agg(F.sum("c12").alias("c1"))
+
+
 @register(
     "q_text_bigram_lm",
     oracle="""
@@ -1330,18 +1360,7 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (and the data half of pointwise-mutual-information). Rational
     # arithmetic only; two partial-agg groupBys + one join on w1 (the
     # unigram side is vocabulary-sized → broadcast at scale).
-    docs = table(spark, sf_dir, "documents")
-    # Tokenize once into a materialized array; TX.bigram_structs zips
-    # two slices of it (the inline-split HOF it replaces re-split the
-    # string per element — interpreted lambdas get no codegen). The
-    # spread fans the single-split local scan across cores (no-op at
-    # production split counts).
-    bigrams = (
-        spread_scan(docs.select("doc_id", "text"), "doc_id")
-        .select(F.split(F.col("text"), " ").alias("__toks"))
-        .select(F.explode(TX.bigram_structs(F.col("__toks"))).alias("b"))
-        .select("b.w1", "b.w2")
-    )
+    bigrams = _bigrams(spark, sf_dir)
     bc = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     uc = bc.groupBy("w1").agg(F.sum("c12").alias("c1"))
     return (
@@ -1893,18 +1912,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back broadcast; N is a single-row broadcast. The corpus is
     # touched ONCE at 100 TB. ln() may differ by 1 ulp across engines
     # (parity rule 5) → round 6.
-    docs = table(spark, sf_dir, "documents")
-    # Tokenize once into a materialized array; TX.bigram_structs zips
-    # two slices of it (the inline-split HOF it replaces re-split the
-    # string per element — interpreted lambdas get no codegen). The
-    # spread fans the single-split local scan across cores (no-op at
-    # production split counts).
-    bigrams = (
-        spread_scan(docs.select("doc_id", "text"), "doc_id")
-        .select(F.split(F.col("text"), " ").alias("__toks"))
-        .select(F.explode(TX.bigram_structs(F.col("__toks"))).alias("b"))
-        .select("b.w1", "b.w2")
-    )
+    bigrams = _bigrams(spark, sf_dir)
     # Materialize the (tiny, vocab²-bounded) bigram-count table once:
     # Catalyst does not share a common subtree across the four readers,
     # so without the cut the corpus would be scanned + exploded +
@@ -2008,20 +2016,8 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bigram table joined back on (w1, w2) — at 100 TB that's one
     # shuffle of bigram positions, and AQE broadcasts the LM side when
     # the vocabulary is small. ln-sum is merge-order float → round 6.
-    docs = table(spark, sf_dir, "documents")
-    # materialized-array bigrams + scan spread: see q_text_bigram_lm
-    bg = (
-        spread_scan(docs.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
-        .select("doc_id", F.explode(TX.bigram_structs(F.col("__toks"))).alias("b"))
-        .select("doc_id", "b.w1", "b.w2")
-    )
-    bc = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)  # one corpus pass feeds LM + join
-    )
-    uc = bc.groupBy("w1").agg(F.sum("c12").alias("c1"))
+    bg = _bigrams(spark, sf_dir, "doc_id")
+    bc, uc = _bigram_lm(bg)
     return (
         bg.join(bc, ["w1", "w2"])
         .join(F.broadcast(uc), "w1")
@@ -2554,6 +2550,20 @@ def q_similarity_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.mips_topk(emb, emb.filter(F.col("vec_id") < 8), k=3)
 
 
+def _token_buckets(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """Hashed term frequencies ``(doc_id, bucket, tf)``: each space token
+    goes to bucket ``pmod(md5_int60(md5(token)), n)``."""
+    tok = table(spark, sf_dir, "documents").select(
+        "doc_id", F.explode(F.split("text", " ")).alias("token")
+    )
+    bucket = F.pmod(md5_int60(F.md5("token")), F.lit(n)).cast("bigint")
+    return (
+        tok.select("doc_id", bucket.alias("bucket"))
+        .groupBy("doc_id", "bucket")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
 @register(
     "q_text_hashing_trick",
     oracle=f"""
@@ -2574,20 +2584,7 @@ def q_text_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast; hashing needs nothing). One partial-agg groupBy on
     # (doc, bucket); emitted sparse (bucket, tf) pairs pivot to dense
     # downstream only if a consumer needs it.
-    docs = table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    )
-    return (
-        tok.select(
-            "doc_id",
-            F.pmod(
-                F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("bigint"), F.lit(64)
-            ).cast("bigint").alias("bucket"),
-        )
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    return _token_buckets(spark, sf_dir, 64)
 
 
 @register(
@@ -3060,32 +3057,14 @@ def q_corpus_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 60-bit lane (q_text_hashing_trick); the ln-ratio per bucket is a
     # fixed expression tree; the per-doc tf-weighted sum is merge-order
     # float → round 6 (the q_text_perplexity convention).
-    docs = table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    )
-    tb = (
-        tok.select(
-            "doc_id",
-            F.pmod(
-                F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast(
-                    "bigint"
-                ),
-                F.lit(256),
-            )
-            .cast("bigint")
-            .alias("bucket"),
-        )
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tb = _token_buckets(spark, sf_dir, 256)
     # one profile pass: per-bucket raw AND target counts from the same
     # frame (the target marker joins on doc_id BEFORE the bucket
     # aggregate), so the scalar totals are ONE 1-row aggregate over the
     # 256-row profile — a mechanically-benign BNLJ build side for the
     # broadcast below (the two-agg crossJoin form trips the registry's
     # first-significant-node audit).
-    is_tgt = docs.where(F.col("lang") == "en").select(
+    is_tgt = table(spark, sf_dir, "documents").where(F.col("lang") == "en").select(
         "doc_id", F.lit(1).alias("is_t")
     )
     prof = (
@@ -3686,20 +3665,8 @@ def q_text_lm_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan; ln-sum is merge-order float → round-6 (parity rule 5).
     # 100 TB: still one bigram-position shuffle; both LM sides are
     # vocabulary-sized and broadcast under AQE.
-    docs = table(spark, sf_dir, "documents")
-    # materialized-array bigrams + scan spread: see q_text_bigram_lm
-    bg = (
-        spread_scan(docs.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
-        .select("doc_id", F.explode(TX.bigram_structs(F.col("__toks"))).alias("b"))
-        .select("doc_id", "b.w1", "b.w2")
-    )
-    bc = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)  # one corpus pass feeds LM + join
-    )
-    uc = bc.groupBy("w1").agg(F.sum("c12").alias("c1"))
+    bg = _bigrams(spark, sf_dir, "doc_id")
+    bc, uc = _bigram_lm(bg)
     vc = bc.groupBy("w2").agg(F.sum("c12").alias("c2"))
     tt = bc.agg(F.sum("c12").alias("tb"))
     p = F.lit(0.7) * (F.col("c12").cast("double") / F.col("c1")) + F.lit(0.3) * (

@@ -1337,7 +1337,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from trembita_spark.contract import HEX60_SQL as _H60  # noqa: E402
+from trembita_spark.checksum import HEX60_SQL as _H60, md5_int60  # noqa: E402
 
 
 @register(
@@ -1366,9 +1366,9 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the top-k set matches exactly. Plan: map-side key computation +
     # TakeOrderedAndProject — no full sort, no shuffle of the table.
     od = table(spark, sf_dir, "orders")
-    u = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10).cast(
-        "double"
-    ) / F.lit(1152921504606846976.0)
+    u = md5_int60(F.md5(F.col("o_orderkey").cast("string"))).cast("double") / F.lit(
+        1152921504606846976.0
+    )
     return (
         od.select(
             "o_orderkey",
@@ -2697,9 +2697,7 @@ def q_quality_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").cast("string"),
         F.col("o_orderdate").cast("string"),
     )
-    h = od.select(
-        F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("bigint").alias("h")
-    )
+    h = od.select(md5_int60(F.md5(canon)).alias("h"))
     return h.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         (F.sum(F.col("h").cast("decimal(38,0)")) % F.lit(1152921504606846976))
@@ -2952,6 +2950,32 @@ def q_graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return harmonic_centrality(edges, seeds, max_hops=4)
 
 
+def _click_lookback(spark: SparkSession, sf_dir: str, *extra) -> DataFrame:
+    """Every (purchase, same-user click in the 30 minutes up to it) pair:
+    ``(purchase_id, user_id, purchase_ts, *extra, c_user, click_id,
+    click_ts)``, ``extra`` being more purchase-side columns. Time bounds
+    compare integer epoch-µs (the q_stream_join convention)."""
+    ev = table(spark, sf_dir, "events")
+    us = lambda c: F.unix_micros(F.col(c))  # noqa: E731
+    p = ev.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        *extra,
+    )
+    c = ev.where(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    return p.join(
+        c,
+        (F.col("user_id") == F.col("c_user"))
+        & (us("click_ts") >= us("purchase_ts") - 1_800_000_000)
+        & (us("click_ts") <= us("purchase_ts")),
+    )
+
+
 @register(
     "q_events_attribution_lastclick",
     oracle="""
@@ -2980,24 +3004,7 @@ def q_events_attribution_lastclick(spark: SparkSession, sf_dir: str) -> DataFram
     # window (same result, partial-aggregable). Time bounds compare
     # integer epoch-µs (the q_stream_join convention). 100 TB: one
     # user-keyed range join + one hash aggregate on the purchase id.
-    ev = table(spark, sf_dir, "events")
-    us = lambda c: F.unix_micros(F.col(c))  # noqa: E731
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (us("click_ts") >= us("purchase_ts") - 1_800_000_000)
-        & (us("click_ts") <= us("purchase_ts")),
-    )
+    j = _click_lookback(spark, sf_dir)
     best = j.groupBy("purchase_id", "user_id", "purchase_ts").agg(
         F.max(F.struct("click_ts", "click_id")).alias("w")
     )
@@ -3042,26 +3049,10 @@ def q_events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning, never a low-card global). 100 TB: the same
     # user-keyed range join as last-click, one window on the join key,
     # one hash aggregate on the click id.
-    ev = table(spark, sf_dir, "events")
     from pyspark.sql.window import Window
 
-    us = lambda c: F.unix_micros(F.col(c))  # noqa: E731
-    p = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").cast("decimal(18,2)").alias("pval"),
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (us("click_ts") >= us("purchase_ts") - 1_800_000_000)
-        & (us("click_ts") <= us("purchase_ts")),
+    j = _click_lookback(
+        spark, sf_dir, F.col("value").cast("decimal(18,2)").alias("pval")
     )
     w = Window.partitionBy("purchase_id")
     j = j.withColumn("n_clicks", F.count(F.lit(1)).over(w).cast("bigint"))

@@ -8,7 +8,7 @@ ranks/lags are deterministic under the order-insensitive hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
@@ -284,6 +284,17 @@ def q_window_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sorted_last5(col) -> Column:
+    """``col`` over each user's trailing 5-row frame ordered by (ts,
+    event_id), collected and sorted ascending."""
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-4, Window.currentRow)
+    )
+    return F.array_sort(F.collect_list(col).over(w))
+
+
 @register(
     "q_window_median",
     oracle="""
@@ -306,18 +317,11 @@ def q_window_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per row, fine for small frames; for wide frames switch to the
     # KLL-sketch window in the sketches module.
     ev = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-4, Window.currentRow)
-    )
-    arr = F.array_sort(F.collect_list("value").over(w))
+    arr = _sorted_last5(F.col("value"))
     n = F.size(arr)
     mid_hi = F.element_at(arr, (n / 2 + 1).cast("int"))
     mid_lo = F.element_at(arr, ((n + 1) / 2).cast("int"))
-    med = F.when(n % 2 == 1, F.element_at(arr, ((n + 1) / 2).cast("int"))).otherwise(
-        (mid_lo + mid_hi) / 2
-    )
+    med = F.when(n % 2 == 1, mid_lo).otherwise((mid_lo + mid_hi) / 2)
     return ev.select("event_id", "user_id", med.alias("med5"))
 
 
@@ -556,6 +560,26 @@ def q_window_zscore_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rolling_moments5(spark: SparkSession, sf_dir: str, *extra):
+    """The exact-decimal moment sums of each user's trailing 5 values,
+    ``(user_id, event_id, rn, sv, svv, svvv, *extra)`` (Σv, Σv², Σv³ cast
+    to double), with the frame's mean ``mu`` and population variance
+    ``varp`` as Columns over them."""
+    x = _user_sequence(spark, sf_dir, *_value_powers(3))
+    w = _trailing(5)
+    s = x.select(
+        "user_id",
+        "event_id",
+        "rn",
+        F.sum("vd").over(w).cast("double").alias("sv"),
+        F.sum("vd2").over(w).cast("double").alias("svv"),
+        F.sum("vd3").over(w).cast("double").alias("svvv"),
+        *extra,
+    )
+    mu = F.col("sv") / 5
+    return s, mu, F.col("svv") / 5 - mu * mu
+
+
 @register(
     "q_window_rolling_skew",
     oracle="""
@@ -602,18 +626,7 @@ def q_window_rolling_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     # libm pow) → bit-identical cross-engine, NO rounding (parity rule
     # 2). Emitted for full frames only (n = 5 constant). The window
     # partitions on user_id (data-cardinality) — audit-safe.
-    x = _user_sequence(spark, sf_dir, *_value_powers(3))
-    w = _trailing(5)
-    s = x.select(
-        "user_id",
-        "event_id",
-        "rn",
-        F.sum("vd").over(w).cast("double").alias("sv"),
-        F.sum("vd2").over(w).cast("double").alias("svv"),
-        F.sum("vd3").over(w).cast("double").alias("svvv"),
-    )
-    mu = F.col("sv") / 5
-    varp = F.col("svv") / 5 - mu * mu
+    s, mu, varp = _rolling_moments5(spark, sf_dir)
     num = F.col("svvv") / 5 - 3 * mu * (F.col("svv") / 5) + 2 * mu * mu * mu
     return s.where(F.col("rn") >= 5).select(
         "user_id",
@@ -686,19 +699,13 @@ def q_window_rolling_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion and var^2 denominator are multiply-only IEEE — bit
     # exact, NO rounding (parity rule 2). Partitions on user_id
     # (data-cardinality) — audit-safe.
-    x = _user_sequence(spark, sf_dir, *_value_powers(3))
-    w = _trailing(5)
-    s = x.select(
-        "user_id",
-        "event_id",
-        "rn",
-        F.sum("vd").over(w).cast("double").alias("sv"),
-        F.sum("vd2").over(w).cast("double").alias("svv"),
-        F.sum("vd3").over(w).cast("double").alias("svvv"),
+    s, mu, varp = _rolling_moments5(
+        spark,
+        sf_dir,
         F.sum(
             F.col("vd2").cast("decimal(10,4)") * F.col("vd2").cast("decimal(10,4)")
         )
-        .over(w)
+        .over(_trailing(5))
         .alias("sv4d"),
     )
     sc = s.withColumn(
@@ -706,8 +713,6 @@ def q_window_rolling_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("sv4d")).cast("double")
         + (F.col("sv4d") - F.floor(F.col("sv4d"))).cast("double"),
     )
-    mu = F.col("sv") / 5
-    varp = F.col("svv") / 5 - mu * mu
     m4 = (
         F.col("sv4") / 5
         - 4 * mu * (F.col("svvv") / 5)
@@ -729,13 +734,8 @@ def _rolling_mad2(spark: SparkSession, sf_dir: str) -> DataFrame:
     v100 (= 2·100·median) and ``mad2`` the two-middle sum of the
     deviations |2·v100 − med2| (= 4·100·MAD) — integers throughout."""
     ev = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-4, Window.currentRow)
-    )
     v100 = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-    arr = F.array_sort(F.collect_list(v100).over(w))
+    arr = _sorted_last5(v100)
     n = F.size(arr)
     lo = F.floor((n + 1) / 2).cast("int")
     hi = (F.floor(n / 2) + 1).cast("int")

@@ -63,8 +63,23 @@ def _normalize_ts(dtype) -> F.Column:
 # handle per session+path serves every invocation. Measured: dropped
 # per-query view-registration setup from ~1.7s to ~0 across the SQL
 # front door. Keyed by applicationId (unique per session — id() could
-# be recycled by the allocator after a session is GC'd).
+# be recycled by the allocator after a session is GC'd). The name
+# "events.parquet" holds the events file as written (_events_file).
 _TABLE_CACHE: dict = {}
+
+
+def _events_file(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events.parquet`` as written, read once per session and path:
+    ``ts`` keeps its physical type (nanos read as LongType), the type
+    :func:`load_table` and ``streaming.sources.events_stream`` dispatch
+    on. ``nanosAsLong`` is set on every call, because a stream over the
+    file needs it when the stream runs."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = (spark.sparkContext.applicationId, sf_dir, "events.parquet")
+    df = _TABLE_CACHE.get(key)
+    if df is None:
+        df = _TABLE_CACHE[key] = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -91,8 +106,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _events_file(spark, sf_dir)
         df = df.withColumn("ts", _normalize_ts(df.schema["ts"].dataType))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trembita_spark.checksum import md5_int60
 from trembita_spark.io import run_tmp
 
 
@@ -290,12 +291,6 @@ def dedup_clusters(
     )
 
 
-# 60-bit integer from the first 15 hex chars of md5 — cross-engine
-# (DuckDB mirrors it with a char fold; see contract/llm.py).
-def _md5_int60(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
 def simhash(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
 ) -> DataFrame:
@@ -305,7 +300,7 @@ def simhash(
     ex = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.col(text_col), " ")).alias("token"),
-    ).withColumn("h", _md5_int60(F.col("token")))
+    ).withColumn("h", md5_int60(F.md5(F.col("token"))))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1, 1).otherwise(-1)
@@ -522,7 +517,7 @@ def duplicated_span_report(
             "doc_id",
         )
         .select("doc_id", F.explode(shingles_expr("__t", k)).alias("gram"))
-        .select("doc_id", _md5_int60(F.md5(F.col("gram"))).alias("h"))
+        .select("doc_id", md5_int60(F.md5(F.col("gram"))).alias("h"))
         .localCheckpoint(eager=False)
     )
     # distinct-doc count per span hash (within-doc repeats do not count)

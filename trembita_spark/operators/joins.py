@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trembita_spark.checksum import md5_int60
+
 
 def asof_join(
     left: DataFrame,
@@ -136,6 +138,13 @@ def range_join(
     return left.join(r, (value >= lo) & (value < hi), "inner")
 
 
+def _bloom_pos(key_col: str, h: int, n_bits: int) -> Column:
+    """Bit position of hash ``h`` for ``key_col``: the salted md5 fold
+    ``md5('bf<h>|' || key)`` mod ``n_bits``, shared by build and probe."""
+    salted = F.concat(F.lit(f"bf{h}|"), F.col(key_col).cast("string"))
+    return md5_int60(F.md5(salted)) % n_bits
+
+
 def bloom_build(
     small: DataFrame,
     key_col: str,
@@ -152,23 +161,7 @@ def bloom_build(
     The filter's size is fixed by ``n_bits`` regardless of data volume;
     persist it next to the table and every later join against this key
     set starts with a map-side prefilter."""
-    pos_structs = F.array(
-        *[
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"bf{h}|"), F.col(key_col).cast("string"))),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % n_bits
-            )
-            for h in range(n_hashes)
-        ]
-    )
+    pos_structs = F.array(*[_bloom_pos(key_col, h, n_bits) for h in range(n_hashes)])
     pos = small.select(F.explode(pos_structs).alias("pos"))
     return (
         pos.select(
@@ -200,19 +193,7 @@ def bloom_probe(
     out = big
     checks = []
     for h in range(n_hashes):
-        pos = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"bf{h}|"), F.col(key_col).cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % n_bits
-        )
-        out = out.withColumn(f"_pos{h}", pos)
+        out = out.withColumn(f"_pos{h}", _bloom_pos(key_col, h, n_bits))
         bf_h = bloom.select(
             F.col("widx").alias(f"_widx{h}"), F.col("word").alias(f"_word{h}")
         )

@@ -28,15 +28,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trembita_spark.checksum import md5_int60
+
 
 def _hash_bucket(id_col: Column, buckets: int = 100) -> Column:
-    """Deterministic bucket in [0, buckets) from the 60-bit fold of the
-    row id's md5 (same construction as the dedup/fingerprint operators —
-    cross-engine reproducible, no RNG)."""
-    h60 = F.conv(F.substring(F.md5(id_col.cast("string")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-    return h60 % buckets
+    """Deterministic bucket in [0, buckets) from the 60-bit md5 fold of
+    the row id (``checksum.md5_int60``: cross-engine reproducible, no
+    RNG)."""
+    return md5_int60(F.md5(id_col.cast("string"))) % buckets
 
 
 def stratified_sample(
@@ -132,9 +131,7 @@ def shard_assign(
     training run's data order is reproducible from the data alone.
     """
     h = F.md5(F.col(id_col).cast("string"))
-    shard = (
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint") % n_shards
-    ).cast("int")
+    shard = (md5_int60(h) % n_shards).cast("int")
     w = Window.partitionBy("shard").orderBy(h, F.col(id_col))
     return (
         df.withColumn("shard", shard)

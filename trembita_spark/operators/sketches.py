@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trembita_spark.checksum import md5_int60
+
 
 def hll_sketch_by(
     df: DataFrame,
@@ -63,12 +65,22 @@ def hll_union_estimate(
 
 
 def cms_cell(key, d: int, width: int):
-    """Depth-``d`` cell index for ``key``: 60-bit md5 fold mod width
-    (same cross-engine construction as dedup/sampling)."""
+    """Depth-``d`` cell index for ``key``: the 60-bit md5 fold
+    (``checksum.md5_int60``) of ``'<key>#<d>'`` mod width."""
     h = F.md5(F.concat(key.cast("string"), F.lit(f"#{d}")))
-    return (
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint") % width
-    ).cast("int")
+    return (md5_int60(h) % width).cast("int")
+
+
+def _cells(key, depth: int, width: int):
+    """One row per depth for ``key``: struct ``s`` of (d, cell)."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(d).alias("d"), cms_cell(key, d, width).alias("cell"))
+                for d in range(depth)
+            ]
+        )
+    ).alias("s")
 
 
 def cms_table(
@@ -88,20 +100,7 @@ def cms_table(
     keyed = df.groupBy(F.col(key_col).cast("string").alias("k")).agg(
         F.count(F.lit(1)).alias("c")
     )
-    fanned = keyed.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        cms_cell(F.col("k"), d, width).alias("cell"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("s"),
-        "c",
-    )
+    fanned = keyed.select(_cells(F.col("k"), depth, width), "c")
     return fanned.groupBy(
         F.col("s.d").alias("d"), F.col("s.cell").alias("cell")
     ).agg(F.sum("c").alias("cnt"))
@@ -119,20 +118,7 @@ def cms_point_query(
     The sketch is depth*width rows — broadcast, so probing any number
     of keys is a map-side join regardless of corpus size.
     """
-    pc = probes.select(
-        key_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        cms_cell(F.col(key_col), d, width).alias("cell"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("s"),
-    )
+    pc = probes.select(key_col, _cells(F.col(key_col), depth, width))
     return (
         pc.join(
             F.broadcast(cms),

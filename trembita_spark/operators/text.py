@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from trembita_spark.checksum import md5_int60
+
 TOKEN_SPLIT = " "
 # Greedy BPE-ish chunker: ≤4-char letter runs, ≤3-digit runs, other glyphs.
 BPE_ISH_PATTERN = "[a-z]{1,4}|[0-9]{1,3}|[^a-z0-9 ]"
@@ -172,7 +174,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.select(
         F.col(id_col).alias("doc_id"),
         fp.alias("fingerprint"),
-        F.conv(F.substring(fp, 1, 15), 16, 10).cast("bigint").alias("fp_bucket"),
+        md5_int60(fp).alias("fp_bucket"),
     )
 
 

@@ -32,37 +32,23 @@ from trembita_spark.streaming.pbcompat import ship_worker_env
 # returns, so the lock is held for milliseconds, not for the run.
 session_conf_lock = threading.Lock()
 
-# (appId, sf_dir) → physical schema Spark infers for events.parquet.
-# Streams require an explicit schema; probing the batch reader once per
-# session+path keeps the stream source in lockstep with whatever physical
-# ts type the fixture was written with (long-nanos vs timestamp[us] —
-# both have shipped; see io._normalize_ts).
-_RAW_SCHEMA_CACHE: dict = {}
-
-
-def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    schema = _RAW_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _RAW_SCHEMA_CACHE[key] = schema
-    return schema
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as an unbounded stream (file source). Normalizes
     ts to µs TimestampType exactly like the batch reader (same dtype
     dispatch) so stream and batch plans are interchangeable."""
-    from trembita_spark.io import _normalize_ts
+    from trembita_spark.io import _events_file, _normalize_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Pin UTC and ship the worker environment like contract.table(): the
     # driver may hand us a session built without our factory, and neither
     # timestamp semantics nor the Python workers may depend on the host
     # timezone or the launch directory.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ship_worker_env(spark)
-    schema = _events_raw_schema(spark, sf_dir)
+    # Streams require an explicit schema: the batch read's physical
+    # schema keeps the stream in lockstep with whatever ts type the
+    # fixture was written with (long-nanos vs timestamp[us] — both have
+    # shipped; see io._normalize_ts). Reading it sets nanosAsLong.
+    schema = _events_file(spark, sf_dir).schema
     # The events fixture ships in two physical shapes: the driver's
     # SINGLE FILE sf_dir/events.parquet, and (for the scale replicas) a
     # Spark-written DIRECTORY of part files under the same name. A glob
